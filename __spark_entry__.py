@@ -24,7 +24,7 @@ from __future__ import annotations
 import os
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 import joie_spark.pipeline.ann as ann
@@ -77,6 +77,86 @@ def _read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 def _tokens_exploded(docs: DataFrame) -> DataFrame:
     return docs.select("doc_id", F.explode(text.sql_tokens()).alias("term"))
+
+
+def _tokenized(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """`(doc_id, tokens)` cached: the BM25 leaves hang several branches
+    (dl, tf, stats) off one tokenization, which would otherwise re-run
+    the regex tokenizer per branch.  The caller releases it through the
+    result's `_joie_persisted` (_with_release)."""
+    return (
+        _docs(spark, sf_dir)
+        .select("doc_id", text.sql_tokens().alias("tokens"))
+        .cache()
+    )
+
+
+def _with_release(out: DataFrame, cached: DataFrame) -> DataFrame:
+    """Expose `cached` as the release handle harnesses unpersist once
+    `out` has been collected."""
+    out._joie_persisted = cached
+    return out
+
+
+def _bm25_contrib(n, avgdl, weight: Column | None = None) -> Column:
+    """Per-(doc, term) BM25 contribution (k1=1.2, b=0.75) over columns
+    tf, df, dl — the engine's scoring expression, operand for operand the
+    same as every oracle_sql() twin so Spark and DuckDB agree to the last
+    bit.  `weight` (a per-term boost) multiplies the idf first."""
+    idf = F.log(F.lit(1.0) + (F.lit(float(n)) - F.col("df") + 0.5) / (F.col("df") + 0.5))
+    if weight is not None:
+        idf = weight * idf
+    return (
+        idf
+        * (F.col("tf") * F.lit(2.2))
+        / (F.col("tf") + F.lit(1.2) * (F.lit(0.25) + F.lit(0.75) * F.col("dl") / F.lit(avgdl)))
+    )
+
+
+def _bm25_terms(spark, sf_dir, term_pred: Column, weight: Column | None = None):
+    """The shared front half of the BM25 leaves: over the cached
+    tokenization, n and avgdl across all docs, tf per (doc_id, term) for
+    the terms passing `term_pred`, df counted from that tf, and dl joined
+    in.  Returns (joined frame, contribution Column, cached frame).
+
+    Shared by fuzzy_bm25, prefix_bm25, regex_bm25, min_match_bm25,
+    bm25_topk, boosted_bm25, collapse_topk, search_after_page2,
+    bm25_batch, rank_eval and hybrid_rrf.  Two BM25 leaves use only
+    _bm25_contrib, because their frozen oracles define the statistics
+    differently: mlt_topk scores every doc but 0 while its df still
+    counts doc 0 (df over the whole corpus, not over the scored tf), and
+    bm25_docs_topk scores groups (doc_id % 50), whose n, dl and avgdl
+    count only groups that have tokens."""
+    docs = _tokenized(spark, sf_dir)
+    dl = docs.select("doc_id", F.size("tokens").cast("long").alias("dl"))
+    st = dl.agg(F.count("*").alias("n"), F.avg("dl").alias("avgdl")).collect()[0]
+    tf = (
+        docs.select("doc_id", F.explode("tokens").alias("term"))
+        .where(term_pred)
+        .groupBy("doc_id", "term")
+        .agg(F.count("*").cast("double").alias("tf"))
+    )
+    dfc = tf.groupBy("term").agg(F.count("*").cast("double").alias("df"))
+    j = tf.join(dfc, "term").join(dl, "doc_id")
+    return j, _bm25_contrib(st["n"], st["avgdl"], weight), docs
+
+
+def _top10_by_sum(j: DataFrame, contrib: Column, key: str = "doc_id") -> DataFrame:
+    """Top 10 of `key` ranked on the UNROUNDED score sum, reported
+    rounded — the order these leaves' frozen oracles state."""
+    return (
+        j.groupBy(key)
+        .agg(F.sum(contrib).alias("s"))
+        .select(key, F.round("s", 4).alias("score"))
+        .orderBy(F.desc("s"), F.asc(key))
+        .limit(10)
+    )
+
+
+def _rounded_scores(j: DataFrame, contrib: Column) -> DataFrame:
+    """(doc_id, score) with the sum rounded BEFORE ranking, so Spark and
+    DuckDB break score ties identically."""
+    return j.groupBy("doc_id").agg(F.round(F.sum(contrib), 4).alias("score"))
 
 
 # ---------------------------------------------------------------------------
@@ -257,7 +337,7 @@ def q_mlt_topk(spark, sf_dir):
     over the REST of the corpus with full BM25.  The term selection is a
     bounded driver collect (5 rows) — same contract as the engine's
     dictionary probe."""
-    docs = _docs(spark, sf_dir).withColumn("tokens", text.sql_tokens()).cache()
+    docs = _tokenized(spark, sf_dir)
     tok = docs.select("doc_id", F.explode("tokens").alias("term"))
     dl = docs.select("doc_id", F.size("tokens").cast("long").alias("dl"))
     st = dl.agg(F.count("*").alias("n"), F.avg("dl").alias("avgdl")).collect()[0]
@@ -288,18 +368,7 @@ def q_mlt_topk(spark, sf_dir):
         .agg(F.count("*").cast("double").alias("tf"))
     )
     j = tf.join(dfc, "term").join(dl, "doc_id")
-    contrib = (
-        F.log(F.lit(1.0) + (F.lit(float(n)) - F.col("df") + 0.5) / (F.col("df") + 0.5))
-        * (F.col("tf") * F.lit(2.2))
-        / (F.col("tf") + F.lit(1.2) * (F.lit(0.25) + F.lit(0.75) * F.col("dl") / F.lit(avgdl)))
-    )
-    return (
-        j.groupBy("doc_id")
-        .agg(F.sum(contrib).alias("s"))
-        .select("doc_id", F.round("s", 4).alias("score"))
-        .orderBy(F.desc("s"), F.asc("doc_id"))
-        .limit(10)
-    )
+    return _with_release(_top10_by_sum(j, _bm25_contrib(n, avgdl)), docs)
 
 
 def q_percolate(spark, sf_dir):
@@ -329,30 +398,10 @@ def q_fuzzy_bm25(spark, sf_dir):
     PKeywords; the length-band + levenshtein dictionary scan).  The
     driver-plan mirror expands on the exploded term column with Spark's
     JVM levenshtein; the DuckDB oracle uses its levenshtein()."""
-    docs = _docs(spark, sf_dir).withColumn("tokens", text.sql_tokens()).cache()
-    tok = docs.select("doc_id", F.explode("tokens").alias("term"))
-    dl = docs.select("doc_id", F.size("tokens").cast("long").alias("dl"))
-    st = dl.agg(F.count("*").alias("n"), F.avg("dl").alias("avgdl")).collect()[0]
-    n, avgdl = st["n"], st["avgdl"]
-    tf = (
-        tok.where(F.levenshtein(F.col("term"), F.lit("fast")) <= 1)
-        .groupBy("doc_id", "term")
-        .agg(F.count("*").cast("double").alias("tf"))
+    j, contrib, docs = _bm25_terms(
+        spark, sf_dir, F.levenshtein(F.col("term"), F.lit("fast")) <= 1
     )
-    dfc = tf.groupBy("term").agg(F.count("*").cast("double").alias("df"))
-    j = tf.join(dfc, "term").join(dl, "doc_id")
-    contrib = (
-        F.log(F.lit(1.0) + (F.lit(float(n)) - F.col("df") + 0.5) / (F.col("df") + 0.5))
-        * (F.col("tf") * F.lit(2.2))
-        / (F.col("tf") + F.lit(1.2) * (F.lit(0.25) + F.lit(0.75) * F.col("dl") / F.lit(avgdl)))
-    )
-    return (
-        j.groupBy("doc_id")
-        .agg(F.sum(contrib).alias("s"))
-        .select("doc_id", F.round("s", 4).alias("score"))
-        .orderBy(F.desc("s"), F.asc("doc_id"))
-        .limit(10)
-    )
+    return _with_release(_top10_by_sum(j, contrib), docs)
 
 
 def q_and_not(spark, sf_dir):
@@ -373,30 +422,8 @@ def q_prefix_bm25(spark, sf_dir):
     MultiTermQuery rewrite).  The expansion here is the predicate
     `startswith('s')` on the exploded term column — the driver-plan
     mirror of the dictionary StringStartsWith pushdown."""
-    docs = _docs(spark, sf_dir).withColumn("tokens", text.sql_tokens()).cache()
-    tok = docs.select("doc_id", F.explode("tokens").alias("term"))
-    dl = docs.select("doc_id", F.size("tokens").cast("long").alias("dl"))
-    st = dl.agg(F.count("*").alias("n"), F.avg("dl").alias("avgdl")).collect()[0]
-    n, avgdl = st["n"], st["avgdl"]
-    tf = (
-        tok.where(F.col("term").startswith("s"))
-        .groupBy("doc_id", "term")
-        .agg(F.count("*").cast("double").alias("tf"))
-    )
-    dfc = tf.groupBy("term").agg(F.count("*").cast("double").alias("df"))
-    j = tf.join(dfc, "term").join(dl, "doc_id")
-    contrib = (
-        F.log(F.lit(1.0) + (F.lit(float(n)) - F.col("df") + 0.5) / (F.col("df") + 0.5))
-        * (F.col("tf") * F.lit(2.2))
-        / (F.col("tf") + F.lit(1.2) * (F.lit(0.25) + F.lit(0.75) * F.col("dl") / F.lit(avgdl)))
-    )
-    return (
-        j.groupBy("doc_id")
-        .agg(F.sum(contrib).alias("s"))
-        .select("doc_id", F.round("s", 4).alias("score"))
-        .orderBy(F.desc("s"), F.asc("doc_id"))
-        .limit(10)
-    )
+    j, contrib, docs = _bm25_terms(spark, sf_dir, F.col("term").startswith("s"))
+    return _with_release(_top10_by_sum(j, contrib), docs)
 
 
 def q_min_match_bm25(spark, sf_dir):
@@ -406,39 +433,19 @@ def q_min_match_bm25(spark, sf_dir):
     engine twin evaluates the floor as a postings count-distinct (single
     path) or a bitmask popcount (batch path) — both pinned rank-identical
     to the Python oracle (tests/test_minmatch.py)."""
-    docs = _docs(spark, sf_dir).withColumn("tokens", text.sql_tokens()).cache()
-    tok = docs.select("doc_id", F.explode("tokens").alias("term"))
-    dl = docs.select("doc_id", F.size("tokens").cast("long").alias("dl"))
-    st = dl.agg(F.count("*").alias("n"), F.avg("dl").alias("avgdl")).collect()[0]
-    n, avgdl = st["n"], st["avgdl"]
-    tf = (
-        tok.where(F.col("term").isin(list(BM25_TERMS)))
-        .groupBy("doc_id", "term")
-        .agg(F.count("*").cast("double").alias("tf"))
-    )
+    j, contrib, docs = _bm25_terms(spark, sf_dir, F.col("term").isin(list(BM25_TERMS)))
     keep = (
-        tf.groupBy("doc_id")
+        j.groupBy("doc_id")
         .agg(F.count_distinct("term").alias("nt"))
         .where(F.col("nt") >= 2)
         .select("doc_id")
     )
-    dfc = tf.groupBy("term").agg(F.count("*").cast("double").alias("df"))
-    j = (
-        tf.join(keep, "doc_id", "left_semi")
-        .join(dfc, "term")
-        .join(dl, "doc_id")
-    )
-    contrib = (
-        F.log(F.lit(1.0) + (F.lit(float(n)) - F.col("df") + 0.5) / (F.col("df") + 0.5))
-        * (F.col("tf") * F.lit(2.2))
-        / (F.col("tf") + F.lit(1.2) * (F.lit(0.25) + F.lit(0.75) * F.col("dl") / F.lit(avgdl)))
-    )
-    return (
-        j.groupBy("doc_id")
-        .agg(F.round(F.sum(contrib), 4).alias("score"))
+    out = (
+        _rounded_scores(j.join(keep, "doc_id", "left_semi"), contrib)
         .orderBy(F.desc("score"), F.asc("doc_id"))
         .limit(10)
     )
+    return _with_release(out, docs)
 
 
 def q_regex_bm25(spark, sf_dir):
@@ -449,73 +456,16 @@ def q_regex_bm25(spark, sf_dir):
     column; the DuckDB oracle uses regexp_matches with the same anchored
     RE2-safe pattern.  Engine-side rank identity incl. the sound
     literal-prefix pushdown derivation: tests/test_regex.py."""
-    docs = _docs(spark, sf_dir).withColumn("tokens", text.sql_tokens()).cache()
-    tok = docs.select("doc_id", F.explode("tokens").alias("term"))
-    dl = docs.select("doc_id", F.size("tokens").cast("long").alias("dl"))
-    st = dl.agg(F.count("*").alias("n"), F.avg("dl").alias("avgdl")).collect()[0]
-    n, avgdl = st["n"], st["avgdl"]
-    tf = (
-        tok.where(F.col("term").rlike("^(?:s[ct].*)$"))
-        .groupBy("doc_id", "term")
-        .agg(F.count("*").cast("double").alias("tf"))
+    j, contrib, docs = _bm25_terms(
+        spark, sf_dir, F.col("term").rlike("^(?:s[ct].*)$")
     )
-    dfc = tf.groupBy("term").agg(F.count("*").cast("double").alias("df"))
-    j = tf.join(dfc, "term").join(dl, "doc_id")
-    contrib = (
-        F.log(F.lit(1.0) + (F.lit(float(n)) - F.col("df") + 0.5) / (F.col("df") + 0.5))
-        * (F.col("tf") * F.lit(2.2))
-        / (F.col("tf") + F.lit(1.2) * (F.lit(0.25) + F.lit(0.75) * F.col("dl") / F.lit(avgdl)))
-    )
-    return (
-        j.groupBy("doc_id")
-        .agg(F.sum(contrib).alias("s"))
-        .select("doc_id", F.round("s", 4).alias("score"))
-        .orderBy(F.desc("s"), F.asc("doc_id"))
-        .limit(10)
-    )
+    return _with_release(_top10_by_sum(j, contrib), docs)
 
 
 def q_bm25_topk(spark, sf_dir):
-    """Flagship: BM25 top-10 with the engine's scoring expression.
-
-    The tokenized docs are cached: three branches (tok/dl/tf) hang off the
-    same withColumn and would re-run the regex tokenizer per branch
-    otherwise (VERDICT r1)."""
-    # cache holds only the two columns every branch needs — the full-row
-    # cache also materialized text/lang/source/n_chars per row (guide
-    # §2.3: narrower cached/shuffled rows)
-    docs = (
-        _docs(spark, sf_dir)
-        .select("doc_id", text.sql_tokens().alias("tokens"))
-        .cache()
-    )
-    tok = docs.select("doc_id", F.explode("tokens").alias("term"))
-    dl = docs.select("doc_id", F.size("tokens").cast("long").alias("dl"))
-    st = dl.agg(F.count("*").alias("n"), F.avg("dl").alias("avgdl")).collect()[0]
-    n, avgdl = st["n"], st["avgdl"]
-    tf = (
-        tok.where(F.col("term").isin(list(BM25_TERMS)))
-        .groupBy("doc_id", "term")
-        .agg(F.count("*").cast("double").alias("tf"))
-    )
-    dfc = tf.groupBy("term").agg(F.count("*").cast("double").alias("df"))
-    j = tf.join(dfc, "term").join(dl, "doc_id")
-    contrib = (
-        F.log(F.lit(1.0) + (F.lit(float(n)) - F.col("df") + 0.5) / (F.col("df") + 0.5))
-        * (F.col("tf") * F.lit(2.2))
-        / (F.col("tf") + F.lit(1.2) * (F.lit(0.25) + F.lit(0.75) * F.col("dl") / F.lit(avgdl)))
-    )
-    out = (
-        j.groupBy("doc_id")
-        .agg(F.sum(contrib).alias("s"))
-        .select("doc_id", F.round("s", 4).alias("score"))
-        .orderBy(F.desc("s"), F.asc("doc_id"))
-        .limit(10)
-    )
-    # release handle: per-call caches otherwise accumulate across bench
-    # reps (the harness unpersists _joie_persisted after each rep)
-    out._joie_persisted = docs
-    return out
+    """Flagship: BM25 top-10 with the engine's scoring expression."""
+    j, contrib, docs = _bm25_terms(spark, sf_dir, F.col("term").isin(list(BM25_TERMS)))
+    return _with_release(_top10_by_sum(j, contrib), docs)
 
 
 def q_bm25_docs_topk(spark, sf_dir):
@@ -525,13 +475,11 @@ def q_bm25_docs_topk(spark, sf_dir):
     the group's total token count, df = distinct groups containing the
     term, N/avgdl over groups (avgdl from exact integer sums).  Top-10
     groups by score."""
-    docs = (
-        _docs(spark, sf_dir)
-        .withColumn("tokens", text.sql_tokens())
-        .withColumn("grp", (F.col("doc_id") % 50).cast("long"))
-        .cache()
+    docs = _tokenized(spark, sf_dir)
+    tok = docs.select(
+        (F.col("doc_id") % 50).cast("long").alias("grp"),
+        F.explode("tokens").alias("term"),
     )
-    tok = docs.select("grp", F.explode("tokens").alias("term"))
     gdl = tok.groupBy("grp").agg(F.count("*").cast("long").alias("dl"))
     st = gdl.agg(
         F.count("*").alias("n"), F.sum("dl").cast("long").alias("s")
@@ -544,18 +492,7 @@ def q_bm25_docs_topk(spark, sf_dir):
     )
     dfc = tf.groupBy("term").agg(F.count("*").cast("double").alias("df"))
     j = tf.join(dfc, "term").join(gdl, "grp")
-    contrib = (
-        F.log(F.lit(1.0) + (F.lit(float(n)) - F.col("df") + 0.5) / (F.col("df") + 0.5))
-        * (F.col("tf") * F.lit(2.2))
-        / (F.col("tf") + F.lit(1.2) * (F.lit(0.25) + F.lit(0.75) * F.col("dl") / F.lit(avgdl)))
-    )
-    return (
-        j.groupBy("grp")
-        .agg(F.sum(contrib).alias("s"))
-        .select("grp", F.round("s", 4).alias("score"))
-        .orderBy(F.desc("s"), F.asc("grp"))
-        .limit(10)
-    )
+    return _with_release(_top10_by_sum(j, _bm25_contrib(n, avgdl), key="grp"), docs)
 
 
 def q_boosted_bm25(spark, sf_dir):
@@ -566,35 +503,16 @@ def q_boosted_bm25(spark, sf_dir):
     (tests/test_collapse.py pins bit-identity to the boosted oracle);
     this mirror applies the same per-term factor, the DuckDB oracle via
     CASE."""
-    docs = _docs(spark, sf_dir).withColumn("tokens", text.sql_tokens()).cache()
-    tok = docs.select("doc_id", F.explode("tokens").alias("term"))
-    dl = docs.select("doc_id", F.size("tokens").cast("long").alias("dl"))
-    st = dl.agg(F.count("*").alias("n"), F.avg("dl").alias("avgdl")).collect()[0]
-    n, avgdl = st["n"], st["avgdl"]
-    tf = (
-        tok.where(F.col("term").isin(list(BM25_TERMS)))
-        .groupBy("doc_id", "term")
-        .agg(F.count("*").cast("double").alias("tf"))
-    )
-    dfc = tf.groupBy("term").agg(F.count("*").cast("double").alias("df"))
-    j = tf.join(dfc, "term").join(dl, "doc_id")
     w = (
         F.when(F.col("term") == "window", F.lit(3.0))
         .when(F.col("term") == "query", F.lit(0.25))
         .otherwise(F.lit(1.0))
     )
-    contrib = (
-        w
-        * F.log(F.lit(1.0) + (F.lit(float(n)) - F.col("df") + 0.5) / (F.col("df") + 0.5))
-        * (F.col("tf") * F.lit(2.2))
-        / (F.col("tf") + F.lit(1.2) * (F.lit(0.25) + F.lit(0.75) * F.col("dl") / F.lit(avgdl)))
+    j, contrib, docs = _bm25_terms(
+        spark, sf_dir, F.col("term").isin(list(BM25_TERMS)), weight=w
     )
-    return (
-        j.groupBy("doc_id")
-        .agg(F.round(F.sum(contrib), 4).alias("score"))
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(10)
-    )
+    out = _rounded_scores(j, contrib).orderBy(F.desc("score"), F.asc("doc_id")).limit(10)
+    return _with_release(out, docs)
 
 
 def q_collapse_topk(spark, sf_dir):
@@ -609,38 +527,11 @@ def q_collapse_topk(spark, sf_dir):
     Spark and DuckDB order bit-identically."""
     from pyspark.sql.window import Window
 
-    # cache holds only the two columns every branch needs — the full-row
-    # cache also materialized text/lang/source/n_chars per row (guide
-    # §2.3: narrower cached/shuffled rows)
-    docs = (
-        _docs(spark, sf_dir)
-        .select("doc_id", text.sql_tokens().alias("tokens"))
-        .cache()
-    )
-    tok = docs.select("doc_id", F.explode("tokens").alias("term"))
-    dl = docs.select("doc_id", F.size("tokens").cast("long").alias("dl"))
-    st = dl.agg(F.count("*").alias("n"), F.avg("dl").alias("avgdl")).collect()[0]
-    n, avgdl = st["n"], st["avgdl"]
-    tf = (
-        tok.where(F.col("term").isin(list(BM25_TERMS)))
-        .groupBy("doc_id", "term")
-        .agg(F.count("*").cast("double").alias("tf"))
-    )
-    dfc = tf.groupBy("term").agg(F.count("*").cast("double").alias("df"))
-    j = tf.join(dfc, "term").join(dl, "doc_id")
-    contrib = (
-        F.log(F.lit(1.0) + (F.lit(float(n)) - F.col("df") + 0.5) / (F.col("df") + 0.5))
-        * (F.col("tf") * F.lit(2.2))
-        / (F.col("tf") + F.lit(1.2) * (F.lit(0.25) + F.lit(0.75) * F.col("dl") / F.lit(avgdl)))
-    )
-    scored = (
-        j.groupBy("doc_id")
-        .agg(F.round(F.sum(contrib), 4).alias("score"))
-        .withColumn("grp_id", F.col("doc_id") % 50)
-    )
+    j, contrib, docs = _bm25_terms(spark, sf_dir, F.col("term").isin(list(BM25_TERMS)))
+    scored = _rounded_scores(j, contrib).withColumn("grp_id", F.col("doc_id") % 50)
     w = Window.partitionBy("grp_id")
     worder = w.orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
+    out = (
         scored.withColumn("rn", F.row_number().over(worder))
         .withColumn("n_matched", F.count("*").over(w))
         .where(F.col("rn") == 1)
@@ -648,6 +539,7 @@ def q_collapse_topk(spark, sf_dir):
         .orderBy(F.desc("score"), F.asc("grp_id"))
         .limit(10)
     )
+    return _with_release(out, docs)
 
 
 def q_search_after_page2(spark, sf_dir):
@@ -658,41 +550,15 @@ def q_search_after_page2(spark, sf_dir):
     as OFFSET 10).  No-gap/no-overlap tiling and the engine-side cursor
     semantics are pinned in tests/test_collapse.py; ranking here is on
     the ROUNDED score + doc_id so both engines order bit-identically."""
-    # cache holds only the two columns every branch needs — the full-row
-    # cache also materialized text/lang/source/n_chars per row (guide
-    # §2.3: narrower cached/shuffled rows)
-    docs = (
-        _docs(spark, sf_dir)
-        .select("doc_id", text.sql_tokens().alias("tokens"))
-        .cache()
-    )
-    tok = docs.select("doc_id", F.explode("tokens").alias("term"))
-    dl = docs.select("doc_id", F.size("tokens").cast("long").alias("dl"))
-    st = dl.agg(F.count("*").alias("n"), F.avg("dl").alias("avgdl")).collect()[0]
-    n, avgdl = st["n"], st["avgdl"]
-    tf = (
-        tok.where(F.col("term").isin(list(BM25_TERMS)))
-        .groupBy("doc_id", "term")
-        .agg(F.count("*").cast("double").alias("tf"))
-    )
-    dfc = tf.groupBy("term").agg(F.count("*").cast("double").alias("df"))
-    j = tf.join(dfc, "term").join(dl, "doc_id")
-    contrib = (
-        F.log(F.lit(1.0) + (F.lit(float(n)) - F.col("df") + 0.5) / (F.col("df") + 0.5))
-        * (F.col("tf") * F.lit(2.2))
-        / (F.col("tf") + F.lit(1.2) * (F.lit(0.25) + F.lit(0.75) * F.col("dl") / F.lit(avgdl)))
-    )
-    scored = j.groupBy("doc_id").agg(F.round(F.sum(contrib), 4).alias("score"))
+    j, contrib, docs = _bm25_terms(spark, sf_dir, F.col("term").isin(list(BM25_TERMS)))
+    scored = _rounded_scores(j, contrib)
     page1 = scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(10).collect()
     d, s = page1[-1]["doc_id"], page1[-1]["score"]
     after = (F.col("score") < s) | (
         (F.col("score") == s) & (F.col("doc_id") > d)
     )
-    return (
-        scored.where(after)
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(10)
-    )
+    out = scored.where(after).orderBy(F.desc("score"), F.asc("doc_id")).limit(10)
+    return _with_release(out, docs)
 
 
 BATCH_TERMS: dict[int, tuple[str, ...]] = {
@@ -702,50 +568,39 @@ BATCH_TERMS: dict[int, tuple[str, ...]] = {
 }
 
 
+def _batch_scores(spark, sf_dir):
+    """Unrounded per-(query_id, doc_id) BM25 sums `s` for every
+    BATCH_TERMS query over one tokenization and one set of statistics.
+    Returns (scores, cached frame)."""
+    import functools
+
+    all_terms = sorted({t for ts in BATCH_TERMS.values() for t in ts})
+    base, contrib, docs = _bm25_terms(spark, sf_dir, F.col("term").isin(all_terms))
+    per_q = [
+        base.where(F.col("term").isin(list(terms)))
+        .groupBy("doc_id")
+        .agg(F.sum(contrib).alias("s"))
+        .select(F.lit(qid).alias("query_id"), "doc_id", "s")
+        for qid, terms in BATCH_TERMS.items()
+    ]
+    return functools.reduce(DataFrame.unionByName, per_q), docs
+
+
 def q_bm25_batch(spark, sf_dir):
     """Batch BM25 top-10 per query_id — the oracle-checkable shape of
     Engine.search_many (one tokenization pass, per-query scores, windowed
     per-query top-k)."""
     from pyspark.sql.window import Window
 
-    docs = _docs(spark, sf_dir).withColumn("tokens", text.sql_tokens()).cache()
-    tok = docs.select("doc_id", F.explode("tokens").alias("term"))
-    dl = docs.select("doc_id", F.size("tokens").cast("long").alias("dl"))
-    st = dl.agg(F.count("*").alias("n"), F.avg("dl").alias("avgdl")).collect()[0]
-    n, avgdl = st["n"], st["avgdl"]
-
-    all_terms = sorted({t for ts in BATCH_TERMS.values() for t in ts})
-    tf = (
-        tok.where(F.col("term").isin(all_terms))
-        .groupBy("doc_id", "term")
-        .agg(F.count("*").cast("double").alias("tf"))
-    )
-    dfc = tf.groupBy("term").agg(F.count("*").cast("double").alias("df"))
-    base = tf.join(dfc, "term").join(dl, "doc_id")
-
-    per_q = []
-    for qid, terms in BATCH_TERMS.items():
-        contrib = (
-            F.log(F.lit(1.0) + (F.lit(float(n)) - F.col("df") + 0.5) / (F.col("df") + 0.5))
-            * (F.col("tf") * F.lit(2.2))
-            / (F.col("tf") + F.lit(1.2) * (F.lit(0.25) + F.lit(0.75) * F.col("dl") / F.lit(avgdl)))
-        )
-        per_q.append(
-            base.where(F.col("term").isin(list(terms)))
-            .groupBy("doc_id")
-            .agg(F.sum(contrib).alias("s"))
-            .select(F.lit(qid).alias("query_id"), "doc_id", "s")
-        )
-    import functools
-
-    scored = functools.reduce(DataFrame.unionByName, per_q)
+    scored, docs = _batch_scores(spark, sf_dir)
     w = Window.partitionBy("query_id").orderBy(F.desc("s"), F.asc("doc_id"))
-    return (
+    out = (
         scored.withColumn("rn", F.row_number().over(w))
         .where(F.col("rn") <= 10)
         .select("query_id", "doc_id", F.round("s", 4).alias("score"))
         .orderBy("query_id", F.desc("s"), F.asc("doc_id"))
     )
+    return _with_release(out, docs)
 
 
 def q_rank_eval(spark, sf_dir):
@@ -759,35 +614,7 @@ def q_rank_eval(spark, sf_dir):
     Per query: precision@10, recall@10, MRR, NDCG@10, rounded to 6."""
     from pyspark.sql.window import Window
 
-    docs = _docs(spark, sf_dir).withColumn("tokens", text.sql_tokens()).cache()
-    tok = docs.select("doc_id", F.explode("tokens").alias("term"))
-    dl = docs.select("doc_id", F.size("tokens").cast("long").alias("dl"))
-    st = dl.agg(F.count("*").alias("n"), F.avg("dl").alias("avgdl")).collect()[0]
-    n, avgdl = st["n"], st["avgdl"]
-    all_terms = sorted({t for ts in BATCH_TERMS.values() for t in ts})
-    tf = (
-        tok.where(F.col("term").isin(all_terms))
-        .groupBy("doc_id", "term")
-        .agg(F.count("*").cast("double").alias("tf"))
-    )
-    dfc = tf.groupBy("term").agg(F.count("*").cast("double").alias("df"))
-    base = tf.join(dfc, "term").join(dl, "doc_id")
-    per_q = []
-    for qid, terms in BATCH_TERMS.items():
-        contrib = (
-            F.log(F.lit(1.0) + (F.lit(float(n)) - F.col("df") + 0.5) / (F.col("df") + 0.5))
-            * (F.col("tf") * F.lit(2.2))
-            / (F.col("tf") + F.lit(1.2) * (F.lit(0.25) + F.lit(0.75) * F.col("dl") / F.lit(avgdl)))
-        )
-        per_q.append(
-            base.where(F.col("term").isin(list(terms)))
-            .groupBy("doc_id")
-            .agg(F.sum(contrib).alias("s"))
-            .select(F.lit(qid).alias("query_id"), "doc_id", "s")
-        )
-    import functools
-
-    scored = functools.reduce(DataFrame.unionByName, per_q)
+    scored, docs = _batch_scores(spark, sf_dir)
     w = Window.partitionBy("query_id").orderBy(F.desc("s"), F.asc("doc_id"))
     grade = (
         F.when(F.col("doc_id") % 13 == F.col("query_id"), 2)
@@ -829,7 +656,7 @@ def q_rank_eval(spark, sf_dir):
         )
     )
     tot = jd.groupBy("query_id").agg(F.count("*").cast("double").alias("n_rel"))
-    return (
+    out = (
         per.join(ideal, "query_id")
         .join(tot, "query_id")
         .select(
@@ -841,6 +668,7 @@ def q_rank_eval(spark, sf_dir):
         )
         .orderBy("query_id")
     )
+    return _with_release(out, docs)
 
 
 def q_topk_per_lang(spark, sf_dir):
@@ -1345,43 +1173,15 @@ def q_hybrid_rrf(spark, sf_dir):
     space) by Σ 1/(60+rank), both lists ranked on their ROUNDED scores +
     id tiebreak so Spark and DuckDB rank identically.  Fusion cost is
     candidate-set-sized (N·k rows), never corpus-sized."""
-    # cache holds only the two columns every branch needs — the full-row
-    # cache also materialized text/lang/source/n_chars per row (guide
-    # §2.3: narrower cached/shuffled rows)
-    docs = (
-        _docs(spark, sf_dir)
-        .select("doc_id", text.sql_tokens().alias("tokens"))
-        .cache()
-    )
-    tok = docs.select("doc_id", F.explode("tokens").alias("term"))
-    dl = docs.select("doc_id", F.size("tokens").cast("long").alias("dl"))
-    st = dl.agg(F.count("*").alias("n"), F.avg("dl").alias("avgdl")).collect()[0]
-    n, avgdl = st["n"], st["avgdl"]
-    tf = (
-        tok.where(F.col("term").isin(list(BM25_TERMS)))
-        .groupBy("doc_id", "term")
-        .agg(F.count("*").cast("double").alias("tf"))
-    )
-    dfc = tf.groupBy("term").agg(F.count("*").cast("double").alias("df"))
-    j = tf.join(dfc, "term").join(dl, "doc_id")
-    contrib = (
-        F.log(F.lit(1.0) + (F.lit(float(n)) - F.col("df") + 0.5) / (F.col("df") + 0.5))
-        * (F.col("tf") * F.lit(2.2))
-        / (F.col("tf") + F.lit(1.2) * (F.lit(0.25) + F.lit(0.75) * F.col("dl") / F.lit(avgdl)))
-    )
-    lex = (
-        j.groupBy("doc_id")
-        .agg(F.round(F.sum(contrib), 4).alias("score"))
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(20)
-    )
+    j, contrib, docs = _bm25_terms(spark, sf_dir, F.col("term").isin(list(BM25_TERMS)))
+    lex = _rounded_scores(j, contrib).orderBy(F.desc("score"), F.asc("doc_id")).limit(20)
     emb = _emb(spark, sf_dir)
     qv = [float(x) for x in emb.where(F.col("vec_id") == 0).collect()[0]["embedding"]]
     sem = (
         ann.cosine_topk(emb.where(F.col("vec_id") != 0), qv, k=20)
         .select(F.col("vec_id").alias("doc_id"), F.col("cos").alias("score"))
     )
-    return ann.rrf_fuse([lex, sem], id_col="doc_id", k0=60, topk=10)
+    return _with_release(ann.rrf_fuse([lex, sem], id_col="doc_id", k0=60, topk=10), docs)
 
 
 def q_sem_decon_hits(spark, sf_dir):

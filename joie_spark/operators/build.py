@@ -138,14 +138,20 @@ def assign_dense_ids(df: DataFrame, col: str, out: str, start: int = 1) -> DataF
     The persist is load-bearing (partition ids must agree between the two
     passes); it is exposed as `._joie_persisted` on the result so callers
     release it once the ids are materialized — see release_dense_ids().
+
+    A NULL key has no place in the order, so both paths reject it with
+    the same ValueError (the distributed path counts NULLs in pass 1).
     """
     from pyspark.sql.window import Window
 
+    null_key = f"assign_dense_ids: NULL key in column {col!r}"
     id_type = df.schema[col].dataType
     head = (
         df.select(col).distinct().limit(DENSE_IDS_DRIVER_MAX + 1).collect()
     )
     if len(head) <= DENSE_IDS_DRIVER_MAX:
+        if any(r[col] is None for r in head):
+            raise ValueError(null_key)
         vals = sorted(r[col] for r in head)
         spark = df.sparkSession
         from pyspark.sql.types import StructField, StructType
@@ -168,7 +174,14 @@ def assign_dense_ids(df: DataFrame, col: str, out: str, start: int = 1) -> DataF
         .withColumn("pid", F.spark_partition_id())
         .persist()
     )
-    counts = base.groupBy("pid").agg(F.count("*").alias("n")).collect()
+    counts = (
+        base.groupBy("pid")
+        .agg(F.count("*").alias("n"), F.count_if(F.col(col).isNull()).alias("nulls"))
+        .collect()
+    )
+    if any(r["nulls"] for r in counts):
+        base.unpersist()
+        raise ValueError(null_key)
     offset = {}
     acc = start
     for r in sorted(counts, key=lambda r: r["pid"]):

@@ -99,19 +99,6 @@ def with_cells_and_ccos(
     )
 
 
-def _seq_dots(A: np.ndarray, B: np.ndarray) -> np.ndarray:
-    """Pairwise dot products with SEQUENTIAL per-dimension accumulation —
-    bit-identical to dot_expr's left fold (((0 + p0) + p1) + …): each
-    step is one elementwise multiply then one add in float64, no FMA
-    fusion, no pairwise/blocked summation.  O(|A|·|B|·d) flops but
-    vectorized over the pair matrix, ~2 orders of magnitude faster than
-    evaluating the fold expression per pair (guide §4.2)."""
-    D = np.zeros((A.shape[0], B.shape[0]), dtype=np.float64)
-    for i in range(A.shape[1]):
-        D += np.multiply.outer(A[:, i], B[:, i])
-    return D
-
-
 def _seq_norms(A: np.ndarray) -> np.ndarray:
     """sqrt of the sequential sum of squares — bit-identical to
     norm_expr's fold."""
@@ -248,9 +235,10 @@ def semdedup_drops(
 
     Fast path (portable=False): one Arrow-batched cell assignment, one
     shuffle of the members keyed by cell, then the within-cell greedy in
-    numpy via applyInPandas — the Σ|cell|²·d pair arithmetic runs as
-    vectorized float64 that replicates the SQL fold bit-for-bit
-    (_seq_dots/_round4_half_up; pinned to the portable twin by
+    numpy via applyInPandas — the Σ|cell|²·d pair cosines come from a
+    BLAS matmul, and any within 1e-9 of the threshold is recomputed with
+    the SQL fold's exact sequential order (fold_cos/_round4_half_up;
+    pinned to the portable twin by
     test_semdedup_portable_matches_fast_on_gaussian).  This is guide
     §4.2's move: Spark does the distribution, numpy does the bulk math —
     the previous per-pair fold expression paid ~1 µs/pair in the JVM.

@@ -45,6 +45,9 @@ def main() -> None:
             srows = sorted(
                 tuple(r[c] for c in cols) for r in df.collect()
             )
+            # a cache left warm would subsidize the leaves checked after it
+            if getattr(df, "_joie_persisted", None) is not None:
+                df._joie_persisted.unpersist()
         except Exception as e:  # noqa: BLE001
             print(f"ERROR  {name}: spark: {e}")
             bad += 1

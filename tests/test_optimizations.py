@@ -65,6 +65,22 @@ def test_assign_dense_ids_distributed_path_matches_driver(spark, monkeypatch):
     assert sorted(fast.values()) == list(range(1, 58))
 
 
+@pytest.mark.parametrize("driver_max", [1_000_000, 0])
+def test_assign_dense_ids_rejects_null_key(spark, monkeypatch, driver_max):
+    # both sides of the driver/distributed boundary raise the same error
+    import joie_spark.operators.build as B
+
+    monkeypatch.setattr(B, "DENSE_IDS_DRIVER_MAX", driver_max)
+    rows = [(f"conv-{i:03d}",) for i in range(9)] + [(None,)]
+    df = spark.createDataFrame(rows, "conv_id string").repartition(3)
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+    with pytest.raises(ValueError, match="NULL key in column 'conv_id'"):
+        B.assign_dense_ids(df, "conv_id", "doc_id")
+    # the distributed path releases its persist before raising
+    assert set(jsc.getPersistentRDDs().keySet()) <= before
+
+
 @pytest.mark.parametrize("seed", [0, 1])
 def test_round4_half_up_matches_spark_round(spark, seed):
     from joie_spark.pipeline.semdedup import _round4_half_up
