@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 from .operators import query as Q
 from .operators.build import build_index
 from .operators.highlight import add_highlights
-from .plans.parser import And, Expr, Literal, Or, parse_query
+from .plans.parser import Expr, literals, parse_query
 from .tokenizer import tokenize_terms
 
 
@@ -79,58 +79,37 @@ class Engine:
         clauses into ORs before planning (query-time Lucene
         SynonymFilter; plans/synonyms.py documents the scope rules) —
         the expanded query evaluates and scores exactly like the
-        spelled-out OR, on the same auto-routed paths.
+        spelled-out OR, on the same routes.
 
-        mode='auto' answers from the COMPRESSED index whenever positions
-        aren't needed: pure disjunctive keyword queries take the
-        single-query block-max WAND path (operators/wand.py); phrase-free
-        boolean queries (ANDs, mixed and/or) — including turn-filtered
-        ones (`where`, fused pre-θ on the blocks path, batch.py) — take
-        the batch block-max machinery as a batch of one (operators/
-        batch.py).  All rank-identical to the exhaustive scorer by
-        construction.  Only multi-term phrases scan the positional
-        postings table.  mode='exhaustive' / mode='wand' force a path."""
+        mode='auto' answers every phrase-free query (keyword ORs, ANDs,
+        mixed and/or; `where` / `where_doc` fused pre-θ) from the
+        COMPRESSED index as a batch of one through the block-max
+        executor (operators/batch.py) — rank-identical to the exhaustive
+        scorer by construction.  Only queries with a multi-term phrase
+        scan the positional postings table (operators/query.py), and
+        mode='exhaustive' forces that scorer for any query."""
+        if mode not in ("auto", "exhaustive"):
+            raise ValueError(
+                f"unknown mode={mode!r} (expected 'auto' or 'exhaustive')"
+            )
+        expr = parse_query(query)
         if synonyms:
-            from .plans.builder import QueryBuilder
             from .plans.synonyms import expand_synonyms
 
-            expr = expand_synonyms(parse_query(query), synonyms)
-            if mode == "exhaustive":
-                return Q.search_expr(
-                    self.index, expr, k=k, where=where, where_doc=where_doc,
-                    optimize=optimize,
-                )
-            # batch-of-one handles the full rewritten algebra with the
-            # same auto routing (phrase-free → compressed blocks path)
-            return self.search_many_built(
-                [QueryBuilder(self, expr)], k=k, where=where,
-                where_doc=where_doc, optimize=optimize,
-            ).drop("query_id")
-        if mode in ("auto", "wand"):
-            expr = parse_query(query)
-            lits = _lits(expr)
-            node_words = [tokenize_terms(t) for t in lits]
-            is_disjunctive = all(len(w) == 1 for w in node_words) and _is_or_only(expr)
-            if is_disjunctive and where is None:
-                from .operators.wand import wand_topk
+            expr = expand_synonyms(expr, synonyms)
+        if mode == "exhaustive" or any(
+            len(tokenize_terms(t)) > 1 for t in literals(expr)
+        ):
+            return Q.search_expr(
+                self.index, expr, k=k, where=where, where_doc=where_doc,
+                optimize=optimize,
+            )
+        from .operators.batch import search_many_exprs
 
-                words = [w for ws in node_words for w in ws]
-                return wand_topk(self.index, words, k=k, where_doc=where_doc)
-            if mode == "wand":
-                raise ValueError(
-                    "mode='wand' requires a pure disjunctive keyword query "
-                    "without a turn filter"
-                )
-            if all(len(w) <= 1 for w in node_words):
-                # boolean but phrase-free → compressed index, batch of one
-                return self.search_many(
-                    [query], k=k, where=where, where_doc=where_doc,
-                    optimize=optimize,
-                ).drop("query_id")
-        return Q.search(
-            self.index, query, k=k, where=where, where_doc=where_doc,
+        return search_many_exprs(
+            self.index, [expr], k=k, where=where, where_doc=where_doc,
             optimize=optimize,
-        )
+        ).drop("query_id")
 
     def search_collapsed(
         self,
@@ -409,7 +388,7 @@ class Engine:
         reference README.md:5)."""
         res = self.search(query, k=k, where=where, where_doc=where_doc)
         expr = parse_query(query)
-        phrases = [tokenize_terms(t) for t in _lits(expr)]
+        phrases = [tokenize_terms(t) for t in literals(expr)]
         # keyword highlighting applies to single-term literals via the
         # keywords fast path; phrase spans of length 1 are identical, so
         # phrase spans subsume them.
@@ -448,7 +427,7 @@ class Engine:
 
         res = self.search_many(queries, k=k, where=where, where_doc=where_doc)
         phrases_by_qid = {
-            i: [tokenize_terms(t) for t in _lits(parse_query(q))]
+            i: [tokenize_terms(t) for t in literals(parse_query(q))]
             for i, q in enumerate(queries)
         }
         return add_highlights_batch(
@@ -996,17 +975,3 @@ class Engine:
             )
         )
 
-
-def _lits(expr: Expr) -> list[str]:
-    if isinstance(expr, Literal):
-        return [expr.text]
-    assert isinstance(expr, (And, Or))
-    return _lits(expr.lhs) + _lits(expr.rhs)
-
-
-def _is_or_only(expr: Expr) -> bool:
-    if isinstance(expr, Literal):
-        return True
-    if isinstance(expr, Or):
-        return _is_or_only(expr.lhs) and _is_or_only(expr.rhs)
-    return False

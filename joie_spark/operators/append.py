@@ -31,7 +31,7 @@ is the initial build; `append_index` adds gen=1.. slices:
                      bounds stay SOUND because each block records the
                      avgdl it was encoded with (enc_avgdl) and query-time
                      ubs scale by max(1, avgdl_now/enc_avgdl)
-                     (operators/wand.py _avgdl_drift).
+                     (operators/batch.py _ub_per_query).
 
 A doc straddling nothing: delta doc_ids continue after the current max,
 so delta block_ids can share at most the boundary block with gen0 —

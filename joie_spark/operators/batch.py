@@ -10,8 +10,8 @@ Why blocks, not postings (VERDICT r2): the round-2 batch path scanned the
 *uncompressed* postings table for the union vocabulary of the whole batch
 — a batch containing a stopword read every posting of "the", positions
 arrays included.  The blocks table is delta+varint compressed, carries
-block-max metadata, and is the index the engine's own WAND path prunes;
-the batch path now runs on it:
+block-max metadata, and the batch path runs on it — as does every
+phrase-free single `Engine.search`, answered here as a batch of one:
 
   phase 0  ONE dictionary lookup for the whole batch; queries containing
            multi-term phrases fall back to the postings path (positions
@@ -32,7 +32,7 @@ the batch path now runs on it:
            (probe scores are exact and their non-top-k rows are totally
            ordered out) — then merge probe top-k ∪ fresh top-k per query.
 
-Soundness (same invariant as operators/wand.py, Ding & Suel 2011): every
+Soundness (the block-max WAND invariant, Ding & Suel 2011): every
 turn's score in block b is ≤ ub_q(b); θ_q is an attained k-th best score,
 so a pruned block (ub < θ) cannot contribute a top-k row, and ties at θ
 are kept because pruning is strict (< θ).  Results are bit-identical to
@@ -444,13 +444,31 @@ def _blocks_meta_for(ix: Index, term_ids: list[int]) -> DataFrame:
     )
 
 
+# Stored block maxima and query-time scores use DIFFERENT float
+# associations — the build computes idf·(num/denom) per row while every
+# scorer computes (idf·num)/denom (the oracle's exact shape) — so a
+# stored bound can round up to a few ulps BELOW a real score.  When the
+# k-th best score (θ) IS that block's max row, `ub >= θ` is false by one
+# ulp and the block holding a genuine top-k row gets pruned (caught by a
+# hypothesis pagination test at k=3 on a hot term).  ULP_GUARD pads every
+# bound by 2^-48 relative (~3.6e-15 — 16 float64 eps, safely above the
+# ≤4-ulp association discrepancy; zero effect on pruning power).
+ULP_GUARD = 1.0 + 2.0**-48
+
+
 def _ub_per_query(blocks_meta: DataFrame, items, idf, avgdl: float) -> DataFrame:
     """(query_id, block_id, ub) — ub_q(b) = Σ_{t ∈ q present in b}
-    idf_t · max_part(t, b) · max(1, avgdl/enc_avgdl).  Terms of q absent
-    from b contribute 0, so ub is an upper bound of any turn's q-score in
-    b regardless of which of q's terms the block holds; the enc_avgdl
-    factor keeps blocks encoded before an append sound (wand._avgdl_drift
-    has the proof sketch)."""
+    idf_t · max_part(t, b) · max(1, avgdl/enc_avgdl) · ULP_GUARD.  Terms
+    of q absent from b contribute 0, so ub is an upper bound of any
+    turn's q-score in b regardless of which of q's terms the block holds.
+
+    The avgdl drift factor: a block's stored max_part was computed with
+    enc_avgdl; after an incremental append (or a delete) the live avgdl
+    differs.  For any (tf, dl), contribution(avgdl') ≤ contribution(avgdl)
+    · max(1, avgdl'/avgdl) (the denominator term K1·B·dl/avgdl shrinks by
+    at most that factor), so scaling stored bounds by max(1, avgdl_now/
+    enc_avgdl) keeps the upper bound valid — exactly 1 for freshly built
+    or compacted indexes, slightly loose between append and compaction."""
     tq: dict[int, list[int]] = {}
     for qid, _n, qids in items:
         for t in qids:
@@ -463,12 +481,6 @@ def _ub_per_query(blocks_meta: DataFrame, items, idf, avgdl: float) -> DataFrame
     idf_sql = "map({})".format(
         ", ".join(f"{t}L, CAST({idf[t]!r} AS DOUBLE)" for t in sorted(tq))
     )
-    # drift factor + the ULP_GUARD association pad (wand.py has the full
-    # rationale: stored maxima use idf·(num/denom), scorers (idf·num)/
-    # denom — a bound can round a few ulps below a real score and θ-tie
-    # pruning would then drop a genuine top-k row)
-    from .wand import ULP_GUARD
-
     drift = F.greatest(
         F.lit(1.0), F.lit(float(avgdl)) / F.col("enc_avgdl")
     ) * F.lit(ULP_GUARD)

@@ -363,8 +363,9 @@ def blocks_of(postings: DataFrame, avgdl: float, docs_per_block: int) -> DataFra
     `enc_avgdl` records the avgdl the block-max `max_part` was computed
     with: incremental appends shift the corpus avgdl, and the WAND upper
     bound stays sound by scaling stored bounds with
-    max(1, avgdl_now / enc_avgdl) at query time (see operators/wand.py) —
-    compaction re-encodes with the current avgdl and tightens them again."""
+    max(1, avgdl_now / enc_avgdl) at query time (see operators/batch.py
+    _ub_per_query) — compaction re-encodes with the current avgdl and
+    tightens them again."""
     encode_udf = make_encode_udf(avgdl)
     return (
         postings.withColumn(

@@ -25,7 +25,7 @@ Why scores stay exact: BM25 inputs are tf/dl (per remaining posting,
 unchanged), df (updated snapshot), N/avgdl (updated stats).  Block-max
 upper bounds stay SOUND: removing docs only shrinks each block's true
 max, and the avgdl shift is covered by the same enc_avgdl drift factor
-appends use (wand._avgdl_drift: avgdl down → stored bounds were computed
+appends use (batch._ub_per_query: avgdl down → stored bounds were computed
 at a larger avgdl, already upper bounds; avgdl up → scaled).
 
 delete + append of the same conv_id = an UPDATE with exact semantics

@@ -926,14 +926,17 @@ def score_matches(
     k: int = 10,
     dfs: dict[int, int] | None = None,
 ) -> DataFrame:
-    """BM25 score match set over unique query terms → top-k DataFrame.
+    """BM25 score match set over unique query terms → top-k DataFrame."""
+    return _topk(scored_matches(ix, match, qterm_ids, dfs=dfs), k)
 
-    The top-k sort+limit lowers to TakeOrderedAndProject (no full sort)."""
-    return (
-        scored_matches(ix, match, qterm_ids, dfs=dfs)
-        .orderBy(F.desc("score"), F.asc("doc_id"), F.asc("turn_idx"))
-        .limit(k)
-    )
+
+def _topk(scored: DataFrame, k: int) -> DataFrame:
+    """The engine's total result order (score DESC, doc_id ASC, turn_idx
+    ASC) cut at k — the sort+limit lowers to TakeOrderedAndProject (no
+    full sort)."""
+    return scored.orderBy(
+        F.desc("score"), F.asc("doc_id"), F.asc("turn_idx")
+    ).limit(k)
 
 
 # ---------------------------------------------------------------------------
@@ -1037,22 +1040,11 @@ def search_expr_decayed(
         raise ValueError("ref_ts must be an explicit timestamp literal")
     if half_life_s <= 0:
         raise ValueError("half_life_s must be > 0")
-    match, qids, dfs = _plan_search(ix, expr, where, where_doc, optimize)
-    scored = scored_matches(ix, match, qids, dfs=dfs)
-    with_ts = scored.join(
-        ix.turns.select(*MATCH_COLS, "ts"), MATCH_COLS, "inner"
-    )
     age_s = F.unix_timestamp(F.lit(ref_ts).cast("timestamp")) - F.unix_timestamp(
         F.col("ts")
     )
     decay = F.pow(F.lit(0.5), age_s.cast("double") / F.lit(float(half_life_s)))
-    return (
-        with_ts.select(
-            "doc_id", "turn_idx", (F.col("score") * decay).alias("score")
-        )
-        .orderBy(F.desc("score"), F.asc("doc_id"), F.asc("turn_idx"))
-        .limit(k)
-    )
+    return _reweighted(ix, expr, decay, k, where, where_doc, optimize)
 
 
 def search_expr_function_score(
@@ -1084,6 +1076,24 @@ def search_expr_function_score(
     one scalar multiply, TakeOrderedAndProject top-k."""
     if not weight_expr or not weight_expr.strip():
         raise ValueError("weight_expr must be a non-empty SQL expression")
+    weight = F.expr(weight_expr).cast("double")
+    return _reweighted(ix, expr, weight, k, where, where_doc, optimize)
+
+
+def _reweighted(
+    ix: Index,
+    expr: Expr,
+    weight: Column,
+    k: int,
+    where: str | None,
+    where_doc: str | None,
+    optimize: bool,
+) -> DataFrame:
+    """Shared tail of the post-score reweighting variants (decay,
+    function_score): exhaustive scoring frame → (doc_id, turn_idx) inner
+    join against the turns row store for the metadata `weight` reads
+    (Catalyst prunes the fetch to the columns it references) → score ×
+    weight → top-k."""
     match, qids, dfs = _plan_search(ix, expr, where, where_doc, optimize)
     scored = scored_matches(ix, match, qids, dfs=dfs)
     with_meta = scored.join(
@@ -1091,13 +1101,11 @@ def search_expr_function_score(
         MATCH_COLS,
         "inner",
     )
-    w = F.expr(weight_expr).cast("double")
-    return (
+    return _topk(
         with_meta.select(
-            "doc_id", "turn_idx", (F.col("score") * w).alias("score")
-        )
-        .orderBy(F.desc("score"), F.asc("doc_id"), F.asc("turn_idx"))
-        .limit(k)
+            "doc_id", "turn_idx", (F.col("score") * weight).alias("score")
+        ),
+        k,
     )
 
 
@@ -1235,10 +1243,7 @@ def search_expr_boosted(
         lut = ix.lookup_terms(toks)
         if toks[0] in lut:
             id_boosts[lut[toks[0]][0]] = float(w)
-    scored = scored_matches(ix, match, qids, dfs=dfs, boosts=id_boosts)
-    return scored.orderBy(
-        F.desc("score"), F.asc("doc_id"), F.asc("turn_idx")
-    ).limit(k)
+    return _topk(scored_matches(ix, match, qids, dfs=dfs, boosts=id_boosts), k)
 
 
 def search_expr_collapsed(
@@ -1319,9 +1324,7 @@ def search_expr_after(
             )
         )
         scored = scored.where(after_key)
-    return scored.orderBy(
-        F.desc("score"), F.asc("doc_id"), F.asc("turn_idx")
-    ).limit(k)
+    return _topk(scored, k)
 
 
 def match_set_expr(ix: Index, expr: Expr, optimize: bool = True) -> DataFrame:

@@ -2,7 +2,7 @@
 query-side SynonymFilter: single-word clauses whose analyzed token
 matches a synonym entry rewrite into an OR of the word and its synonyms
 BEFORE planning, so the expanded query rides every evaluation path
-(exhaustive / WAND / blocks) unchanged and scores exactly like the
+(exhaustive / blocks) unchanged and scores exactly like the
 spelled-out OR.
 
 Scope (documented, Lucene-parity): synonyms apply to single-word

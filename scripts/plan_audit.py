@@ -65,9 +65,12 @@ def main() -> None:
     executed = df._jdf.queryExecution().executedPlan().toString()
     results["wholestage_codegen"] = "*(" in executed
 
-    plan_w = explain_str(eng.search("roll OR dice", k=10))  # WAND path
-    results["wand_block_scan_pruned"] = "bucket" in plan_w
-    results["wand_take_ordered"] = "TakeOrderedAndProject" in plan_w
+    # keyword-OR single search = a batch of one on the compressed blocks
+    plan_w = explain_str(eng.search("roll OR dice", k=10))
+    results["keyword_or_block_scan_pruned"] = (
+        "bucket" in plan_w and "docids" in plan_w and "/postings" not in plan_w
+    )
+    results["keyword_or_topk_window_free"] = "Window" not in plan_w
 
     hi = eng.search_highlighted('"crystal kingdom"', k=3)
     plan_h = explain_str(hi)
@@ -277,7 +280,7 @@ def main() -> None:
     eng2.delete(sorted({r["conv_id"] for r in _gr(50, seed=42)})[:5])
     for label, df2 in (
         ("tomb_exhaustive", eng2.search("roll AND dice", k=5, mode="exhaustive")),
-        ("tomb_wand", eng2.search("roll OR dice", k=5)),
+        ("tomb_keyword_or", eng2.search("roll OR dice", k=5)),
         ("tomb_batch", eng2.search_many(["roll OR dice", "roll AND dice"], k=5)),
     ):
         p2 = explain_str(df2)

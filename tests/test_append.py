@@ -67,11 +67,12 @@ def test_append_equals_full_rebuild(appended):
 
 
 def test_append_wand_and_batch_paths_sound(appended):
-    """The WAND path must stay rank-identical after the avgdl drift
-    (enc_avgdl correction), for single and batch queries."""
+    """The block-max paths must stay rank-identical after the avgdl drift
+    (enc_avgdl correction), for single (a batch of one) and batch
+    queries."""
     full, inc = appended
     for q in ["roll OR dice", "the", "you OR so OR dice"]:
-        assert _by_conv(full, q) == _by_conv(inc, q), q  # auto → WAND
+        assert _by_conv(full, q) == _by_conv(inc, q), q  # auto → blocks
     flat = ["roll OR dice", "roll AND dice", "the"]
     for eng in (full, inc):
         batch = eng.search_many(flat, k=8).collect()
@@ -164,8 +165,8 @@ def test_append_resumes_after_crash(spark, t1_rows, tmp_path, monkeypatch):
 
 def test_wand_sound_under_extreme_avgdl_drift(spark, t1_rows, tmp_path):
     """Append documents ~20x longer than the base corpus so avgdl jumps
-    hard: every pruned path (single WAND, batch direct, batch forced-θ)
-    must still equal the exhaustive scorer — the enc_avgdl ub correction
+    hard: every pruned path (auto single = batch of one, batch direct,
+    batch forced-θ) must still equal the exhaustive scorer — the enc_avgdl ub correction
     is exactly what keeps stale block-max bounds sound here."""
     from joie_spark.engine import Engine
 

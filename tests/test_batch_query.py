@@ -1,7 +1,7 @@
 """Batch query API (search_many): per-query results must be bit-identical
 to the single-query path, for plain / turn-filtered / doc-filtered batches
-and batches containing OOV-only queries.  Also covers the filtered-WAND
-variant and build hygiene (resume param pinning, no leaked persisted RDDs)."""
+and batches containing OOV-only queries.  Also covers the doc-filtered
+keyword-OR single search, Engine.search's mode check and build hygiene (resume param pinning, no leaked persisted RDDs)."""
 
 import pytest
 
@@ -126,14 +126,12 @@ def test_search_many_all_oov_is_empty(t1_engine):
 
 
 def test_wand_doc_filtered_rank_identical(t1_engine, t1_oracle):
-    """where_doc now reaches the WAND path (Engine.search auto-routes
-    disjunctive keyword queries there even with a doc filter)."""
-    from joie_spark.operators import wand
-
+    """where_doc reaches the block-max path (Engine.search auto-routes
+    keyword-OR queries there as a batch of one, doc filter fused)."""
     got = [
         (r["doc_id"], r["turn_idx"], r["score"])
-        for r in wand.wand_topk(
-            t1_engine.index, ["roll", "dice"], k=10, where_doc="n_turns >= 10"
+        for r in t1_engine.search(
+            "roll OR dice", k=10, where_doc="n_turns >= 10"
         ).collect()
     ]
     want = t1_oracle.search(
@@ -227,9 +225,12 @@ def test_auto_where_filtered_single_uses_blocks(t1_engine):
     assert "/postings" not in plan   # postings table untouched
 
 
-def test_wand_mode_rejects_turn_filter(t1_engine):
-    with pytest.raises(ValueError, match="turn filter"):
-        t1_engine.search("roll OR dice", mode="wand", where="role = 'user'")
+def test_search_rejects_unknown_mode(t1_engine):
+    """Only 'auto' and 'exhaustive' exist: any other value (incl. the
+    retired 'wand') must raise instead of silently picking a route."""
+    for mode in ("wand", "blocks", "postings", "AUTO"):
+        with pytest.raises(ValueError, match="unknown mode"):
+            t1_engine.search("roll OR dice", mode=mode)
 
 
 def test_search_many_job_count_bounded(t1_engine):
@@ -254,3 +255,29 @@ def test_search_many_job_count_bounded(t1_engine):
     sc.setJobGroup(None, None)
     assert n_auto <= 10, f"auto batch path ran {n_auto} jobs (was 7)"
     assert n_pruned <= 34, f"pruned batch path ran {n_pruned} jobs (was 27)"
+
+
+def test_keyword_or_search_job_count_bounded(t1_engine):
+    """A keyword-OR Engine.search is a batch of one on the block-max
+    executor, so it runs no more jobs than search_many([q]) does —
+    measured 7 on this index (the retired single-query WAND decoder ran
+    10: a ub collect and a probe collect before the final pass)."""
+    sc = t1_engine.spark.sparkContext
+
+    def jobs(tag, fn):
+        fn()  # warm term lookups
+        sc.setJobGroup(tag, "job-count gate")
+        fn()
+        n = len(sc.statusTracker().getJobIdsForGroup(tag))
+        sc.setJobGroup(None, None)
+        return n
+
+    n_single = jobs(
+        "gate-kw-single", lambda: t1_engine.search("roll OR dice", k=10).collect()
+    )
+    n_batch1 = jobs(
+        "gate-kw-batch1",
+        lambda: t1_engine.search_many(["roll OR dice"], k=10).collect(),
+    )
+    assert n_single <= n_batch1, (n_single, n_batch1)
+    assert n_single <= 7, f"keyword-OR search ran {n_single} jobs (was 7)"
