@@ -161,15 +161,6 @@ def to_arrow(rows: list[dict]):
     return pa.Table.from_pydict(cols, schema=schema)
 
 
-def write_corpus(path: str, n_convs: int, seed: int = 42) -> int:
-    """Write the corpus as a single deterministic parquet file; returns rows."""
-    import pyarrow.parquet as pq
-
-    rows = generate_rows(n_convs, seed)
-    pq.write_table(to_arrow(rows), path)
-    return len(rows)
-
-
 # pinned fixture sizes (FIXTURES.md §1)
 SIZES = {"t1": 50, "t2": 1000, "bench": 50000}
 

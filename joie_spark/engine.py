@@ -8,7 +8,11 @@ from pyspark.sql import functions as F
 
 from .operators import query as Q
 from .operators.build import build_index
-from .operators.highlight import add_highlights
+from .operators.highlight import (
+    add_highlights,
+    add_highlights_batch,
+    highlight_phrases,
+)
 from .plans.parser import Expr, literals, parse_query
 from .tokenizer import tokenize_terms
 
@@ -295,7 +299,9 @@ class Engine:
         than whole-stage-codegen decode-and-score (see
         BENCH/PRUNING_CROSSOVER.md; lower it only for block sets big
         enough that decode dominates, raise stats_out to check)."""
-        return Q.search_many(
+        from .operators.batch import search_many
+
+        return search_many(
             self.index, queries, k=k, where=where, where_doc=where_doc,
             optimize=optimize, mode=mode, probe_blocks=probe_blocks,
             direct_threshold=direct_threshold, stats_out=stats_out,
@@ -387,12 +393,8 @@ class Engine:
         """top-k + snippet parts (joie always generates snippets,
         reference README.md:5)."""
         res = self.search(query, k=k, where=where, where_doc=where_doc)
-        expr = parse_query(query)
-        phrases = [tokenize_terms(t) for t in literals(expr)]
-        # keyword highlighting applies to single-term literals via the
-        # keywords fast path; phrase spans of length 1 are identical, so
-        # phrase spans subsume them.
-        return add_highlights(res, self.index.turns, phrases, [])
+        phrases = highlight_phrases(parse_query(query))
+        return add_highlights(res, self.index.turns, phrases)
 
     def search_collapsed_highlighted(
         self,
@@ -405,12 +407,9 @@ class Engine:
         document's BEST turn — the grouped-results page a transcript UI
         renders.  Same one-turns-join highlight pass as
         search_highlighted, over at most k rows."""
-        from .operators.query import _literal_texts
-
         res = self.search_collapsed(query, k=k, where=where, where_doc=where_doc)
         expr, _w, _wd = self._coerce_query(query, where, where_doc)
-        phrases = [tokenize_terms(t) for t in _literal_texts(expr)]
-        return add_highlights(res, self.index.turns, phrases, [])
+        return add_highlights(res, self.index.turns, highlight_phrases(expr))
 
     def search_many_highlighted(
         self,
@@ -423,12 +422,9 @@ class Engine:
         join and ONE highlight pass (per-query `search_highlighted` in a
         loop would pay job latency per query).  Row-per-(query_id, hit),
         same order contract as search_many."""
-        from .operators.highlight import add_highlights_batch
-
         res = self.search_many(queries, k=k, where=where, where_doc=where_doc)
         phrases_by_qid = {
-            i: [tokenize_terms(t) for t in literals(parse_query(q))]
-            for i, q in enumerate(queries)
+            i: highlight_phrases(parse_query(q)) for i, q in enumerate(queries)
         }
         return add_highlights_batch(
             res, self.index.turns, phrases_by_qid
@@ -508,12 +504,11 @@ class Engine:
     def get_doc(self, doc_id: int) -> DataFrame:
         """All turns of a conversation (Database::get_doc, lib.rs:104-110).
         Deleted conversations return no rows (doc_ids of deleted docs are
-        dead handles, matching a rebuild where they don't exist).  The
-        tombstone registry handle is cached on the Index (invalidated by
-        the delete/compact reload) — a point lookup shouldn't pay a table
-        re-read per call (ADVICE r4)."""
+        dead handles, matching a rebuild where they don't exist): until
+        the next compact their rows are filtered by the cached tombstone
+        handle, afterwards they are physically purged."""
         out = self.index.turns.where(F.col("doc_id") == doc_id)
-        tomb = self.index.registry_tombstones
+        tomb = self.index.tombstones
         if tomb is not None:
             out = out.join(F.broadcast(tomb), "doc_id", "left_anti")
         return out.orderBy("turn_idx")
@@ -744,7 +739,7 @@ class Engine:
         total_blocks, generations, row_generations,
         tombstoned_docs (0 when fully purged), index_dir."""
         st = self.index.stats
-        tomb = self.index.registry_tombstones
+        tomb = self.index.tombstones
         return {
             "n_turns": int(st["N"]),
             "n_docs": int(self.index.doc_meta.count()),
@@ -753,8 +748,8 @@ class Engine:
             "n_buckets": int(st["n_buckets"]),
             "docs_per_block": int(st["docs_per_block"]),
             "total_blocks": int(self.index.total_blocks),
-            "generations": list(st.get("post_gens", [0])),
-            "row_generations": list(st.get("gens", [0])),
+            "generations": list(st["post_gens"]),
+            "row_generations": list(st["gens"]),
             "tombstoned_docs": 0 if tomb is None else int(tomb.count()),
             "index_dir": self.index.index_dir,
         }

@@ -50,7 +50,10 @@ merged) and drops the old generation partitions + stale dictionary
 snapshots.  Everything is manifest-logged and resumable mid-append:
 every write overwrites exactly its own gen slice (a hive subdir for
 parquet, overwritePartitions for Iceberg), so a re-run replaces exactly
-what a crashed attempt half-wrote.
+what a crashed attempt half-wrote.  A resume reads its base stats, doc
+id base and delta counts back from the stage commits; append and compact
+accept only the current index format (sources.tables.read_stats rejects
+an index whose stats lack a current field — rebuild it).
 """
 
 from __future__ import annotations
@@ -64,8 +67,11 @@ from pyspark.sql import functions as F
 
 from ..sources.tables import (
     Manifest,
+    dict_gens_of,
     format_by_name,
+    live,
     read_stats,
+    resolve_term_dict,
     table_path,
     write_stats,
 )
@@ -84,27 +90,9 @@ from .build import (
 def _live_dict(spark, fmt, index_dir: str, stats: dict) -> DataFrame:
     """The resolved live dictionary (base snapshot + delta partitions,
     last-writer-wins per term — sources.tables.resolve_term_dict)."""
-    from ..sources.tables import dict_gens_of, resolve_term_dict
-
     return resolve_term_dict(
         fmt.read(spark, index_dir, "term_dict"), dict_gens_of(stats)
     )
-
-
-def _live_rows(df: DataFrame, stats: dict) -> DataFrame:
-    """Prune a turns/doc_meta read to the live row-store generation set
-    (stats.gens) — the maintenance-path twin of Index._live_row_gens.
-
-    A purge-compact that crashed between its row-store rewrite and the
-    stats commit leaves a half-written gen dir holding DUPLICATE copies
-    of live rows; a raw read that then aggregates (delete's df/cf/dl
-    decrements) would double-count every duplicated doc.  Partition-
-    pruning to stats.gens makes that dir invisible until the commit that
-    makes it authoritative."""
-    rg = stats.get("gens")
-    if rg is None or "gen" not in df.columns:
-        return df
-    return df.where(F.col("gen").isin([int(g) for g in rg]))
 
 
 def _gen_dirs(root: str) -> dict[int, str]:
@@ -129,8 +117,8 @@ def _all_known_gens(man: Manifest, stats: dict, index_dir: str, fmt) -> set[int]
     (append_begin/append/compact — covers crashed attempts), and for
     parquet the on-disk partition dirs (covers a compact that crashed
     before its manifest commit)."""
-    gens: set[int] = set(stats.get("gens", [0]))
-    gens.update(int(g) for g in stats.get("post_gens", []))
+    gens: set[int] = set(stats["gens"])
+    gens.update(int(g) for g in stats["post_gens"])
     gens.add(int(stats.get("compacted_gen", 0)))
     for e in man.entries:
         # any gen-addressed entry of any stage (append/delete/compact,
@@ -200,7 +188,7 @@ def append_index(
                     % (idempotency_key, e["unit"], fp, e.get("input_fp"))
                 )
     stats = read_stats(index_dir)
-    fmt = format_by_name(stats.get("table_format", "parquet"))
+    fmt = format_by_name(stats["table_format"])
     n_buckets = stats["n_buckets"]
     docs_per_block = stats["docs_per_block"]
 
@@ -211,10 +199,9 @@ def append_index(
     begun = [e for e in man.entries if e["stage"] == "append_begin"]
     done = {e["unit"] for e in man.entries if e["stage"] == "append"}
     pending = [e for e in begun if e["unit"] not in done]
-    base_doc: int | None = None
     if pending:
         gen = int(pending[-1]["unit"].removeprefix("gen="))
-        base_doc = pending[-1].get("base_doc")  # absent on old manifests
+        base_doc = int(pending[-1]["base_doc"])
         fp = _input_fingerprint(src)
         if fp != pending[-1].get("input_fp"):
             raise ValueError(
@@ -226,8 +213,8 @@ def append_index(
         # begin-time: the on-disk stats may already include this delta (a
         # crash between write_stats and the append commit) and adding the
         # delta to them again would skew every BM25 score (ADVICE r3)
-        base_n = int(pending[-1].get("base_N", stats["N"]))
-        base_total_dl = int(pending[-1].get("base_total_dl", stats["total_dl"]))
+        base_n = int(pending[-1]["base_N"])
+        base_total_dl = int(pending[-1]["base_total_dl"])
     else:
         from .delete import _pending as _del_pending
         from .delete import tombstone_docs
@@ -262,8 +249,8 @@ def append_index(
         # disjointness contract (same as the shard merge): appended
         # conv_ids must be new — or tombstoned (delete + append of the
         # same conv_id = an exact UPDATE, operators/delete.py)
-        live_convs = _live_rows(
-            fmt.read(spark, index_dir, "doc_meta"), stats
+        live_convs = live(
+            fmt.read(spark, index_dir, "doc_meta"), stats["gens"]
         ).select("doc_id", "conv_id")
         tomb = tombstone_docs(spark, fmt, index_dir)
         if tomb is not None:
@@ -294,7 +281,7 @@ def append_index(
         # new live doc and a later delete of it silently skip its rows.
         # stats.n_docs never decreases (dense ids are retired, not
         # reassigned).
-        base_doc = max(int(lc["mx"] or 0), int(stats.get("n_docs", 0)) - 1)
+        base_doc = max(int(lc["mx"] or 0), int(stats["n_docs"]) - 1)
         base_n = int(stats["N"])
         base_total_dl = int(stats["total_dl"])
         man.commit(
@@ -310,15 +297,6 @@ def append_index(
         from pyspark.sql import Observation
 
         t0 = time.time()
-        if base_doc is None:
-            # resumed under a pre-round-6 begin entry (no base_doc
-            # recorded): re-derive the live doc-id high-water mark
-            base_doc = (
-                _live_rows(fmt.read(spark, index_dir, "doc_meta"), stats)
-                .agg(F.max("doc_id"))
-                .collect()[0][0]
-            )
-            base_doc = max(int(base_doc or 0), int(stats.get("n_docs", 0)) - 1)
         doc_map = assign_dense_ids(src, "conv_id", "doc_id", start=base_doc + 1)
         turns = tokenized_turns(spark, src, doc_map).withColumn(
             "gen", F.lit(gen)
@@ -340,7 +318,7 @@ def append_index(
         man.commit(
             "append_turns", unit, seconds=round(time.time() - t0, 3),
             n=int(obs.get["n"]), dl=int(obs.get["dl"] or 0),
-            n_convs=int(getattr(doc_map, "_joie_total", 0) or 0),
+            n_convs=int(doc_map._joie_total),
             base_doc=int(base_doc),
         )
 
@@ -403,15 +381,10 @@ def append_index(
         # post-append vocabulary size from it (term ids are dense, so
         # n_terms_after = n_terms + |new terms|) instead of re-scanning
         # the dictionary for max(term_id)
-        ids_total = getattr(ids, "_joie_total", None)
-        extra = (
-            {"n_terms_after": int(stats["n_terms"]) + int(ids_total)}
-            if ids_total is not None
-            else {}
-        )
         man.commit(
             "append_term_dict", unit,
-            seconds=round(time.time() - t0, 3), **extra,
+            seconds=round(time.time() - t0, 3),
+            n_terms_after=int(stats["n_terms"]) + int(ids._joie_total),
         )
 
     # the delta partition alone covers every term of the delta turns (by
@@ -436,27 +409,10 @@ def append_index(
     # ---- new global stats (needed for the delta blocks' enc_avgdl).
     # Computed from the begin-time BASE values, not the current stats.json
     # — identical on first run and on any resume (idempotent).  The delta
-    # row/dl totals were observed inside the turns write (commit entry);
-    # re-aggregate only when resuming over a pre-round-6 manifest.
-    tentry = next(
-        (
-            e
-            for e in man.entries
-            if e["stage"] == "append_turns"
-            and e["unit"] == unit
-            and "n" in e
-            and "dl" in e
-        ),
-        None,
-    )
-    if tentry is not None:
-        d = {"n": int(tentry["n"]), "dl": int(tentry["dl"])}
-    else:
-        d = delta_turns.agg(
-            F.count("*").alias("n"), F.sum("dl").alias("dl")
-        ).collect()[0]
-    new_n = base_n + int(d["n"])
-    new_total_dl = base_total_dl + int(d["dl"])
+    # row/dl totals were observed inside the turns write (commit entry).
+    tent = man.entry("append_turns", unit)
+    new_n = base_n + int(tent["n"])
+    new_total_dl = base_total_dl + int(tent["dl"])
     new_avgdl = new_total_dl / new_n
 
     # ---- delta blocks ---------------------------------------------------------
@@ -479,77 +435,24 @@ def append_index(
         man.commit("append_blocks", unit, seconds=round(time.time() - t0, 3))
 
     # ---- stats + commit ---------------------------------------------------------
-    # term ids are dense (build: 1..n, appends extend from n_terms+1), so
-    # the vocabulary size is the id high-water mark over the live dict
-    # generations plus this delta — a parquet column-stats max, idempotent
-    # on resume (never read back from the possibly-already-bumped stats)
-    from ..sources.tables import dict_gens_of
-
-    dict_gens = sorted(set(dict_gens_of(stats)) | {gen})
-    dentry = next(
-        (
-            e
-            for e in man.entries
-            if e["stage"] == "append_term_dict"
-            and e["unit"] == unit
-            and "n_terms_after" in e
-        ),
-        None,
-    )
-    if dentry is not None:
-        n_terms = int(dentry["n_terms_after"])
-    else:
-        n_terms = int(
-            fmt.read(spark, index_dir, "term_dict")
-            .where(F.col("gen").isin(dict_gens))
-            .agg(F.max("term_id"))
-            .collect()[0][0]
-        )
-    # doc-slot high-water mark: the turns commit carries the delta's id
-    # base and conv count, so max_doc = base_doc + n_convs (dense ids,
-    # delta gets base_doc+1..base_doc+n_convs; n_convs=0 degenerates to
-    # the live max) — identical to the old doc_meta re-scan, one job
-    # cheaper.  Fallback: a resume over a pre-round-6 manifest re-derives
-    # from doc_meta pruned to live gens PLUS this append's own (not yet
-    # in stats.gens — that commit is below).
-    if tentry is not None and "base_doc" in tentry and "n_convs" in tentry:
-        max_doc = int(tentry["base_doc"]) + int(tentry["n_convs"])
-    else:
-        max_doc = (
-            _live_rows(
-                fmt.read(spark, index_dir, "doc_meta"),
-                {"gens": list(stats.get("gens", [0])) + [gen]},
-            )
-            .agg(F.max("doc_id"))
-            .collect()[0][0]
-        )
+    # term ids are dense (build: 1..n, appends extend from n_terms+1), and
+    # the doc-slot high-water mark is base_doc + n_convs (dense ids, the
+    # delta gets base_doc+1..base_doc+n_convs): both ride the stage
+    # commits, so a resume never reads back the possibly-already-bumped
+    # stats
+    max_doc = int(tent["base_doc"]) + int(tent["n_convs"])
     stats.update(
         {
             "N": new_n,
             # high-water mark: never shrinks (a purge-compact can lower
             # max(doc_meta) below ids retired to the tombstone registry)
-            "n_docs": max(int(stats.get("n_docs", 0)), int(max_doc) + 1),
+            "n_docs": max(int(stats["n_docs"]), max_doc + 1),
             "total_dl": new_total_dl,
             "avgdl": new_avgdl,
-            "n_terms": n_terms,
-            "dict_gen": gen,
-            "dict_gens": dict_gens,
-            "gens": sorted(set(stats.get("gens", [0])) | {gen}),
-            # legacy (pre-post_gens) indexes: their live postings gens are
-            # the data gens, plus the compacted gen if one superseded them
-            "post_gens": sorted(
-                set(
-                    stats.get(
-                        "post_gens",
-                        (
-                            [stats["compacted_gen"]]
-                            if "compacted_gen" in stats
-                            else stats.get("gens", [0])
-                        ),
-                    )
-                )
-                | {gen}
-            ),
+            "n_terms": int(man.entry("append_term_dict", unit)["n_terms_after"]),
+            "dict_gens": sorted(set(dict_gens_of(stats)) | {gen}),
+            "gens": sorted(set(stats["gens"]) | {gen}),
+            "post_gens": sorted(set(stats["post_gens"]) | {gen}),
         }
     )
     write_stats(index_dir, stats)
@@ -590,7 +493,7 @@ def compact_index(spark: SparkSession, index_dir: str) -> Manifest:
     untouched generations are kept as-is, so a delete's storage is fully
     reclaimed by compact without rewriting the whole corpus.  stats.gens
     is the live row-store generation set readers partition-prune to
-    (Index._live_row_gens), which is what makes the rewrite crash-safe.
+    (sources.tables.live), which is what makes the rewrite crash-safe.
     Parquet-format only: Iceberg deployments use the engine-side
     rewrite_data_files maintenance instead.
 
@@ -613,7 +516,7 @@ def compact_index(spark: SparkSession, index_dir: str) -> Manifest:
          that queries never read)."""
     man = Manifest.load(index_dir)
     stats = read_stats(index_dir)
-    fmt = format_by_name(stats.get("table_format", "parquet"))
+    fmt = format_by_name(stats["table_format"])
     if fmt.name != "parquet":
         raise NotImplementedError(
             "compact_index supports the parquet format; Iceberg tables "
@@ -633,31 +536,12 @@ def compact_index(spark: SparkSession, index_dir: str) -> Manifest:
     block_root = table_path(index_dir, "blocks")
     turns_root = table_path(index_dir, "turns")
     meta_root = table_path(index_dir, "doc_meta")
-    live = sorted(
-        int(g)
-        for g in stats.get(
-            "post_gens",
-            (
-                [stats["compacted_gen"]]
-                if "compacted_gen" in stats
-                else sorted(_gen_dirs(post_root))
-            ),
-        )
-    )
-    # live ROW-store generations (turns/doc_meta).  Legacy stats without
-    # the set: every on-disk dir is live (nothing was ever purged) — pin
-    # that into stats BEFORE any new dir exists, so readers prune from
-    # here on and a crash mid-purge leaves the half-written gen invisible
-    row_live = stats.get("gens")
-    if row_live is None:
-        row_live = sorted(_gen_dirs(turns_root)) or [0]
-        stats["gens"] = row_live
-        write_stats(index_dir, stats)
-    row_live = sorted(int(g) for g in row_live)
+    post_live = sorted(int(g) for g in stats["post_gens"])
+    row_live = sorted(int(g) for g in stats["gens"])
     gen = 1 + max(_all_known_gens(man, stats, index_dir, fmt))
     for root, live_set in (
-        (post_root, live),
-        (block_root, live),
+        (post_root, post_live),
+        (block_root, post_live),
         (turns_root, row_live),
         (meta_root, row_live),
     ):
@@ -667,7 +551,7 @@ def compact_index(spark: SparkSession, index_dir: str) -> Manifest:
     avgdl = float(stats["avgdl"])
 
     postings = spark.read.option("basePath", post_root).parquet(
-        *[os.path.join(post_root, f"gen={g}") for g in live]
+        *[os.path.join(post_root, f"gen={g}") for g in post_live]
     )
     # physical purge of tombstoned documents (operators/delete.py): the
     # rewrite is already reading every posting, so dropping dead docs is
@@ -751,18 +635,11 @@ def compact_index(spark: SparkSession, index_dir: str) -> Manifest:
             new_rows = sorted(
                 (set(row_live) - set(affected)) | {gen}
             )
-    if tomb is None or int(stats.get("tombstones_unpurged", 0)) > 0:
-        # the purge above ran against the FULL registry (or none exists):
-        # after this commit no dead row lingers in the row stores, so
-        # get_doc may skip the registry anti-join (Index.registry_tombstones)
-        stats["rows_purged"] = True
     # ---- collapse dictionary deltas into one full snapshot at gen=G.
     # Appends/deletes write only the terms they touch (delta partitions,
     # resolved last-writer-wins); compaction is where the amortized full
     # rewrite belongs.  Skipped when the dictionary is already a single
     # snapshot (nothing to collapse — no wasted vocabulary rewrite).
-    from ..sources.tables import dict_gens_of
-
     dict_live = dict_gens_of(stats)
     if len(dict_live) > 1:
         fmt.write(
@@ -775,10 +652,7 @@ def compact_index(spark: SparkSession, index_dir: str) -> Manifest:
             partition_by=["gen"],
             subunit=f"gen={gen}",
         )
-        stats["dict_gen"] = gen
         stats["dict_gens"] = [gen]
-    else:
-        stats["dict_gens"] = dict_live
     # COMMIT the new generation before any destructive cleanup: from here
     # every query answers from gen alone, whatever else is on disk
     stats["gens"] = [int(g) for g in new_rows]
@@ -786,12 +660,12 @@ def compact_index(spark: SparkSession, index_dir: str) -> Manifest:
     stats["compacted_gen"] = gen
     # every tombstoned doc is now physically absent from postings/blocks
     # AND the row stores; the tombstones TABLE stays (conversation
-    # registry for re-append disjointness + get_doc), only the hot-path
-    # filter switches off
+    # registry for re-append disjointness), only the tombstone filter
+    # (queries, get_doc) switches off
     stats["tombstones_unpurged"] = 0
     write_stats(index_dir, stats)
     man.commit(
-        "compact", f"gen={gen}", supersedes=live,
+        "compact", f"gen={gen}", supersedes=post_live,
         seconds=round(time.time() - t0, 3),
     )
     # cleanup superseded generations + stale dict snapshots

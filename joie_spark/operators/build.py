@@ -38,8 +38,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-import shutil
-
 from ..functions.codec import TURN_BITS, delta_encode, varint_encode
 from ..oracle import B, K1
 from ..sources.tables import (
@@ -71,10 +69,6 @@ TOK_SCHEMA = T.StructType(
         T.StructField("dl", T.IntegerType()),
     ]
 )
-
-
-def _rmtree(path: str) -> None:
-    shutil.rmtree(path, ignore_errors=True)
 
 
 @F.pandas_udf(TOK_SCHEMA)
@@ -577,22 +571,10 @@ def build_from_turns(
             F.sum("dl").alias("total_dl"),
             F.max("doc_id").alias("max_doc"),
         ).collect()[0]
-        # the term_dict commit already recorded its exact row count —
-        # reuse it instead of re-scanning the table (one fewer job);
-        # builds with collect_metrics=False committed rows=-1 and fall
-        # back to the count
-        n_terms = next(
-            (
-                e["rows"]
-                for e in man.entries
-                if e["stage"] == "term_dict"
-                and e["status"] == "done"
-                and e.get("rows", -1) >= 0
-            ),
-            None,
-        )
-        if n_terms is None:
-            n_terms = fmt.read(spark, index_dir, "term_dict").count()
+        # the term_dict commit recorded its exact row count (an
+        # Observation inside the write) — reuse it instead of re-scanning
+        # the table
+        n_terms = man.entry("term_dict")["rows"]
         write_stats(
             index_dir,
             {
@@ -611,18 +593,10 @@ def build_from_turns(
                 # generations: dict_gens = the partitions composing the
                 # live dictionary (gen 0 = this build's full snapshot;
                 # appends/deletes add DELTA partitions resolved last-
-                # writer-wins, sources.tables.resolve_term_dict);
-                # dict_gen = the newest, kept for back-compat; gens =
-                # row-store data generations present
-                "dict_gen": 0,
+                # writer-wins, sources.tables.resolve_term_dict); gens =
+                # live row-store (turns/doc_meta) generations
                 "dict_gens": [0],
                 "gens": [0],
-                # no delete has ever run, so the row stores vacuously
-                # hold no dead rows; with tombstones_unpurged == 0 this
-                # marker lets get_doc skip the registry anti-join (a
-                # purge-compact restores it after deletes).  Indexes
-                # compacted by pre-purge code never carry it.
-                "rows_purged": True,
                 # live postings/blocks generations: the query path
                 # partition-prunes to exactly these, so a half-written
                 # generation (crashed append/compact) is invisible until

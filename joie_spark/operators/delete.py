@@ -37,13 +37,17 @@ anti-join on its input), rewrites ONLY the turns/doc_meta generations
 that held dead docs (minus the dead rows — storage fully reclaimed
 without touching clean generations), and resets the hot-path filter
 (stats.tombstones_unpurged = 0).  The tombstones table is retained as
-the conversation registry — re-appends and get_doc consult it — and doc
-ids are retired, never reused (append starts at the stats.n_docs
-high-water mark, which a purge never lowers).
+the conversation registry that re-appends consult, and doc ids are
+retired, never reused (append starts at the stats.n_docs high-water
+mark, which a purge never lowers).
 
 Everything is manifest-logged and resumable mid-delete, same recipe as
 append: begin (pins the target set + base stats) → tombstones →
 term_dict → stats/commit, each stage an idempotent per-gen overwrite.
+The final stats come from the begin-time bases plus the counts the
+tombstones and term_dict stages record on their commits; an index or
+manifest written by an older format is rejected (sources.tables
+read_stats), not re-aggregated.
 
 Cadence guidance (VERDICT r4): each delete op costs a fixed ~3 driver
 validation jobs plus one tombstone generation and one dictionary DELTA
@@ -63,11 +67,13 @@ from pyspark.sql import functions as F
 
 from ..sources.tables import (
     Manifest,
+    dict_gens_of,
     format_by_name,
+    live,
     read_stats,
     write_stats,
 )
-from .append import _all_known_gens, _live_dict, _live_rows
+from .append import _all_known_gens, _live_dict
 from .build import term_stats_of
 
 
@@ -125,7 +131,7 @@ def delete_convs(
             "delete_convs: an append is pending — resume it to completion first"
         )
     stats = read_stats(index_dir)
-    fmt = format_by_name(stats.get("table_format", "parquet"))
+    fmt = format_by_name(stats["table_format"])
 
     convs = (
         conv_ids.select("conv_id")
@@ -149,12 +155,14 @@ def delete_convs(
     else:
         gen = 1 + max(_all_known_gens(man, stats, index_dir, fmt))
         # resolve + validate: every conv must exist and not be tombstoned
-        doc_meta = _live_rows(fmt.read(spark, index_dir, "doc_meta"), stats)
+        doc_meta = live(fmt.read(spark, index_dir, "doc_meta"), stats["gens"])
         tomb = tombstone_docs(spark, fmt, index_dir)
-        live = doc_meta.select("doc_id", "conv_id")
+        live_docs = doc_meta.select("doc_id", "conv_id")
         if tomb is not None:
-            live = live.join(tomb.select("doc_id"), "doc_id", "left_anti")
-        matched = live.join(convs, "conv_id", "left_semi")
+            live_docs = live_docs.join(
+                tomb.select("doc_id"), "doc_id", "left_anti"
+            )
+        matched = live_docs.join(convs, "conv_id", "left_semi")
         # one agg over the target set yields both the request count and
         # the begin fingerprint (they were two separate jobs)
         agg0 = convs.agg(
@@ -181,7 +189,7 @@ def delete_convs(
     unit = f"gen={gen}"
     if not man.is_done("delete_tombstones", unit):
         targets = (
-            _live_rows(fmt.read(spark, index_dir, "doc_meta"), stats)
+            live(fmt.read(spark, index_dir, "doc_meta"), stats["gens"])
             .select("doc_id", "conv_id")
             .join(convs, "conv_id", "left_semi")
         )
@@ -205,19 +213,6 @@ def delete_convs(
         # tombstones are one row per doc, so this IS the deleted-doc
         # count the stats section needs (saves its countDistinct job)
         man.commit("delete_tombstones", unit, n_docs=int(obs.get["n"]))
-    # the committed gen slice IS the target set (stable across resumes)
-    targets = (
-        fmt.read(spark, index_dir, "tombstones")
-        .where(F.col("gen") == gen)
-        .select("doc_id", "conv_id")
-    )
-
-    # _live_rows: a gen half-written by a crashed purge-compact holds
-    # duplicate live rows — reading it here would double the df/cf/dl
-    # decrements below
-    deleted_turns = _live_rows(fmt.read(spark, index_dir, "turns"), stats).join(
-        targets.select("doc_id"), "doc_id", "left_semi"
-    )
 
     # ---- dictionary DELTA: only the terms the deleted turns contained,
     # with df/cf decremented (ids stable; a term reaching df=0 keeps its
@@ -231,6 +226,18 @@ def delete_convs(
         from pyspark.sql import Observation
 
         t0 = time.time()
+        # the committed gen slice IS the target set (stable across
+        # resumes); live(): a gen half-written by a crashed purge-compact
+        # holds duplicate live rows — reading it here would double the
+        # df/cf/dl decrements below
+        targets = (
+            fmt.read(spark, index_dir, "tombstones")
+            .where(F.col("gen") == gen)
+            .select("doc_id")
+        )
+        deleted_turns = live(
+            fmt.read(spark, index_dir, "turns"), stats["gens"]
+        ).join(targets, "doc_id", "left_semi")
         old = _live_dict(spark, fmt, index_dir, stats)
         # the deleted turn/dl totals ride this write (the only pass that
         # scans the deleted turns) instead of a separate agg job
@@ -264,54 +271,23 @@ def delete_convs(
         )
 
     # ---- stats (from begin-time bases — idempotent on resume).  The
-    # deleted turn/dl/doc totals come from the stage commits above; a
-    # resume over a pre-round-6 manifest re-aggregates as before. ----
-    tent = next(
-        (
-            e
-            for e in man.entries
-            if e["stage"] == "delete_term_dict" and e["unit"] == unit
-            and "n" in e and "dl" in e
-        ),
-        None,
-    )
-    dent = next(
-        (
-            e
-            for e in man.entries
-            if e["stage"] == "delete_tombstones" and e["unit"] == unit
-            and "n_docs" in e
-        ),
-        None,
-    )
-    if tent is not None and dent is not None:
-        d = {
-            "n": int(tent["n"]),
-            "dl": int(tent["dl"]),
-            "docs": int(dent["n_docs"]),
-        }
-    else:
-        d = deleted_turns.agg(
-            F.count("*").alias("n"), F.sum("dl").alias("dl"),
-            F.countDistinct("doc_id").alias("docs"),
-        ).collect()[0]
-    new_n = base_n - int(d["n"])
+    # deleted turn/dl/doc totals come from the stage commits above. ----
+    tent = man.entry("delete_term_dict", unit)
+    n_docs = int(man.entry("delete_tombstones", unit)["n_docs"])
+    new_n = base_n - int(tent["n"])
     if new_n <= 0:
         raise ValueError("delete_convs would empty the index; rebuild instead")
-    from ..sources.tables import dict_gens_of
-
     stats.update(
         {
             "N": new_n,
-            "total_dl": base_total_dl - int(d["dl"]),
-            "avgdl": (base_total_dl - int(d["dl"])) / new_n,
-            "dict_gen": gen,
+            "total_dl": base_total_dl - int(tent["dl"]),
+            "avgdl": (base_total_dl - int(tent["dl"])) / new_n,
             "dict_gens": sorted(set(dict_gens_of(stats)) | {gen}),
-            "tombstones_unpurged": base_unpurged + int(d["docs"]),
+            "tombstones_unpurged": base_unpurged + n_docs,
         }
     )
     write_stats(index_dir, stats)
-    rows = int(d["n"]) if collect_metrics else -1
+    rows = int(tent["n"]) if collect_metrics else -1
     man.commit("delete", unit, rows=rows, N=new_n)
     return man
 

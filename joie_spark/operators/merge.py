@@ -43,7 +43,7 @@ from .build import assign_dense_ids, build_from_turns, release_dense_ids
 def _shard_format(shard_dir: str):
     """Each shard reads with the format its own build recorded."""
     try:
-        return format_by_name(read_stats(shard_dir).get("table_format", "parquet"))
+        return format_by_name(read_stats(shard_dir)["table_format"])
     except FileNotFoundError:
         return format_by_name("parquet")
 

@@ -47,7 +47,14 @@ from ..plans.parser import (
     Within,
     parse_query,
 )
-from ..sources.tables import read_stats, table_path
+from ..sources.tables import (
+    dict_gens_of,
+    format_by_name,
+    live,
+    read_stats,
+    resolve_term_dict,
+    table_path,
+)
 from ..tokenizer import tokenize_terms
 
 RESULT_SCHEMA = T.StructType(
@@ -298,28 +305,28 @@ def _phrase_term_ids(node: PNode) -> set[int]:
 
 
 class Index:
-    """Reader over an index directory built by operators.build."""
+    """Reader over an index directory built by operators.build, in the
+    current format only: sources.tables.read_stats rejects a stats.json
+    that lacks a field every current writer records.  Every table is
+    partition-pruned to its committed generations (sources.tables.live)."""
 
     def __init__(self, spark: SparkSession, index_dir: str):
-        from ..sources.tables import format_by_name
-
         self.spark = spark
         self.index_dir = index_dir
         self.stats = read_stats(index_dir)
-        # table format pinned at build time (stats.json); parquet default
-        self.fmt = format_by_name(self.stats.get("table_format", "parquet"))
-        self.turns = self._live_row_gens(self.fmt.read(spark, index_dir, "turns"))
-        self.postings = self._live_gens(
-            self.fmt.read(spark, index_dir, "postings")
+        # table format pinned at build time (stats.json)
+        self.fmt = format_by_name(self.stats["table_format"])
+        self.turns = live(
+            self.fmt.read(spark, index_dir, "turns"), self.stats["gens"]
+        )
+        self.postings = live(
+            self.fmt.read(spark, index_dir, "postings"), self.stats["post_gens"]
         )
         # the dictionary is a base snapshot plus per-append/delete DELTA
         # partitions (stats.dict_gens); resolve_term_dict partition-prunes
         # to the live set and merges last-writer-wins per term.  Filters
         # on term/term_id (the grouping keys) still push into the scan;
-        # a single-gen set keeps the pre-delta plan (pure partition
-        # filter, no shuffle).
-        from ..sources.tables import dict_gens_of, resolve_term_dict
-
+        # a single-gen set is a pure partition filter (no shuffle).
         self.term_dict = resolve_term_dict(
             self.fmt.read(spark, index_dir, "term_dict"),
             dict_gens_of(self.stats),
@@ -329,13 +336,13 @@ class Index:
         self._doc_stats: tuple[int, float] | None = None
         self._dfd_cache: dict[int, int] = {}
         self._tombstones: DataFrame | None | bool = False  # False = unread
-        self._registry_tombstones: DataFrame | None | bool = False
 
     @property
     def doc_meta(self) -> DataFrame:
         if self._doc_meta is None:
-            self._doc_meta = self._live_row_gens(
-                self.fmt.read(self.spark, self.index_dir, "doc_meta")
+            self._doc_meta = live(
+                self.fmt.read(self.spark, self.index_dir, "doc_meta"),
+                self.stats["gens"],
             )
         return self._doc_meta
 
@@ -346,17 +353,10 @@ class Index:
         (block_id = doc_id // docs_per_block, build.py:323).  Distinct from stats["N"], which counts TURNS (the
         BM25 scoring unit): a doc (conversation) holds ~a dozen turns, so
         deriving the block count from N overestimates it by that factor
-        and mis-routes the batch path (direct vs pruned).  Stored in
-        stats since the fix; computed once from doc_meta for indexes
-        built before it.  Stays a valid bound after delete/compact —
-        dense ids are never reassigned, only retired."""
-        v = self.stats.get("n_docs")
-        if v is None:
-            v = int(
-                self.doc_meta.agg(F.max("doc_id")).collect()[0][0] or 0
-            ) + 1
-            self.stats["n_docs"] = v
-        return int(v)
+        and mis-routes the batch path (direct vs pruned).  Stays a valid
+        bound after delete/compact — dense ids are never reassigned, only
+        retired."""
+        return int(self.stats["n_docs"])
 
     def doc_stats(self) -> tuple[int, float]:
         """(n_docs_registered, avgdl_doc): conversation-level BM25 corpus
@@ -382,39 +382,13 @@ class Index:
     def total_blocks(self) -> int:
         return -(-self.n_docs // int(self.stats["docs_per_block"]))
 
-    def _live_gens(self, df: DataFrame) -> DataFrame:
-        """Partition-prune postings/blocks to the COMMITTED generations
-        (stats.post_gens).  A generation a crashed append/compact half
-        wrote is not in the set until its stats commit lands, so queries
-        never read partial slices (ADVICE r3).  Pre-post_gens indexes
-        carry no set → read everything, the legacy behavior."""
-        pg = self.stats.get("post_gens")
-        if pg is None or "gen" not in df.columns:
-            return df
-        return df.where(F.col("gen").isin([int(g) for g in pg]))
-
-    def _live_row_gens(self, df: DataFrame) -> DataFrame:
-        """Partition-prune the turns/doc_meta ROW stores to the live
-        generation set (stats.gens).  Compaction rewrites the row-store
-        generations that contained tombstoned documents (physical purge,
-        operators/append.py compact_index), so — exactly like post_gens
-        for postings/blocks — a generation a crashed compact half wrote is
-        invisible until its stats commit lands.  Pre-gens indexes carry no
-        set → read everything, the legacy behavior."""
-        rg = self.stats.get("gens")
-        if rg is None or "gen" not in df.columns:
-            return df
-        return df.where(F.col("gen").isin([int(g) for g in rg]))
-
     @property
     def blocks(self) -> DataFrame:
         if self._blocks is None:
-            b = self._live_gens(self.fmt.read(self.spark, self.index_dir, "blocks"))
-            if "enc_avgdl" not in b.columns:
-                # pre-append-format index: all blocks were encoded with the
-                # index's (only) avgdl — the WAND ub correction is then 1
-                b = b.withColumn("enc_avgdl", F.lit(float(self.stats["avgdl"])))
-            self._blocks = b
+            self._blocks = live(
+                self.fmt.read(self.spark, self.index_dir, "blocks"),
+                self.stats["post_gens"],
+            )
         return self._blocks
 
     @property
@@ -422,8 +396,11 @@ class Index:
         """doc_ids deleted but not yet physically purged by compaction
         (operators/delete.py), or None when no filter is needed.  Gated on
         stats.tombstones_unpurged so indexes that never saw a delete —
-        and compacted ones, where dead docs have no postings left — pay
-        nothing."""
+        and compacted ones, where dead docs have no postings and no
+        turns/doc_meta rows left — pay nothing.  The one tombstone handle
+        for every path: scoring, get_doc and describe.  Cached on the
+        Index handle — the Engine reloads the Index on delete/compact, so
+        per-call table re-reads are avoided (ADVICE r4)."""
         if self._tombstones is False:
             if int(self.stats.get("tombstones_unpurged", 0)) > 0:
                 self._tombstones = self.fmt.read(
@@ -432,39 +409,6 @@ class Index:
             else:
                 self._tombstones = None
         return self._tombstones
-
-    @property
-    def registry_tombstones(self) -> DataFrame | None:
-        """The FULL tombstone registry (doc_id of every doc ever deleted),
-        or None when no delete ever ran.  Unlike `tombstones` this is NOT
-        gated on tombstones_unpurged: compaction now purges the row stores
-        too (compact_index rewrites the turns/doc_meta generations holding
-        dead docs), but indexes compacted before that existed still carry
-        lingering dead rows, and between a delete and the next compact the
-        rows are present either way — so row-store point lookups
-        (Engine.get_doc) keep filtering; post-purge the anti-join matches
-        nothing.  Cached on the Index handle — the Engine reloads the
-        Index on delete/compact, so per-call table re-reads are avoided
-        (ADVICE r4)."""
-        if self._registry_tombstones is False:
-            if self.stats.get("rows_purged") and not int(
-                self.stats.get("tombstones_unpurged", 0)
-            ):
-                # stats.rows_purged: every registered tombstone is
-                # physically absent from the row stores (set vacuously at
-                # build, re-established by each purge-compact) — with no
-                # unpurged deletes the anti-join could match nothing, so
-                # skip the registry read entirely.  Legacy indexes
-                # (compacted pre-purge) lack the marker and keep filtering.
-                self._registry_tombstones = None
-            else:
-                from .delete import tombstone_docs
-
-                t = tombstone_docs(self.spark, self.fmt, self.index_dir)
-                self._registry_tombstones = (
-                    None if t is None else t.select("doc_id")
-                )
-        return self._registry_tombstones
 
     def exclude_tombstones(self, df: DataFrame) -> DataFrame:
         """Anti-join `df` (any doc_id-carrying frame) against the deleted
@@ -1524,30 +1468,6 @@ def _batch_pred_sql(
             f"({_batch_pred_sql(c, bitpos, n_words)})" for c in node.children
         )
     raise TypeError(type(node))
-
-
-def search_many(
-    ix: Index,
-    queries: list[str],
-    k: int = 10,
-    where: str | None = None,
-    where_doc: str | None = None,
-    optimize: bool = True,
-    mode: str = "auto",
-    probe_blocks: int = 8,
-    direct_threshold: int = 32768,
-    stats_out: dict | None = None,
-) -> DataFrame:
-    """Batch BM25 top-k — see operators/batch.py (block-max pruned batch
-    path over the compressed blocks table + positional postings fallback
-    for phrase queries).  Kept here as the stable entry point."""
-    from .batch import search_many as _sm
-
-    return _sm(
-        ix, queries, k=k, where=where, where_doc=where_doc,
-        optimize=optimize, mode=mode, probe_blocks=probe_blocks,
-        direct_threshold=direct_threshold, stats_out=stats_out,
-    )
 
 
 def match_set(ix: Index, query: str, optimize: bool = True) -> DataFrame:

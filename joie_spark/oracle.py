@@ -461,17 +461,6 @@ def collapse_ranges(ranges: list[tuple[int, int]]) -> list[tuple[int, int]]:
     return out
 
 
-def highlight_keyword(turn: Turn, qterms: list[int]) -> list[tuple[int, int]]:
-    """Keyword highlighter (keywords.rs:102-128): byte ranges of every
-    occurrence of each query term, sorted by start."""
-    ranges = []
-    for t in qterms:
-        for pos in turn.positions.get(t, ()):
-            ranges.append(turn.tokens[pos])
-    ranges.sort(key=lambda r: r[0])
-    return ranges
-
-
 def highlight_phrase(turn: Turn, phrase: list[int]) -> list[tuple[int, int]]:
     """Phrase highlighter (phrase.rs:104-126): [start of first token ..
     end of last token] per adjacency occurrence."""

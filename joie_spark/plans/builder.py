@@ -307,27 +307,9 @@ class QueryBuilder:
 
     def highlighted(self, k: int = 10) -> DataFrame:
         """top-k + snippet parts (joie always snippets, README.md:5)."""
-        from ..operators.highlight import add_highlights
-        from ..tokenizer import tokenize_terms
+        from ..operators.highlight import add_highlights, highlight_phrases
 
         res = self.top_k(k)
-        phrases = [
-            tokenize_terms(t) for t in _literal_texts(self._require_expr())
-        ]
-        return add_highlights(res, self._engine.index.turns, phrases, [])
-
-
-def _literal_texts(expr: Expr) -> list[str]:
-    if isinstance(expr, Literal):
-        return [expr.text]
-    if isinstance(expr, Near):
-        return [expr.lhs, expr.rhs]  # both sides keyword-highlighted
-    if isinstance(expr, MinShould):
-        return list(expr.words)
-    if isinstance(expr, Within):
-        return list(expr.words)  # every word keyword-highlighted
-    if isinstance(expr, (Fuzzy, Prefix, Regex)):
-        return []  # dictionary-expanded, not highlighted
-    if isinstance(expr, AndNot):
-        return _literal_texts(expr.lhs)  # prohibited terms never highlight
-    return _literal_texts(expr.lhs) + _literal_texts(expr.rhs)
+        return add_highlights(
+            res, self._engine.index.turns, highlight_phrases(self._require_expr())
+        )

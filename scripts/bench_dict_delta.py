@@ -119,7 +119,7 @@ def main() -> None:
     convs = [
         r["conv_id"]
         for r in ix.doc_meta.select("conv_id").distinct().limit(
-            max(1, int(ix.stats.get("n_docs", n_turns // 10) * args.pct))
+            max(1, int(ix.stats["n_docs"] * args.pct))
         ).collect()
     ]
     t0 = time.time()
@@ -132,7 +132,7 @@ def main() -> None:
         if e["stage"] == "delete_term_dict"
     )
     st = read_stats(dst)
-    gen = st["dict_gen"]
+    gen = st["dict_gens"][-1]
     delta_rows = (
         spark.read.parquet(dst + "/term_dict").where(f"gen={gen}").count()
     )

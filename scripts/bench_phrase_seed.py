@@ -130,9 +130,10 @@ def main() -> None:
         if not name.startswith("pruning_ix_"):
             continue
         ix = os.path.join(cache, name)
-        if not os.path.exists(os.path.join(ix, "stats.json")):
-            continue
-        eng = Engine(spark, ix)
+        try:
+            eng = Engine(spark, ix)
+        except (FileNotFoundError, ValueError):
+            continue  # unbuilt, or cached by an older index format
         hot, hdf, rare, rdf = pick_terms(spark, eng)
         q = f'"{hot} {rare}"'
         s_on, s_off = ab(eng, q, args.reps)

@@ -41,6 +41,7 @@ import argparse
 import itertools
 import json
 import os
+import shutil
 import sys
 import time
 
@@ -116,13 +117,18 @@ def corpus_for(convs: int, burst: float, spark) -> str:
 
 def index_for(convs: int, dpb: int, burst: float, spark) -> "object":
     from joie_spark.engine import Engine
+    from joie_spark.sources.tables import read_stats
 
     src = corpus_for(convs, burst, spark)
     suffix = f"_b{int(burst * 100)}" if burst else ""
     ix_dir = os.path.join(
         REPO, ".cache", f"pruning_ix_{convs}_dpb{dpb}{suffix}"
     )
-    if not os.path.exists(os.path.join(ix_dir, "stats.json")):
+    try:
+        read_stats(ix_dir)
+    except (FileNotFoundError, ValueError):
+        # absent, or cached by an older index format: build it afresh
+        shutil.rmtree(ix_dir, ignore_errors=True)
         t0 = time.time()
         Engine.build(
             spark, src, ix_dir, n_buckets=N_BUCKETS, docs_per_block=dpb,

@@ -16,8 +16,11 @@ trap 'rm -rf "$WORK"' EXIT
 python - "$WORK/corpus.parquet" <<'EOF'
 import sys
 sys.path.insert(0, "/root/repo")
-from joie_spark.corpus import write_corpus
-print("turns:", write_corpus(sys.argv[1], 40))
+import pyarrow.parquet as pq
+from joie_spark.corpus import generate_rows, to_arrow
+rows = generate_rows(40)
+pq.write_table(to_arrow(rows), sys.argv[1])
+print("turns:", len(rows))
 EOF
 
 "$SPARK_SUBMIT" \

@@ -1,4 +1,5 @@
 import os
+import shutil
 import sys
 
 import pytest
@@ -22,14 +23,44 @@ def t1_rows():
 
 
 @pytest.fixture(scope="session")
-def t1_index_dir(spark, t1_rows, tmp_path_factory):
-    """Index built once over the t1 corpus."""
+def t1_built(spark, t1_rows, tmp_path_factory):
+    """Factory: the directory of a t1 index built once per distinct set of
+    build arguments.  Shared across the session, so callers must never
+    mutate it — use `t1_index_copy` for an index a test changes."""
     from joie_spark.operators.build import build_index
 
-    d = str(tmp_path_factory.mktemp("index_t1"))
-    df = spark.createDataFrame(t1_rows)
-    build_index(spark, df, d, n_buckets=8, docs_per_block=8, block_chunks=2)
-    return d
+    built: dict[tuple, str] = {}
+
+    def get(**kw) -> str:
+        key = tuple(sorted(kw.items()))
+        if key not in built:
+            d = str(tmp_path_factory.mktemp("index_t1"))
+            build_index(spark, spark.createDataFrame(t1_rows), d, **kw)
+            built[key] = d
+        return built[key]
+
+    return get
+
+
+@pytest.fixture(scope="session")
+def t1_index_copy(spark, t1_built, tmp_path_factory):
+    """Factory: a private copy of the t1 index built with `kw`, opened as
+    an Engine — the same index `Engine.build(spark, t1 rows, d, **kw)`
+    would produce, at the cost of a directory copy."""
+    from joie_spark.engine import Engine
+
+    def copy(**kw) -> "Engine":
+        d = str(tmp_path_factory.mktemp("index_t1_copy"))
+        shutil.copytree(t1_built(**kw), d, dirs_exist_ok=True)
+        return Engine(spark, d)
+
+    return copy
+
+
+@pytest.fixture(scope="session")
+def t1_index_dir(t1_built):
+    """Index built once over the t1 corpus."""
+    return t1_built(n_buckets=8, docs_per_block=8, block_chunks=2)
 
 
 @pytest.fixture(scope="session")

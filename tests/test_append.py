@@ -38,15 +38,14 @@ def _by_conv(eng, q, **kw):
 
 
 @pytest.fixture(scope="module")
-def appended(spark, t1_rows, tmp_path_factory):
+def appended(spark, t1_rows, tmp_path_factory, t1_index_copy):
     """full = build(a∪b); inc = build(a) then append(b)."""
     from joie_spark.engine import Engine
 
     a, b = _split_rows(t1_rows)
-    d_full = str(tmp_path_factory.mktemp("ix_full"))
     d_inc = str(tmp_path_factory.mktemp("ix_inc"))
     kw = dict(n_buckets=8, docs_per_block=8, block_chunks=2)
-    full = Engine.build(spark, spark.createDataFrame(t1_rows), d_full, **kw)
+    full = t1_index_copy(**kw)
     inc = Engine.build(spark, spark.createDataFrame(a), d_inc, **kw)
     inc.append(spark.createDataFrame(b))
     return full, inc
@@ -121,7 +120,9 @@ def test_append_requires_complete_build(spark, t1_rows, tmp_path):
         append_index(spark, spark.createDataFrame(t1_rows), str(tmp_path / "nope"))
 
 
-def test_append_resumes_after_crash(spark, t1_rows, tmp_path, monkeypatch):
+def test_append_resumes_after_crash(
+    spark, t1_rows, tmp_path, monkeypatch, t1_index_copy
+):
     """Kill the append mid-way (first postings write of the delta gen),
     re-run it, and require the result to match an uncrashed append."""
     from joie_spark.engine import Engine
@@ -152,29 +153,19 @@ def test_append_resumes_after_crash(spark, t1_rows, tmp_path, monkeypatch):
     eng.append(spark.createDataFrame(b))  # resume completes
     man = Manifest.load(d)
     assert sum(1 for e in man.entries if e["stage"] == "append") == 1
-    d_ref = str(tmp_path / "ix_ref")
-    ref = Engine.build(
-        spark, spark.createDataFrame(t1_rows), d_ref, n_buckets=8,
-        docs_per_block=8, block_chunks=1,
-    )
+    ref = t1_index_copy(n_buckets=8, docs_per_block=8, block_chunks=1)
     for q in ["roll OR dice", '"crystal kingdom"']:
         assert _by_conv(eng, q, mode="exhaustive") == _by_conv(
             ref, q, mode="exhaustive"
         ), q
 
 
-def test_wand_sound_under_extreme_avgdl_drift(spark, t1_rows, tmp_path):
+def test_wand_sound_under_extreme_avgdl_drift(spark, t1_rows, t1_index_copy):
     """Append documents ~20x longer than the base corpus so avgdl jumps
     hard: every pruned path (auto single = batch of one, batch direct,
     batch forced-θ) must still equal the exhaustive scorer — the enc_avgdl ub correction
     is exactly what keeps stale block-max bounds sound here."""
-    from joie_spark.engine import Engine
-
-    d = str(tmp_path / "ix_drift")
-    eng = Engine.build(
-        spark, spark.createDataFrame(t1_rows), d, n_buckets=8,
-        docs_per_block=8, block_chunks=1,
-    )
+    eng = t1_index_copy(n_buckets=8, docs_per_block=8, block_chunks=1)
     avgdl_before = eng.index.stats["avgdl"]
     ts = t1_rows[0]["ts"]
     filler = " ".join(f"filler{j % 40}" for j in range(260))
@@ -209,7 +200,9 @@ def _split3(t1_rows):
     return a, b1, b2
 
 
-def test_append_after_compact_preserves_index(spark, t1_rows, tmp_path):
+def test_append_after_compact_preserves_index(
+    spark, t1_rows, tmp_path, t1_index_copy
+):
     """ADVICE r3 (high): the append AFTER a compaction must pick a fresh
     generation — reusing the compacted gen number would overwrite the
     full compacted postings/blocks with delta-only data (silent loss of
@@ -227,12 +220,11 @@ def test_append_after_compact_preserves_index(spark, t1_rows, tmp_path):
     compacted_gen = read_stats(d_inc)["compacted_gen"]
     eng.append(spark.createDataFrame(b2))
     # the new delta landed in a generation the compaction never used
-    assert read_stats(d_inc)["dict_gen"] > compacted_gen
+    assert read_stats(d_inc)["dict_gens"][-1] > compacted_gen
     assert sorted(read_stats(d_inc)["post_gens"]) == sorted(
-        {compacted_gen, read_stats(d_inc)["dict_gen"]}
+        {compacted_gen, read_stats(d_inc)["dict_gens"][-1]}
     )
-    d_full = str(tmp_path / "ix_full")
-    full = Engine.build(spark, spark.createDataFrame(t1_rows), d_full, **kw)
+    full = t1_index_copy(**kw)
     assert full.index.stats["N"] == eng.index.stats["N"]
     assert full.index.stats["avgdl"] == eng.index.stats["avgdl"]
     for q in QUERIES:

@@ -91,11 +91,6 @@ def test_block_count_derives_from_docs_not_turns(t1_engine):
     assert stats["path"] == "direct"
     assert stats["total_blocks"] == 7
 
-    # pre-fix indexes have no n_docs stat → derived once from doc_meta
-    ix.stats.pop("n_docs")
-    assert ix.n_docs == 51
-    assert ix.stats["n_docs"] == 51  # cached back
-
 
 def test_search_many_blocks_mode_rejects_phrases(t1_engine):
     with pytest.raises(ValueError, match="phrase"):

@@ -223,6 +223,24 @@ def test_collapsed_highlighted(t1_engine):
         assert parts == ref[(r["doc_id"], r["turn_idx"])]
 
 
+def test_collapsed_highlighted_skips_prohibited_words(t1_engine):
+    """Words of a prohibited clause (the right side of an AndNot) never
+    highlight: here that clause matches nothing, so every best turn of a
+    "roll" document is returned, and turns that also contain "dice" must
+    not have it marked."""
+    from joie_spark.tokenizer import tokenize_terms
+
+    b = t1_engine.builder()
+    q = b.keywords("roll") - (b.phrase("dice") & b.phrase("zzqxoov"))
+    rows = t1_engine.search_collapsed_highlighted(q, k=50).collect()
+    dice = tokenize_terms("dice")
+    assert any(set(dice) <= set(tokenize_terms(r["text"])) for r in rows)
+    for r in rows:
+        marked = [p["text"] for p in r["parts"] if p["kind"] == "highlight"]
+        assert marked, r["text"]
+        assert all(tokenize_terms(t) != dice for t in marked), marked
+
+
 def test_describe(t1_engine, t1_oracle, t1_rows):
     d = t1_engine.describe()
     assert d["n_turns"] == len(t1_rows)

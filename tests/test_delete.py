@@ -36,16 +36,15 @@ def _by_conv(eng, q, **kw):
 
 
 @pytest.fixture(scope="module")
-def deleted(spark, t1_rows, tmp_path_factory):
+def deleted(spark, t1_rows, tmp_path_factory, t1_index_copy):
     """ref = build(kept); eng = build(all) then delete(the rest)."""
     from joie_spark.engine import Engine
 
     a, gone = _split(t1_rows)
     kw = dict(n_buckets=8, docs_per_block=8, block_chunks=1)
     d_ref = str(tmp_path_factory.mktemp("ix_del_ref"))
-    d_eng = str(tmp_path_factory.mktemp("ix_del"))
     ref = Engine.build(spark, spark.createDataFrame(a), d_ref, **kw)
-    eng = Engine.build(spark, spark.createDataFrame(t1_rows), d_eng, **kw)
+    eng = t1_index_copy(**kw)
     eng.delete(gone)
     return ref, eng, gone
 
@@ -115,7 +114,9 @@ def test_delete_validates_targets(deleted, spark):
         eng.delete([gone[0]])  # double delete
 
 
-def test_delete_then_append_is_exact_update(spark, t1_rows, tmp_path):
+def test_delete_then_append_is_exact_update(
+    spark, t1_rows, tmp_path, t1_index_copy
+):
     from joie_spark.engine import Engine
 
     kw = dict(n_buckets=8, docs_per_block=8, block_chunks=1)
@@ -125,8 +126,7 @@ def test_delete_then_append_is_exact_update(spark, t1_rows, tmp_path):
         r["turn_idx"] = i
         r["text"] = "crystal dice reborn version " + str(i)
 
-    d_eng = str(tmp_path / "ix_upd")
-    eng = Engine.build(spark, spark.createDataFrame(t1_rows), d_eng, **kw)
+    eng = t1_index_copy(**kw)
     eng.delete([victim])
     eng.append(spark.createDataFrame(updated))  # same conv_id — now allowed
 
@@ -142,14 +142,13 @@ def test_delete_then_append_is_exact_update(spark, t1_rows, tmp_path):
         assert _by_conv(eng, q) == _by_conv(ref, q), q
 
 
-def test_compact_purges_tombstones(spark, t1_rows, tmp_path):
-    from joie_spark.engine import Engine
+def test_compact_purges_tombstones(spark, t1_rows, t1_index_copy):
     from joie_spark.sources.tables import read_stats
 
     kw = dict(n_buckets=8, docs_per_block=8, block_chunks=1)
     a, gone = _split(t1_rows)
-    d = str(tmp_path / "ix_purge")
-    eng = Engine.build(spark, spark.createDataFrame(t1_rows), d, **kw)
+    eng = t1_index_copy(**kw)
+    d = eng.index.index_dir
     n_before = eng.index.postings.count()
     eng.delete(gone)
     assert read_stats(d)["tombstones_unpurged"] == len(gone)
@@ -169,15 +168,17 @@ def test_compact_purges_tombstones(spark, t1_rows, tmp_path):
     eng.delete([gone[0]])
 
 
-def test_delete_resume_after_crash(spark, t1_rows, tmp_path, monkeypatch):
+def test_delete_resume_after_crash(
+    spark, t1_rows, tmp_path, monkeypatch, t1_index_copy
+):
     from joie_spark.engine import Engine
     from joie_spark.operators.delete import delete_convs
     from joie_spark.sources.tables import ParquetManifestFormat, read_stats
 
     kw = dict(n_buckets=8, docs_per_block=8, block_chunks=1)
     a, gone = _split(t1_rows)
-    d = str(tmp_path / "ix_del_crash")
-    eng = Engine.build(spark, spark.createDataFrame(t1_rows), d, **kw)
+    eng = t1_index_copy(**kw)
+    d = eng.index.index_dir
 
     real_write = ParquetManifestFormat.write
 
@@ -210,7 +211,7 @@ def test_delete_resume_after_crash(spark, t1_rows, tmp_path, monkeypatch):
 
 
 def test_delete_resume_rejects_colliding_conv_set(
-    spark, t1_rows, tmp_path, monkeypatch
+    spark, t1_rows, monkeypatch, t1_index_copy
 ):
     """VERDICT r4 item 4 / ADVICE r4: the resume guard must reject a
     DIFFERENT conv set even when its count, min and max conv_id all
@@ -219,18 +220,14 @@ def test_delete_resume_rejects_colliding_conv_set(
     tombstone slice instead of what the caller asked for)."""
     import pytest
 
-    from joie_spark.engine import Engine
     from joie_spark.operators.delete import delete_convs
     from joie_spark.sources.tables import ParquetManifestFormat
 
     convs = sorted({r["conv_id"] for r in t1_rows})
     target = [convs[10], convs[11], convs[20]]
     collider = [convs[10], convs[12], convs[20]]  # same count/min/max
-    d = str(tmp_path / "ix_del_collide")
-    eng = Engine.build(
-        spark, spark.createDataFrame(t1_rows), d, n_buckets=8,
-        docs_per_block=8, block_chunks=1,
-    )
+    eng = t1_index_copy(n_buckets=8, docs_per_block=8, block_chunks=1)
+    d = eng.index.index_dir
 
     real_write = ParquetManifestFormat.write
 
@@ -324,13 +321,15 @@ def test_compact_purges_row_stores(spark, t1_rows, tmp_path):
     assert new_id >= int(st["n_docs"])
 
 
-def test_compact_row_purge_crash_resume(spark, t1_rows, tmp_path, monkeypatch):
+def test_compact_row_purge_crash_resume(
+    spark, t1_rows, tmp_path, monkeypatch, t1_index_copy
+):
     """A purge-compact that crashes after writing its row-store rewrite
     but before the stats commit leaves a half-written turns generation
     holding DUPLICATE copies of live rows.  That generation must stay
     invisible: queries keep answering from the old generations, a
     subsequent delete must not double-count the duplicated rows in its
-    df/dl decrements (operators/append.py _live_rows), and a retried
+    df/dl decrements (sources.tables.live), and a retried
     compact completes and matches a rebuild of the survivors."""
     from joie_spark.engine import Engine
     from joie_spark.operators.append import _gen_dirs
@@ -342,8 +341,8 @@ def test_compact_row_purge_crash_resume(spark, t1_rows, tmp_path, monkeypatch):
 
     kw = dict(n_buckets=8, docs_per_block=8, block_chunks=1)
     a, gone = _split(t1_rows)
-    d = str(tmp_path / "ix_purge_crash")
-    eng = Engine.build(spark, spark.createDataFrame(t1_rows), d, **kw)
+    eng = t1_index_copy(**kw)
+    d = eng.index.index_dir
     eng.delete(gone[:10])
     before = {q: _by_conv(eng, q) for q in QUERIES[:3]}
 
@@ -385,22 +384,15 @@ def test_compact_row_purge_crash_resume(spark, t1_rows, tmp_path, monkeypatch):
         assert _by_conv(eng, q) == _by_conv(ref, q), q
 
 
-def test_get_doc_skips_registry_after_purge(spark, t1_rows, tmp_path):
-    """stats.rows_purged: after a purge-compact the registry anti-join in
-    get_doc can match nothing (the dead rows are physically gone), so the
-    Index skips the registry read entirely; a subsequent delete re-engages
-    it until the next compact."""
-    from joie_spark.engine import Engine
-
+def test_get_doc_skips_registry_after_purge(t1_rows, t1_index_copy):
+    """After a purge-compact the tombstone anti-join in get_doc could
+    match nothing (the dead rows are physically gone), so the Index skips
+    the tombstone read entirely; a subsequent delete re-engages it until
+    the next compact."""
     a, gone = _split(t1_rows)
-    d = str(tmp_path / "ix_rp")
-    eng = Engine.build(
-        spark, spark.createDataFrame(t1_rows), d, n_buckets=8,
-        docs_per_block=8, block_chunks=1,
-    )
-    # fresh build: marker present, no registry table -> skip (None)
-    assert eng.index.stats.get("rows_purged") is True
-    assert eng.index.registry_tombstones is None
+    eng = t1_index_copy(n_buckets=8, docs_per_block=8, block_chunks=1)
+    # fresh build: no tombstones table -> skip (None)
+    assert eng.index.tombstones is None
 
     docs = {
         r["conv_id"]: r["doc_id"]
@@ -409,22 +401,21 @@ def test_get_doc_skips_registry_after_purge(spark, t1_rows, tmp_path):
     dead_doc, live_conv = docs[gone[0]], sorted(set(docs) - set(gone))[0]
 
     eng.delete(gone)
-    # unpurged tombstones: registry engages, dead doc hidden
-    assert eng.index.registry_tombstones is not None
+    # unpurged tombstones: filter engages, dead doc hidden
+    assert eng.index.tombstones is not None
     assert eng.get_doc(dead_doc).count() == 0
     assert eng.get_doc(docs[live_conv]).count() > 0
 
     eng.compact()
-    # purge-compact: marker restored, registry skipped, rows physically gone
-    assert eng.index.stats.get("rows_purged") is True
+    # purge-compact: filter skipped, rows physically gone
     assert int(eng.index.stats.get("tombstones_unpurged", 0)) == 0
-    assert eng.index.registry_tombstones is None
+    assert eng.index.tombstones is None
     assert eng.get_doc(dead_doc).count() == 0
     assert eng.get_doc(docs[live_conv]).count() > 0
 
-    # a new delete re-engages the registry
+    # a new delete re-engages the filter
     eng.delete([live_conv])
-    assert eng.index.registry_tombstones is not None
+    assert eng.index.tombstones is not None
     assert eng.get_doc(docs[live_conv]).count() == 0
 
 
@@ -450,7 +441,9 @@ def test_search_docs_excludes_deleted(deleted):
         }, q
 
 
-def test_search_docs_compact_equals_rebuild(spark, t1_rows, tmp_path):
+def test_search_docs_compact_equals_rebuild(
+    spark, t1_rows, tmp_path, t1_index_copy
+):
     """After compact physically purges, doc-level stats (doc count,
     integer total_dl sum, per-term doc-df) all equal a rebuild over the
     survivors, so search_docs scores are bit-identical keyed by conv."""
@@ -461,9 +454,7 @@ def test_search_docs_compact_equals_rebuild(spark, t1_rows, tmp_path):
     ref = Engine.build(
         spark, spark.createDataFrame(a), str(tmp_path / "sd_ref"), **kw
     )
-    eng = Engine.build(
-        spark, spark.createDataFrame(t1_rows), str(tmp_path / "sd_eng"), **kw
-    )
+    eng = t1_index_copy(**kw)
     eng.delete(gone)
     eng.compact()
     for q in QUERIES[:3]:
