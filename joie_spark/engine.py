@@ -6,6 +6,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .operators import batch as B
 from .operators import query as Q
 from .operators.build import build_index
 from .operators.highlight import (
@@ -13,7 +14,7 @@ from .operators.highlight import (
     add_highlights_batch,
     highlight_phrases,
 )
-from .plans.parser import Expr, literals, parse_query
+from .plans.parser import Expr, parse_query
 from .tokenizer import tokenize_terms
 
 
@@ -73,8 +74,6 @@ class Engine:
         k: int = 10,
         where: str | None = None,
         where_doc: str | None = None,
-        optimize: bool = True,
-        mode: str = "auto",
         synonyms: dict[str, list[str]] | None = None,
     ) -> DataFrame:
         """BM25 top-k: (doc_id, turn_idx, score).
@@ -85,35 +84,23 @@ class Engine:
         the expanded query evaluates and scores exactly like the
         spelled-out OR, on the same routes.
 
-        mode='auto' answers every phrase-free query (keyword ORs, ANDs,
-        mixed and/or; `where` / `where_doc` fused pre-θ) from the
-        COMPRESSED index as a batch of one through the block-max
-        executor (operators/batch.py) — rank-identical to the exhaustive
-        scorer by construction.  Only queries with a multi-term phrase
-        scan the positional postings table (operators/query.py), and
-        mode='exhaustive' forces that scorer for any query."""
-        if mode not in ("auto", "exhaustive"):
-            raise ValueError(
-                f"unknown mode={mode!r} (expected 'auto' or 'exhaustive')"
-            )
+        Every query is matched and scored from one candidate frame
+        (operators/batch.py): phrase-free queries decode the COMPRESSED
+        blocks table, queries with a phrase, near, within or and_not scan
+        the positional postings table; `where` / `where_doc` semi-join
+        the candidates before scoring; the top-k lowers to
+        TakeOrderedAndProject.  On an index above
+        batch.DIRECT_THRESHOLD blocks a phrase-free query runs block-max
+        pruned as a batch of one.  Rank-identical to the Python oracle
+        (tests/test_rank_identity.py)."""
         expr = parse_query(query)
         if synonyms:
             from .plans.synonyms import expand_synonyms
 
             expr = expand_synonyms(expr, synonyms)
-        if mode == "exhaustive" or any(
-            len(tokenize_terms(t)) > 1 for t in literals(expr)
-        ):
-            return Q.search_expr(
-                self.index, expr, k=k, where=where, where_doc=where_doc,
-                optimize=optimize,
-            )
-        from .operators.batch import search_many_exprs
-
-        return search_many_exprs(
-            self.index, [expr], k=k, where=where, where_doc=where_doc,
-            optimize=optimize,
-        ).drop("query_id")
+        return B.search_expr(
+            self.index, expr, k=k, where=where, where_doc=where_doc
+        )
 
     def search_collapsed(
         self,
@@ -121,22 +108,19 @@ class Engine:
         k: int = 10,
         where: str | None = None,
         where_doc: str | None = None,
-        optimize: bool = True,
     ) -> DataFrame:
         """Conversation-collapsed top-k (Lucene/ES field collapsing): one
         row per DOCUMENT, ranked by its best-scoring matching turn →
         (doc_id, turn_idx, score, n_matched).  `query` is a string
         (reference grammar) or a QueryBuilder (full algebra; its own
         filters AND with the arguments).  Collapse must score the whole
-        match set (any turn could be its document's best — the same
-        reason ES collapse scores all hits), so it rides the exhaustive
-        scorer: one extra doc_id groupBy, top-k via
-        TakeOrderedAndProject.  Rank-identity vs the Python oracle:
-        tests/test_collapse.py."""
+        candidate frame (any turn could be its document's best — the
+        same reason ES collapse scores all hits), so it is never pruned:
+        one extra doc_id groupBy, top-k via TakeOrderedAndProject.
+        Rank-identity vs the Python oracle: tests/test_collapse.py."""
         expr, where, where_doc = self._coerce_query(query, where, where_doc)
-        return Q.search_expr_collapsed(
-            self.index, expr, k=k, where=where, where_doc=where_doc,
-            optimize=optimize,
+        return B.search_expr_collapsed(
+            self.index, expr, k=k, where=where, where_doc=where_doc
         )
 
     def search_after(
@@ -146,7 +130,6 @@ class Engine:
         k: int = 10,
         where: str | None = None,
         where_doc: str | None = None,
-        optimize: bool = True,
     ) -> DataFrame:
         """Keyset pagination: the next `k` results strictly after
         `cursor` = (doc_id, turn_idx, score) — pass the previous page's
@@ -158,9 +141,8 @@ class Engine:
         pages tile the full ranking with no gaps or overlaps
         (tests/test_collapse.py)."""
         expr, where, where_doc = self._coerce_query(query, where, where_doc)
-        return Q.search_expr_after(
-            self.index, expr, cursor, k=k, where=where, where_doc=where_doc,
-            optimize=optimize,
+        return B.search_expr_after(
+            self.index, expr, cursor, k=k, where=where, where_doc=where_doc
         )
 
     def search_boosted(
@@ -170,20 +152,18 @@ class Engine:
         k: int = 10,
         where: str | None = None,
         where_doc: str | None = None,
-        optimize: bool = True,
     ) -> DataFrame:
         """BM25 top-k with per-term query-time boosts (Lucene ``term^w``):
         `boosts` maps words (tokenized/stemmed like literals) to weights
         that scale those terms' score contributions.  Matching is
         unchanged — an all-1.0 boost map returns exactly search()'s
-        rows.  Rides the exhaustive scorer (WAND bounds don't know
-        boosts); the boost folds into the driver-side idf literals, so
-        plans are identical to search().  Rank-identity vs the boosted
+        rows.  Scores the full candidate frame (block-max bounds don't
+        know boosts); the boost folds into the driver-side idf literals,
+        so the plan is search()'s unpruned plan.  Rank-identity vs the boosted
         oracle twin: tests/test_collapse.py."""
         expr, where, where_doc = self._coerce_query(query, where, where_doc)
-        return Q.search_expr_boosted(
-            self.index, expr, boosts, k=k, where=where, where_doc=where_doc,
-            optimize=optimize,
+        return B.search_expr_boosted(
+            self.index, expr, boosts, k=k, where=where, where_doc=where_doc
         )
 
     def search_decayed(
@@ -194,7 +174,6 @@ class Engine:
         k: int = 10,
         where: str | None = None,
         where_doc: str | None = None,
-        optimize: bool = True,
     ) -> DataFrame:
         """BM25 top-k with exponential recency decay (ES function_score
         exp decay): score × 2^(−(ref_ts−ts)/half_life_s).  `ref_ts` is
@@ -203,9 +182,9 @@ class Engine:
         pushdown shape).  Pinned to the Python recomputation in
         tests/test_collapse.py."""
         expr, where, where_doc = self._coerce_query(query, where, where_doc)
-        return Q.search_expr_decayed(
+        return B.search_expr_decayed(
             self.index, expr, ref_ts, half_life_s, k=k, where=where,
-            where_doc=where_doc, optimize=optimize,
+            where_doc=where_doc,
         )
 
     def search_docs(
@@ -214,7 +193,6 @@ class Engine:
         k: int = 10,
         where: str | None = None,
         where_doc: str | None = None,
-        optimize: bool = True,
     ) -> DataFrame:
         """Conversation-level BM25 top-k (the ES/Lucene document-ranking
         shape): a conversation matches when any turn matches; it scores
@@ -224,9 +202,8 @@ class Engine:
         best turn.  Pinned bit-identical to a Python recomputation in
         tests/test_rank_eval.py."""
         expr, where, where_doc = self._coerce_query(query, where, where_doc)
-        return Q.search_docs_expr(
-            self.index, expr, k=k, where=where, where_doc=where_doc,
-            optimize=optimize,
+        return B.search_docs_expr(
+            self.index, expr, k=k, where=where, where_doc=where_doc
         )
 
     def search_function_score(
@@ -236,7 +213,6 @@ class Engine:
         k: int = 10,
         where: str | None = None,
         where_doc: str | None = None,
-        optimize: bool = True,
     ) -> DataFrame:
         """BM25 top-k × a deterministic SQL weight over turn metadata
         (ES function_score filter/weight functions): e.g.
@@ -247,9 +223,9 @@ class Engine:
         `weight_expr` references.  Pinned to a Python recomputation in
         tests/test_rank_eval.py."""
         expr, where, where_doc = self._coerce_query(query, where, where_doc)
-        return Q.search_expr_function_score(
+        return B.search_expr_function_score(
             self.index, expr, weight_expr, k=k, where=where,
-            where_doc=where_doc, optimize=optimize,
+            where_doc=where_doc,
         )
 
     def _coerce_query(
@@ -274,7 +250,6 @@ class Engine:
         k: int = 10,
         where: str | None = None,
         where_doc: str | None = None,
-        optimize: bool = True,
         mode: str = "auto",
         probe_blocks: int = 8,
         direct_threshold: int = 32768,
@@ -287,8 +262,9 @@ class Engine:
         the reference's per-query mmap latency is unreachable from a
         shuffle engine, aggregate QPS is not).  mode='auto' runs
         phrase-free queries on the compressed blocks table with per-query
-        block-max pruning (operators/batch.py); 'postings' forces the
-        exhaustive uncompressed scan.
+        block-max pruning (operators/batch.py) and the rest on the
+        positional postings table; 'blocks' refuses queries that need
+        positions.
 
         direct_threshold (doc-blocks) routes indexes at or below it to
         one-pass decode-all instead of the 3-phase probe/θ machinery.
@@ -299,11 +275,9 @@ class Engine:
         than whole-stage-codegen decode-and-score (see
         BENCH/PRUNING_CROSSOVER.md; lower it only for block sets big
         enough that decode dominates, raise stats_out to check)."""
-        from .operators.batch import search_many
-
-        return search_many(
+        return B.search_many(
             self.index, queries, k=k, where=where, where_doc=where_doc,
-            optimize=optimize, mode=mode, probe_blocks=probe_blocks,
+            mode=mode, probe_blocks=probe_blocks,
             direct_threshold=direct_threshold, stats_out=stats_out,
         )
 
@@ -313,7 +287,6 @@ class Engine:
         k: int = 10,
         where: str | None = None,
         where_doc: str | None = None,
-        optimize: bool = True,
     ) -> DataFrame:
         """Batch conversation-collapsed top-k: one row per (query,
         document), ranked by the document's best matching turn →
@@ -327,7 +300,6 @@ class Engine:
         turn below turn-rank k can still make the doc top-k).  Per-query
         rows are bit-identical to search_collapsed
         (tests/test_collapse.py)."""
-        from .operators.batch import search_many_exprs
         from .plans.builder import QueryBuilder
 
         exprs = []
@@ -341,9 +313,9 @@ class Engine:
                 exprs.append(q._require_expr())
             else:
                 exprs.append(parse_query(q))
-        return search_many_exprs(
+        return B.search_many_exprs(
             self.index, exprs, k=k, where=where, where_doc=where_doc,
-            optimize=optimize, collapse=True,
+            collapse=True,
         )
 
     def search_many_built(
@@ -352,7 +324,6 @@ class Engine:
         k: int = 10,
         where: str | None = None,
         where_doc: str | None = None,
-        optimize: bool = True,
         mode: str = "auto",
         probe_blocks: int = 8,
         direct_threshold: int = 32768,
@@ -365,8 +336,6 @@ class Engine:
         side presence bits live there).  Per-builder filters are refused
         (the batch shares one candidate scan; pass batch-wide `where` /
         `where_doc` instead)."""
-        from .operators.batch import search_many_exprs
-
         exprs = []
         for i, b in enumerate(builders):
             if b._where or b._where_doc:
@@ -377,9 +346,9 @@ class Engine:
             if b._expr is None:
                 raise ValueError(f"builder {i} is empty")
             exprs.append(b._expr)
-        return search_many_exprs(
+        return B.search_many_exprs(
             self.index, exprs, k=k, where=where, where_doc=where_doc,
-            optimize=optimize, mode=mode, probe_blocks=probe_blocks,
+            mode=mode, probe_blocks=probe_blocks,
             direct_threshold=direct_threshold,
         )
 
@@ -433,7 +402,15 @@ class Engine:
     def match_set(self, query: str) -> DataFrame:
         """Unranked matches in (doc_id, turn_idx) order — the reference's
         native output (searcher.rs:37-52)."""
-        return Q.match_set(self.index, query)
+        return B.match_set(self.index, query)
+
+    def _matches(
+        self, query, where: str | None, where_doc: str | None
+    ) -> DataFrame:
+        """(doc_id, turn_idx) match set of a query string or QueryBuilder,
+        its filters conjoined with `where` / `where_doc`."""
+        expr, where, where_doc = self._coerce_query(query, where, where_doc)
+        return B.match_set_expr(self.index, expr, where, where_doc)
 
     def phrase(
         self,
@@ -528,14 +505,15 @@ class Engine:
 
         Driver cost is bounded: one point lookup (a conversation's turns),
         one dictionary probe for its distinct terms; the search is the
-        ordinary pruned keyword scan.  Deterministic: ties break
+        ordinary candidate frame of a keyword plan, built from those
+        dictionary ids directly (they are already stemmed terms, so they
+        are not re-tokenized).  Deterministic: ties break
         (weight DESC, term ASC).  `terms_out` (optional list) receives the
         chosen terms for caller display.  Raises on unknown/deleted docs
         (dead handles, like get_doc)."""
         from collections import Counter
 
         from .oracle import bm25_idf
-        from .operators.query import PKeywords, eval_match, score_matches
 
         rows = self.get_doc(doc_id).select("text").collect()
         if not rows:
@@ -554,13 +532,8 @@ class Engine:
             terms_out.extend(w for _s, w, _t, _d in weighted)
         if not weighted:
             return self.spark.createDataFrame([], Q.RESULT_SCHEMA)
-        ids = sorted(tid for _s, _w, tid, _d in weighted)
         dfs = {tid: df for _s, _w, tid, df in weighted}
-        node = PKeywords(tuple(ids))
-        match = self.index.exclude_tombstones(
-            eval_match(self.index, node, dfs)
-        ).where(F.col("doc_id") != int(doc_id))
-        return score_matches(self.index, match, ids, k, dfs=dfs)
+        return B.search_term_ids(self.index, dfs, k, exclude_doc=doc_id)
 
     def facets(
         self,
@@ -579,21 +552,9 @@ class Engine:
         turns row store (doc_id/turn_idx pushdown), one
         partial-aggregated groupBy on `by` — no new shuffle shapes; the
         top-n lowers to TakeOrderedAndProject."""
-        from .plans.builder import QueryBuilder
-
-        if isinstance(query, QueryBuilder):
-            match = query.matches()
-        else:
-            match = self.match_set(query)
-        joined = match.join(self.index.turns, ["doc_id", "turn_idx"], "inner")
-        if where:
-            joined = joined.where(where)
-        if where_doc:
-            joined = joined.join(
-                self.index.doc_meta.where(where_doc).select("doc_id"),
-                "doc_id",
-                "left_semi",
-            )
+        joined = self._matches(query, where, where_doc).join(
+            self.index.turns, ["doc_id", "turn_idx"], "inner"
+        )
         return (
             joined.groupBy(F.expr(by).alias("value"))
             .agg(
@@ -614,24 +575,7 @@ class Engine:
         {'n_turns', 'n_docs'} for a query string or QueryBuilder.  Skips
         scoring and top-k entirely — one boolean match pass + one
         aggregate, two driver-bound numbers back."""
-        from .plans.builder import QueryBuilder
-
-        if isinstance(query, QueryBuilder):
-            m = query.matches()
-        else:
-            m = self.match_set(query)
-        if where:
-            m = (
-                m.join(self.index.turns, ["doc_id", "turn_idx"], "inner")
-                .where(where)
-                .select("doc_id", "turn_idx")
-            )
-        if where_doc:
-            m = m.join(
-                self.index.doc_meta.where(where_doc).select("doc_id"),
-                "doc_id",
-                "left_semi",
-            )
+        m = self._matches(query, where, where_doc)
         row = m.agg(
             F.count("*").alias("n_turns"),
             F.countDistinct("doc_id").alias("n_docs"),
@@ -667,14 +611,9 @@ class Engine:
         and a hash join with the dictionary for term/df.  |match set|
         attaches as a scalar subquery (no driver-side count, the match
         set is planned once per branch)."""
-        from .plans.builder import QueryBuilder
         from .pipeline.vocab import _scalar
 
-        if isinstance(query, QueryBuilder):
-            match = query.matches()
-        else:
-            match = self.match_set(query)
-        m = match.select("doc_id", "turn_idx")
+        m = self._matches(query, None, None)
         n_match = _scalar(m.agg(F.count("*").cast("double").alias("_n")))
         n_total = float(self.index.stats["N"])
         fg = (
@@ -767,9 +706,10 @@ class Engine:
         from .oracle import bm25_term as _term
 
         expr, _w, _wd = self._coerce_query(query, None, None)
-        match, qids, dfs = Q._plan_search(self.index, expr, None, None, True)
-        if not qids:
+        items, dfs = Q.plan_exprs(self.index, [expr])
+        if not items:
             return []
+        qids = items[0][2]
         rows = (
             self.index.postings_for(set(qids))
             .where(

@@ -1,32 +1,47 @@
-"""Batch BM25 top-k (`search_many`) with block-max pruning over the
-compressed blocks table.
+"""The one match-and-score core: every search — single, variant or batch
+— is answered from the candidate frame built here.
 
 Why a batch API at all: the reference answers a single query in
 microseconds from mmap (engine/src/searcher.rs:33-52); a shuffle engine
 pays ~seconds of job latency per query, so throughput parity comes from
 amortizing that latency over a batch (north rule / VERDICT r1).
 
-Why blocks, not postings (VERDICT r2): the round-2 batch path scanned the
-*uncompressed* postings table for the union vocabulary of the whole batch
-— a batch containing a stopword read every posting of "the", positions
-arrays included.  The blocks table is delta+varint compressed, carries
-block-max metadata, and the batch path runs on it — as does every
-phrase-free single `Engine.search`, answered here as a batch of one:
+The candidate frame (`scored_frame`): ONE scan per batch → per-turn
+candidate rows (doc_id, turn_idx, dl, tfmap, [posmap,] presence bitmask
+m0..mW) → every query's boolean predicate (query._batch_pred_sql) over
+the bitmask → per-(query, matching turn) BM25 score, unranked.  Two
+candidate sources:
 
-  phase 0  ONE dictionary lookup for the whole batch; queries containing
-           multi-term phrases fall back to the postings path (positions
-           live only there) — everything else takes the blocks path.
+  postings  the positional postings table, one JVM scan + one groupBy
+            (positions read only for phrase/proximity terms), optionally
+            seeded by each query's rarest required term
+            (_seed_term_ids) — every search variant (collapse, cursor,
+            boosts, reweighting, doc lift, match sets, more-like-this)
+            and every top-k query with a phrase, near, within or and_not
+            (query.needs_postings), single or batched.
+  blocks    the delta+varint compressed blocks table, decoded in one
+            applyInPandas over rows grouped by block_id — phrase-free
+            top-k queries, single or batched (a batch shares one
+            decode; block-max bounds live here).
+
+Single searches (the tails below scored_frame) plan their one
+expression and cut this frame.  `search_many` answers a batch: phrase-free queries
+take the blocks path below, the rest the postings frame.  On an index of
+at most `direct_threshold` blocks the blocks path decodes every
+candidate block in one pass (and a mixed batch folds its phrase-free
+queries into the postings frame it pays for anyway); above it the
+blocks path runs block-max pruning — for a batch, and for a phrase-free
+single top-k as a batch of one:
+
   phase 1  per-(query, block) upper bounds from block-max metadata:
            ub_q(b) = Σ_{t ∈ q} idf_t · max_part(t, b) — one scan of the
            blocks *metadata* columns, grouped per (query_id, block_id);
            a two-phase aggregation picks each query's top-P blocks (the
            probe set) plus its candidate-block count.
-  phase 2  decode ONLY the probe blocks (one applyInPandas over rows
-           grouped by block_id — the shuffle moves compressed bytes, the
-           per-turn tf/mask aggregation happens in numpy), score every
-           query, take top-k → per-query threshold θ_q = its k-th best
-           exact score.  Queries whose entire candidate-block set fit in
-           the probe are FINISHED here (their probe top-k is exact).
+  phase 2  decode ONLY the probe blocks, score every query, take top-k
+           → per-query threshold θ_q = its k-th best exact score.
+           Queries whose entire candidate-block set fit in the probe are
+           FINISHED here (their probe top-k is exact).
   phase 3  for the remaining queries, decode only NEW blocks — ub_q(b) ≥
            θ_q for some unfinished q and not already decoded by the probe
            (probe scores are exact and their non-top-k rows are totally
@@ -36,11 +51,11 @@ Soundness (the block-max WAND invariant, Ding & Suel 2011): every
 turn's score in block b is ≤ ub_q(b); θ_q is an attained k-th best score,
 so a pruned block (ub < θ) cannot contribute a top-k row, and ties at θ
 are kept because pruning is strict (< θ).  Results are bit-identical to
-the single-query exhaustive path: tf/dl decode to the same ints, idf uses
-the same dictionary df, and the per-turn fold adds contributions in the
-same ascending-term_id order (tested in tests/test_batch_query.py).
+the oracle: tf/dl decode to the same ints, idf uses the same dictionary
+df, and the per-turn fold adds contributions in the same ascending-
+term_id order (tests/test_batch_query.py, tests/test_rank_identity.py).
 
-Scale shape: the candidate scan is bucket-partition-pruned and
+Scale shape: every candidate scan is bucket-partition-pruned and
 term_id-pruned at the parquet row-group level; the decode shuffle is
 keyed by block_id (a hot term's postings spread over ~n_docs/docs_per_
 block blocks — no hot keys); per-query top-k is a two-phase aggregation,
@@ -52,28 +67,28 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 from ..functions.codec import TURN_BITS, delta_decode, varint_decode
 from ..oracle import B, K1, bm25_idf
-from ..plans.parser import parse_query
+from ..plans.parser import Expr, parse_query
 from ..tokenizer import tokenize_terms
+from . import query as Q
 from .query import (
     MATCH_COLS,
     RESULT_SCHEMA,
     Index,
+    PKeywords,
     PNode,
     _batch_pred_sql,
-    _expand_multiterm,
-    _literal_texts,
     _phrase_term_ids,
-    contains_diff,
-    lower,
-    plan_term_ids,
+    needs_postings,
+    plan_exprs,
     pred_term_ids,
+    required_term_ids,
 )
 
 OUT_SCHEMA = T.StructType(
@@ -84,6 +99,11 @@ OUT_SCHEMA_COLLAPSED = T.StructType(
 )
 
 NEG_INF_SQL = "CAST('-Infinity' AS DOUBLE)"
+
+# Indexes with at most this many doc-blocks answer every query by
+# decoding all candidate blocks in one pass (search_many's
+# `direct_threshold` default — measured, see _blocks_path).
+DIRECT_THRESHOLD = 32768
 
 
 # ---------------------------------------------------------------------------
@@ -126,8 +146,8 @@ def _matched_sql(
 
 def _score_sql(items, idf: dict[int, float], avgdl: float) -> str:
     """Per-(matched query, turn) BM25 fold over the query's term ids in
-    ascending order — the exact float sequence of the single-query path
-    (operators/query.py score_matches), so results are bit-identical."""
+    ascending order — oracle.bm25_term's exact expression shape and the
+    oracle's fold order, so float64 scores are bit-identical."""
 
     def longs(vals) -> str:
         return ", ".join(f"{int(v)}L" for v in vals)
@@ -150,17 +170,36 @@ def _score_sql(items, idf: dict[int, float], avgdl: float) -> str:
     )"""
 
 
-def _two_phase_topk(exploded: DataFrame, k: int) -> DataFrame:
+def _idf(
+    ix: Index,
+    items: list[tuple[int, PNode, list[int]]],
+    dfs: dict[int, int],
+    boosts: dict[int, float] | None = None,
+) -> dict[int, float]:
+    """term_id → idf for every scoring term of `items`.  A per-term boost
+    folds into the idf literal (Lucene's `term^w` scales the contribution
+    linearly), so the scoring fold is unchanged and stays bit-identical
+    to the oracle's boosted twin."""
+    n_docs = ix.stats["N"]
+    boosts = boosts or {}
+    return {
+        t: bm25_idf(n_docs, dfs.get(t, 0)) * boosts.get(t, 1.0)
+        for t in sorted({t for _q, _n, qids in items for t in qids})
+    }
+
+
+def _top_k_per_query(frame: DataFrame, k: int) -> DataFrame:
     """Per-query top-k as partial-then-merge aggregation (never a window:
     a hot query's candidates would all land in one window task).  Sort key
     (-score, doc_id, turn_idx) ascending; scores > 0 so negation is an
-    exact order flip."""
-    item = (
-        "named_struct('ns', -score, 'doc_id', doc_id,"
-        " 'turn_idx', turn_idx, 'score', score)"
+    exact order flip.  Carries every column of `frame` (a collapsed frame
+    adds n_matched; its rows are unique per (query, doc))."""
+    cols = [c for c in frame.columns if c != "query_id"]
+    item = "named_struct('ns', -score, {})".format(
+        ", ".join(f"'{c}', {c}" for c in cols)
     )
     partial = (
-        exploded.select(
+        frame.select(
             "query_id", F.spark_partition_id().alias("pid"), F.expr(item).alias("it")
         )
         .groupBy("query_id", "pid")
@@ -174,46 +213,27 @@ def _two_phase_topk(exploded: DataFrame, k: int) -> DataFrame:
             ).alias("top")
         )
         .select("query_id", F.explode("top").alias("e"))
-        .select(
-            "query_id",
-            F.col("e.doc_id").alias("doc_id"),
-            F.col("e.turn_idx").alias("turn_idx"),
-            F.col("e.score").alias("score"),
-        )
+        .select("query_id", *[F.col(f"e.{c}").alias(c) for c in cols])
     )
 
 
-def _two_phase_topk_collapsed(best: DataFrame, k: int) -> DataFrame:
-    """Per-query top-k over COLLAPSED (one-row-per-doc) candidates —
-    the same partial-then-merge shape as _two_phase_topk, carrying the
-    best turn and the per-doc match count.  Sort key (-score, doc_id)
-    (doc rows are unique per query)."""
-    item = (
-        "named_struct('ns', -score, 'doc_id', doc_id,"
-        " 'turn_idx', turn_idx, 'score', score, 'n_matched', n_matched)"
-    )
-    partial = (
-        best.select(
-            "query_id", F.spark_partition_id().alias("pid"), F.expr(item).alias("it")
-        )
-        .groupBy("query_id", "pid")
-        .agg(F.expr(f"slice(array_sort(collect_list(it)), 1, {int(k)})").alias("top"))
-    )
-    return (
-        partial.groupBy("query_id")
-        .agg(
-            F.expr(
-                f"slice(array_sort(flatten(collect_list(top))), 1, {int(k)})"
-            ).alias("top")
-        )
-        .select("query_id", F.explode("top").alias("e"))
-        .select(
-            "query_id",
-            F.col("e.doc_id").alias("doc_id"),
-            F.col("e.turn_idx").alias("turn_idx"),
-            F.col("e.score").alias("score"),
-            F.col("e.n_matched").alias("n_matched"),
-        )
+def best_turn_per_doc(frame: DataFrame) -> DataFrame:
+    """Conversation collapse: one row per (query, doc) — or per doc, for
+    a frame without query_id — holding the doc's best turn and its
+    matching-turn count.  max(struct(score, -turn_idx)) = highest score,
+    ties → lowest turn_idx.  One partial-aggregated groupBy: the frame
+    arrives grouped by (doc, turn)."""
+    keys = [c for c in ("query_id", "doc_id") if c in frame.columns]
+    return frame.groupBy(*keys).agg(
+        F.max(F.struct(F.col("score"), (-F.col("turn_idx")).alias("nti"))).alias(
+            "best"
+        ),
+        F.count("*").alias("n_matched"),
+    ).select(
+        *keys,
+        (-F.col("best.nti")).cast("int").alias("turn_idx"),
+        F.col("best.score").alias("score"),
+        "n_matched",
     )
 
 
@@ -235,25 +255,20 @@ def _apply_filters(
     return cand
 
 
-def _topk_from_cand(
+def _score_candidates(
     cand: DataFrame,
     items,
     idf,
     avgdl: float,
     bitpos,
     n_words,
-    k: int,
     allowed_blocks: dict[int, list[int]] | None = None,
     dpb: int | None = None,
-    per_doc: bool = False,
 ) -> DataFrame:
     """candidates (doc_id, turn_idx, dl, tfmap, [posmap,] m0..mW) →
-    (query_id, doc_id, turn_idx, score) top-k per query, unordered.
-    per_doc=True collapses to one row per (query, doc) — best turn +
-    match count — BEFORE the top-k (conversation collapse; only sound
-    when every matching turn reached this frame, i.e. never under the
-    3-phase θ pruning, which keeps turn-level top-k only)."""
-    exploded = cand.select(
+    (query_id, doc_id, turn_idx, score): one row per (query, matching
+    turn), unranked."""
+    return cand.select(
         "doc_id",
         "turn_idx",
         "tfmap",
@@ -267,42 +282,65 @@ def _topk_from_cand(
         "turn_idx",
         F.expr(_score_sql(items, idf, avgdl)).alias("score"),
     )
-    if per_doc:
-        # max(struct(score, -turn_idx)) = best score, ties → lowest turn
-        # (identical rule to query.search_expr_collapsed); one partial-
-        # aggregated groupBy — the frame arrives grouped by (doc, turn)
-        best = (
-            exploded.groupBy("query_id", "doc_id")
-            .agg(
-                F.max(
-                    F.struct(F.col("score"), (-F.col("turn_idx")).alias("nti"))
-                ).alias("best"),
-                F.count("*").alias("n_matched"),
-            )
-            .select(
-                "query_id",
-                "doc_id",
-                (-F.col("best.nti")).cast("int").alias("turn_idx"),
-                F.col("best.score").alias("score"),
-                "n_matched",
-            )
-        )
-        return _two_phase_topk_collapsed(best, k)
-    return _two_phase_topk(exploded, k)
 
 
 # ---------------------------------------------------------------------------
 # candidate sources
 
 
+def _seed_term_ids(items, dfs: dict[int, int], all_ids: list[int]) -> list[int]:
+    """Rarest-term-first seeding of the postings source — the
+    distributed analogue of the reference seeding phrase evaluation from
+    its smallest posting list (engine/src/query/phrase.rs:48).  A
+    stopword phrase like `"the <rare>"` (or a conjunction `the AND
+    <rare>`) would otherwise shuffle every posting of `the` into the
+    per-turn groupBy only to drop ~all of it.
+
+    Every match of an item contains each of its required terms
+    (query.required_term_ids), so the turns holding SOME item's rarest
+    required term are a superset of all matches: semi-joining the scan
+    against them BEFORE the groupBy lets the hot terms' rows die at the
+    scan side of the shuffle.  A surviving turn keeps all its rows, so
+    predicates and scores are untouched.  Returns the seed term ids, or
+    [] when seeding is off: some item requires no term, no item has a
+    live required term, or the df test fails — hottest scanned df ≥
+    seed df × PHRASE_SEED_DF_RATIO, ≥ PHRASE_SEED_MIN_HOT_DF, and seed
+    df ≤ PHRASE_SEED_BROADCAST_MAX (module attributes of query.py, read
+    here at call time).  For one phrase this is the rarest of its terms
+    under exactly that test."""
+    seeds = set()
+    for _q, node, _qids in items:
+        req = required_term_ids(node)
+        if not req:
+            return []
+        live = [t for t in sorted(req) if dfs.get(t, 0) > 0]
+        if live:  # else the item matches no live turn and needs no seed
+            seeds.add(min(live, key=lambda t: dfs[t]))
+    if not seeds:
+        return []
+    lo = sum(dfs[t] for t in seeds)
+    hi = max(dfs.get(t, 0) for t in all_ids)
+    if (
+        hi >= lo * Q.PHRASE_SEED_DF_RATIO
+        and hi >= Q.PHRASE_SEED_MIN_HOT_DF
+        and lo <= Q.PHRASE_SEED_BROADCAST_MAX
+    ):
+        return sorted(seeds)
+    return []
+
+
 def _cand_from_postings(
-    ix: Index, all_ids: list[int], phrase_ids: list[int], bitpos, n_words
+    ix: Index, items, dfs: dict[int, int], bitpos, n_words
 ) -> DataFrame:
     """ONE partition/row-group-pruned scan of the uncompressed postings
-    table → per-turn candidate rows.  Used only for phrase-bearing queries
-    (positions live here, not in the blocks table).  posmap carries the
-    fat position arrays ONLY for multi-term-phrase terms (masked to NULL
-    at the scan so the shuffle never moves unused arrays)."""
+    table → per-turn candidate rows, seeded by _seed_term_ids when it
+    applies.  posmap carries the fat
+    position arrays ONLY for phrase/proximity terms (masked to NULL at
+    the scan so the shuffle never moves unused arrays)."""
+    all_ids = sorted(bitpos)
+    phrase_ids = sorted(
+        {t for _q, node, _qids in items for t in _phrase_term_ids(node)}
+    )
     if phrase_ids:
         pos_mask = "CASE WHEN term_id IN ({}) THEN positions END".format(
             ", ".join(f"{int(t)}L" for t in phrase_ids)
@@ -322,9 +360,16 @@ def _cand_from_postings(
         ).alias(f"m{w}")
         for w in range(n_words)
     ]
+    post = ix.postings_for(set(all_ids))
+    seed = _seed_term_ids(items, dfs, all_ids)
+    if seed:
+        post = post.join(
+            F.broadcast(ix.postings_for(set(seed)).select(*MATCH_COLS)),
+            MATCH_COLS,
+            "left_semi",
+        )
     return (
-        ix.postings_for(set(all_ids))
-        .select(
+        post.select(
             *MATCH_COLS,
             "term_id",
             "tf",
@@ -431,6 +476,45 @@ def _cand_from_blocks(blocks: DataFrame, bitpos, n_words) -> DataFrame:
     )
 
 
+def scored_frame(
+    ix: Index,
+    items: list[tuple[int, PNode, list[int]]],
+    dfs: dict[int, int],
+    where: str | None = None,
+    where_doc: str | None = None,
+    boosts: dict[int, float] | None = None,
+    blocks: bool = False,
+) -> DataFrame:
+    """THE match-and-score frame: (query_id, doc_id, turn_idx, score),
+    one row per (query, matching turn), unranked, for planned `items`
+    (query.plan_exprs).  One candidate scan covers every predicate term
+    (incl. a PDiff's prohibited side — NOT(rhs) reads rhs presence bits
+    although rhs never scores): the postings table, or with `blocks` —
+    phrase-free top-k items only — the compressed blocks table, all
+    candidate blocks decoded.  Tombstones and
+    `where`/`where_doc` semi-join the candidates before scoring; `boosts`
+    (term_id → weight) fold into the idf literals."""
+    if not items:
+        return ix.spark.createDataFrame([], OUT_SCHEMA)
+    all_ids = sorted(
+        {t for _q, node, _qids in items for t in pred_term_ids(node) if t > 0}
+    )
+    bitpos = {t: i for i, t in enumerate(all_ids)}
+    n_words = (len(all_ids) + 63) // 64
+    if blocks:
+        cand = _cand_from_blocks(_blocks_meta_for(ix, all_ids), bitpos, n_words)
+    else:
+        cand = _cand_from_postings(ix, items, dfs, bitpos, n_words)
+    return _score_candidates(
+        _apply_filters(cand, ix, where, where_doc),
+        items,
+        _idf(ix, items, dfs, boosts),
+        ix.stats["avgdl"],
+        bitpos,
+        n_words,
+    )
+
+
 # ---------------------------------------------------------------------------
 # blocks path (block-max pruned)
 
@@ -528,12 +612,12 @@ def _top_blocks_per_query(ub: DataFrame, probe_blocks: int):
 def _blocks_path(
     ix: Index,
     items: list[tuple[int, PNode, list[int]]],
-    idf: dict[int, float],
+    dfs: dict[int, int],
     k: int,
     where: str | None,
     where_doc: str | None,
     probe_blocks: int,
-    direct_threshold: int = 32768,
+    direct_threshold: int = DIRECT_THRESHOLD,
     stats_out: dict | None = None,
     per_doc: bool = False,
 ) -> DataFrame:
@@ -549,6 +633,7 @@ def _blocks_path(
     set) — costs one extra count job, so it is opt-in (bench/debug)."""
     spark = ix.spark
     avgdl = ix.stats["avgdl"]
+    idf = _idf(ix, items, dfs)
     all_ids = sorted({t for _q, _n, qids in items for t in qids})
     bitpos = {t: i for i, t in enumerate(all_ids)}
     n_words = (len(all_ids) + 63) // 64
@@ -580,12 +665,8 @@ def _blocks_path(
                 # the batch vocabulary (metadata-only count, diag pass)
                 "candidate_tb_pairs": blocks_meta.count(),
             })
-        cand = _apply_filters(
-            _cand_from_blocks(blocks_meta, bitpos, n_words), ix, where, where_doc
-        )
-        return _topk_from_cand(
-            cand, items, idf, avgdl, bitpos, n_words, k, per_doc=per_doc
-        )
+        frame = scored_frame(ix, items, dfs, where, where_doc, blocks=True)
+        return _top_k_per_query(best_turn_per_doc(frame) if per_doc else frame, k)
 
     ub = _ub_per_query(blocks_meta, items, idf, avgdl)
     top = _top_blocks_per_query(ub, probe_blocks)
@@ -635,9 +716,12 @@ def _blocks_path(
         _cand_from_blocks(probe_blocks_df, bitpos, n_words), ix, where, where_doc
     )
     probe_rows = (
-        _topk_from_cand(
-            probe_cand, items, idf, avgdl, bitpos, n_words, k,
-            allowed_blocks=probe_of, dpb=dpb,
+        _top_k_per_query(
+            _score_candidates(
+                probe_cand, items, idf, avgdl, bitpos, n_words,
+                allowed_blocks=probe_of, dpb=dpb,
+            ),
+            k,
         )
         .orderBy("query_id", F.desc("score"), F.asc("doc_id"), F.asc("turn_idx"))
         .collect()
@@ -746,8 +830,8 @@ def _blocks_path(
     final_cand = _apply_filters(
         _cand_from_blocks(final_blocks, bitpos, n_words), ix, where, where_doc
     )
-    fresh_df = _topk_from_cand(
-        final_cand, unfinished, idf, avgdl, bitpos, n_words, k
+    fresh_df = _top_k_per_query(
+        _score_candidates(final_cand, unfinished, idf, avgdl, bitpos, n_words), k
     )
     # merge probe top-k with the freshly decoded blocks' top-k: ≤ 2k rows
     # per query (bounded by 2·k·Q — not a scale hazard), one tiny window.
@@ -778,40 +862,386 @@ def _blocks_path(
 
 
 # ---------------------------------------------------------------------------
-# postings path (phrase-bearing queries)
+# single searches: one expression's frame, each variant's own tail
 
 
-def _postings_path(
+def _single(
     ix: Index,
-    items: list[tuple[int, PNode, list[int]]],
-    idf: dict[int, float],
+    expr: Expr,
+    where: str | None,
+    where_doc: str | None,
+    boosts: dict[int, float] | None = None,
+) -> DataFrame:
+    """(doc_id, turn_idx, score) of ONE expression, one row per matching
+    turn, unranked: the candidate frame of a batch of one, read by the
+    variant tails below."""
+    items, dfs = plan_exprs(ix, [expr])
+    return scored_frame(ix, items, dfs, where, where_doc, boosts).drop("query_id")
+
+
+def _topk(scored: DataFrame, k: int) -> DataFrame:
+    """The engine's total result order (score DESC, doc_id ASC, turn_idx
+    ASC) cut at k — the sort+limit lowers to TakeOrderedAndProject (no
+    full sort)."""
+    return scored.orderBy(
+        F.desc("score"), F.asc("doc_id"), F.asc("turn_idx")
+    ).limit(k)
+
+
+def search_expr(
+    ix: Index,
+    expr: Expr,
+    k: int = 10,
+    where: str | None = None,
+    where_doc: str | None = None,
+) -> DataFrame:
+    """BM25 top-k (doc_id, turn_idx, score) for one AST — Engine.search
+    and QueryBuilder.top_k.
+
+    `where` is a SQL predicate over turn columns (role, tool, ts,
+    conv_id, turn_idx) — joie's (dead) SentenceFilter surface
+    (engine/src/query/filter.rs:36-44) made real.  `where_doc` is a SQL
+    predicate over doc_meta columns (conv_id, n_turns, total_dl,
+    first_ts, last_ts, roles) — the analogue of joie's DocumentFilter
+    (engine/src/query/filter.rs:7-34).  Both semi-join the candidate
+    frame before scoring, so Catalyst pushes them into the scans.
+
+    Route: a phrase-free plan reads the compressed blocks table — on an
+    index above DIRECT_THRESHOLD blocks as the block-max pruned batch of
+    one, else decoded whole; every other plan reads the postings source.
+    Either frame is cut with _topk, which lowers to
+    TakeOrderedAndProject."""
+    items, dfs = plan_exprs(ix, [expr])
+    flat = bool(items) and not needs_postings(items[0][1])
+    if flat and ix.total_blocks > DIRECT_THRESHOLD:
+        out = _blocks_path(ix, items, dfs, k, where, where_doc, probe_blocks=8)
+        return out.drop("query_id")
+    frame = scored_frame(ix, items, dfs, where, where_doc, blocks=flat)
+    return _topk(frame.drop("query_id"), k)
+
+
+def search_expr_decayed(
+    ix: Index,
+    expr: Expr,
+    ref_ts: str,
+    half_life_s: float,
+    k: int = 10,
+    where: str | None = None,
+    where_doc: str | None = None,
+) -> DataFrame:
+    """BM25 top-k with exponential recency decay (the Elasticsearch
+    function_score exp-decay shape): each turn's score multiplies by
+    ``2^(-(ref_ts − ts)/half_life_s)`` — a turn `half_life_s` seconds
+    older than `ref_ts` scores half as much; turns newer than `ref_ts`
+    boost above 1 (no clamp — pass the corpus max ts as ref for pure
+    decay).  `ref_ts` is an explicit SQL timestamp literal ('2024-01-01
+    00:00:00'): recency must be deterministic, never wall-clock.
+
+    Matching is unchanged (decay reweights, never filters).  Scale
+    shape: one extra (doc_id, turn_idx) semi-join-shaped inner join of
+    the scored frame against the turns row store to fetch ts (the same
+    pushdown shape the `where` filter uses), one scalar multiply in the
+    projection; top-k still lowers to TakeOrderedAndProject."""
+    if not ref_ts:
+        raise ValueError("ref_ts must be an explicit timestamp literal")
+    if half_life_s <= 0:
+        raise ValueError("half_life_s must be > 0")
+    age_s = F.unix_timestamp(F.lit(ref_ts).cast("timestamp")) - F.unix_timestamp(
+        F.col("ts")
+    )
+    decay = F.pow(F.lit(0.5), age_s.cast("double") / F.lit(float(half_life_s)))
+    return _reweighted(ix, expr, decay, k, where, where_doc)
+
+
+def search_expr_function_score(
+    ix: Index,
+    expr: Expr,
+    weight_expr: str,
+    k: int = 10,
+    where: str | None = None,
+    where_doc: str | None = None,
+) -> DataFrame:
+    """BM25 top-k reweighted by an arbitrary SQL expression over the
+    turn's row-store metadata (the Elasticsearch function_score
+    filter/weight shape — e.g. ``CASE WHEN role = 'assistant' THEN 2.0
+    ELSE 1.0 END``, or any expression over conv_id/role/tool/ts/dl).
+    The recency decay path (search_expr_decayed) is the ts special case
+    of this; boosts (search_expr_boosted) are the query-term special
+    case.  `weight_expr` must be deterministic (no rand()/now()) — the
+    caller's contract, same as `where`.  Numeric-literal gotcha: Spark
+    SQL parses ``1.0`` as DECIMAL, so ``1.0/(1.0+dl)`` divides in
+    decimal before the double cast (ULP drift vs float64); write double
+    literals as ``1e0`` (or CAST) when bit-exact scores matter.
+
+    Matching is unchanged (weights reweight, never filter; a weight of
+    0 can sink a row below top-k but it still matched).  Scale shape:
+    identical to decay — one (doc_id, turn_idx) inner join of the
+    scored frame against the turns row store for metadata (Catalyst
+    prunes the fetch to the columns `weight_expr` actually references),
+    one scalar multiply, TakeOrderedAndProject top-k."""
+    if not weight_expr or not weight_expr.strip():
+        raise ValueError("weight_expr must be a non-empty SQL expression")
+    weight = F.expr(weight_expr).cast("double")
+    return _reweighted(ix, expr, weight, k, where, where_doc)
+
+
+def _reweighted(
+    ix: Index,
+    expr: Expr,
+    weight: Column,
     k: int,
     where: str | None,
     where_doc: str | None,
-    per_doc: bool = False,
 ) -> DataFrame:
-    avgdl = ix.stats["avgdl"]
-    # the candidate scan + bitmask layout must cover every PREDICATE term
-    # (incl. a PDiff's prohibited side — rhs presence bits are read by
-    # NOT(rhs) even though rhs never scores); scoring stays on each
-    # item's qids (plan_term_ids), a subset
-    all_ids = sorted(
-        {t for _q, node, _qids in items for t in pred_term_ids(node) if t > 0}
+    """Shared tail of the post-score reweighting variants (decay,
+    function_score): the candidate frame → (doc_id, turn_idx) inner join
+    against the turns row store for the metadata `weight` reads (Catalyst
+    prunes the fetch to the columns it references) → score × weight →
+    top-k."""
+    with_meta = _single(ix, expr, where, where_doc).join(
+        ix.turns.select(*MATCH_COLS, "conv_id", "role", "tool", "ts", "dl"),
+        MATCH_COLS,
+        "inner",
     )
-    phrase_ids = sorted({t for _q, node, _qids in items for t in _phrase_term_ids(node)})
-    bitpos = {t: i for i, t in enumerate(all_ids)}
-    n_words = (len(all_ids) + 63) // 64
-    cand = _apply_filters(
-        _cand_from_postings(ix, all_ids, phrase_ids, bitpos, n_words),
-        ix, where, where_doc,
+    return _topk(
+        with_meta.select(
+            "doc_id", "turn_idx", (F.col("score") * weight).alias("score")
+        ),
+        k,
     )
-    return _topk_from_cand(
-        cand, items, idf, avgdl, bitpos, n_words, k, per_doc=per_doc
+
+
+def search_docs_expr(
+    ix: Index,
+    expr: Expr,
+    k: int = 10,
+    where: str | None = None,
+    where_doc: str | None = None,
+) -> DataFrame:
+    """Conversation-level BM25 top-k — rank whole documents, not turns.
+
+    A conversation matches when ANY of its turns matches the boolean
+    query (the existential lift; `where`/`where_doc` filter the turn
+    match set before lifting, so "docs with a matching USER turn" works).
+    It scores with TRUE document-level BM25: tf summed over all the
+    conversation's turns, dl = the conversation's total_dl, df =
+    distinct conversations containing the term, N/avgdl over
+    conversations.  This is the ES/Lucene document-ranking shape;
+    search_expr_collapsed is the other lift (rank docs by their single
+    best turn) — collapse favors one strong turn, search_docs favors
+    sustained relevance across the conversation.
+
+    → (doc_id, score) top-k, score DESC then doc_id ASC.
+
+    Scale shape: the match set lifts to docs with one distinct; doc
+    tf is the term_id-pruned postings scan semi-joined to matching docs
+    and aggregated on (term_id, doc_id); per-term doc-df is one partial
+    agg over the same pruned scan, collected bounded (≤ |query terms|
+    rows, like dfs); the per-doc fold reuses the sorted-struct
+    F.aggregate so float64 scores are bit-identical to the Python
+    recompute (tests/test_rank_eval.py).  Stats drift under unpurged
+    tombstones matches the turn-level path (frozen until compact)."""
+    items, dfs = plan_exprs(ix, [expr])
+    qset = items[0][2] if items else []
+    out_schema = T.StructType([RESULT_SCHEMA[0], RESULT_SCHEMA[2]])
+    if not qset:
+        return ix.spark.createDataFrame([], out_schema)
+    n_docs, avgdl_doc = ix.doc_stats()
+    if not n_docs or not avgdl_doc:
+        return ix.spark.createDataFrame([], out_schema)
+    post = ix.postings_for(set(qset))
+    # per-term doc-df is a corpus statistic (≤ |query terms| numbers):
+    # cache it on the Index so repeated queries sharing terms skip the
+    # postings re-scan (the Engine reloads the Index on append/delete/
+    # compact, invalidating the cache with the rest of the handles)
+    missing = [t for t in qset if t not in ix._dfd_cache]
+    if missing:
+        rows = (
+            ix.postings_for(set(missing))
+            .select("term_id", "doc_id")
+            .distinct()
+            .groupBy("term_id")
+            .agg(F.count("*").alias("dfd"))
+            .collect()
+        )
+        ix._dfd_cache.update({r["term_id"]: r["dfd"] for r in rows})
+        for t in missing:  # terms with zero postings
+            ix._dfd_cache.setdefault(t, 0)
+    dfd = {t: ix._dfd_cache[t] for t in qset}
+    idf_map = F.map_from_arrays(
+        F.array([F.lit(int(t)).cast("long") for t in qset]),
+        F.array([F.lit(bm25_idf(n_docs, dfd.get(t, 0))) for t in qset]),
+    )
+    mdocs = scored_frame(ix, items, dfs, where, where_doc).select("doc_id").distinct()
+    tfdoc = (
+        post.join(mdocs, "doc_id", "left_semi")
+        .groupBy("term_id", "doc_id")
+        .agg(F.sum("tf").cast("int").alias("tf"))
+    )
+    cand = tfdoc.groupBy("doc_id").agg(
+        F.sort_array(F.collect_list(F.struct("term_id", "tf"))).alias(
+            "contribs"
+        )
+    )
+    withdl = cand.join(
+        ix.doc_meta.select("doc_id", "total_dl"), "doc_id", "inner"
+    )
+    dl = F.col("total_dl").cast("double")
+    score = F.aggregate(
+        F.col("contribs"),
+        F.lit(0.0),
+        lambda acc, x: acc
+        + (
+            (
+                F.element_at(idf_map, x["term_id"])
+                * (x["tf"].cast("double") * F.lit(K1 + 1.0))
+            )
+            / (
+                x["tf"].cast("double")
+                + F.lit(K1)
+                * (F.lit(1.0 - B) + (F.lit(B) * dl) / F.lit(avgdl_doc))
+            )
+        ),
+    )
+    return (
+        withdl.select("doc_id", score.alias("score"))
+        .orderBy(F.desc("score"), F.asc("doc_id"))
+        .limit(int(k))
+    )
+
+
+def search_expr_boosted(
+    ix: Index,
+    expr: Expr,
+    boosts: dict[str, float],
+    k: int = 10,
+    where: str | None = None,
+    where_doc: str | None = None,
+) -> DataFrame:
+    """BM25 top-k with per-term query-time boosts (Lucene's ``term^w``):
+    each boosted term's score contribution scales by its weight —
+    matching is UNCHANGED (boosts reweight the ranking, they never add
+    or remove matches).  `boosts` keys are words, tokenized/stemmed like
+    any literal (so "rolling" boosts the same term "roll" does); a key
+    that tokenizes to several words is refused rather than guessed.
+    OOV keys are ignored (they can't contribute score anyway).
+
+    Scale shape: identical to search_expr — the boost folds into the
+    per-term idf literal on the driver, so the scoring fold, shuffles
+    and top-k lowering are unchanged.  Always scores the full candidate
+    frame: block-max upper bounds don't know boosts, so the pruned route
+    would be unsound here."""
+    words = {}
+    for word, w in boosts.items():
+        toks = tokenize_terms(word)
+        if len(toks) != 1:
+            raise ValueError(
+                f"boost key must tokenize to exactly one word: "
+                f"{word!r} -> {toks}"
+            )
+        words[toks[0]] = float(w)
+    lut = ix.lookup_terms(sorted(words))
+    id_boosts = {lut[t][0]: w for t, w in words.items() if t in lut}
+    return _topk(_single(ix, expr, where, where_doc, id_boosts), k)
+
+
+def search_expr_collapsed(
+    ix: Index,
+    expr: Expr,
+    k: int = 10,
+    where: str | None = None,
+    where_doc: str | None = None,
+) -> DataFrame:
+    """Conversation-collapsed top-k (Lucene/Elasticsearch field
+    collapsing): ONE row per matching document, ranked by its
+    best-scoring matching turn → (doc_id, turn_idx, score, n_matched)
+    where turn_idx is the best turn (ties: lowest turn_idx) and
+    n_matched the document's matching-turn count.  Keeps a single
+    conversation from flooding the result page — the grouped-results
+    contract every transcript-search UI wants.
+
+    Scale shape: the full candidate frame must be scored (any turn
+    could be its document's best — same reason ES collapse scores all
+    hits), so this never takes the pruned route; the collapse itself is
+    one doc_id-keyed groupBy (best_turn_per_doc, the rule
+    search_many_collapsed shares) and the final top-k lowers to
+    TakeOrderedAndProject.  No new shuffle shapes."""
+    return _topk(best_turn_per_doc(_single(ix, expr, where, where_doc)), k)
+
+
+def search_expr_after(
+    ix: Index,
+    expr: Expr,
+    cursor: tuple[int, int, float] | None,
+    k: int = 10,
+    where: str | None = None,
+    where_doc: str | None = None,
+) -> DataFrame:
+    """Keyset pagination: the next `k` results strictly AFTER `cursor` =
+    (doc_id, turn_idx, score) — the previous page's LAST RESULT ROW,
+    passed back verbatim — in the engine's total result order (score
+    DESC, doc_id ASC, turn_idx ASC).  `cursor=None` is page one
+    (== search_expr).
+
+    Deep pagination the scale-safe way: OFFSET re-scores and re-sorts
+    every earlier page; the cursor is a plain filter on the scoring
+    frame, so page N costs the same as page 1 and the sort+limit still
+    lowers to TakeOrderedAndProject.  Scores are deterministic plan
+    outputs, so the collected cursor value re-injected as a literal
+    compares bit-identically on the next page."""
+    scored = _single(ix, expr, where, where_doc)
+    if cursor is not None:
+        d, t, s = int(cursor[0]), int(cursor[1]), float(cursor[2])
+        after_key = (
+            (F.col("score") < s)
+            | ((F.col("score") == s) & (F.col("doc_id") > d))
+            | (
+                (F.col("score") == s)
+                & (F.col("doc_id") == d)
+                & (F.col("turn_idx") > t)
+            )
+        )
+        scored = scored.where(after_key)
+    return _topk(scored, k)
+
+
+def match_set_expr(
+    ix: Index,
+    expr: Expr,
+    where: str | None = None,
+    where_doc: str | None = None,
+) -> DataFrame:
+    """Unranked match set (doc_id, turn_idx) in that order: the candidate
+    frame's matched rows, score pruned away (Catalyst drops the unused
+    fold) — Engine.match_set/count/facets/significant_terms and
+    QueryBuilder.matches."""
+    return _single(ix, expr, where, where_doc).select(*MATCH_COLS).orderBy(
+        *MATCH_COLS
+    )
+
+
+def match_set(ix: Index, query: str) -> DataFrame:
+    """Unranked match set in (doc_id, turn_idx) order — the reference's
+    native output order (searcher.rs:37-52)."""
+    return match_set_expr(ix, parse_query(query))
+
+
+def search_term_ids(
+    ix: Index, dfs: dict[int, int], k: int, exclude_doc: int
+) -> DataFrame:
+    """Keyword-OR top-k over dictionary term ids (`dfs`: id → df),
+    without one doc — Engine.more_like_this, whose terms are already
+    stemmed dictionary terms, so they are planned directly instead of
+    re-tokenized (re-stemming could change them)."""
+    ids = sorted(dfs)
+    frame = scored_frame(ix, [(0, PKeywords(tuple(ids)), ids)], dfs)
+    return _topk(
+        frame.drop("query_id").where(F.col("doc_id") != int(exclude_doc)), k
     )
 
 
 # ---------------------------------------------------------------------------
-# top level
+# batches
 
 
 def search_many(
@@ -820,10 +1250,9 @@ def search_many(
     k: int = 10,
     where: str | None = None,
     where_doc: str | None = None,
-    optimize: bool = True,
     mode: str = "auto",
     probe_blocks: int = 8,
-    direct_threshold: int = 32768,
+    direct_threshold: int = DIRECT_THRESHOLD,
     stats_out: dict | None = None,
 ) -> DataFrame:
     """Batch BM25 top-k → (query_id, doc_id, turn_idx, score), top-k rows
@@ -831,18 +1260,16 @@ def search_many(
     Per-query rows are bit-identical to the single-query `search` path.
 
     mode='auto' routes phrase-free queries through the block-max pruned
-    compressed index (_blocks_path) and phrase-bearing queries through the
-    positional postings scan; 'postings' forces everything through the
-    postings scan (the round-2 shape, kept for A/B and as the fallback);
-    'blocks' asserts no query needs positions.  Indexes with at most
-    direct_threshold blocks skip the probe/θ phases and decode every
-    candidate block in one pass (pruning only pays off when the block
-    count is large; set 0 to force the full WAND machinery)."""
+    compressed index (_blocks_path) and queries that need positions or
+    prohibited-side bits through the positional postings frame; 'blocks'
+    asserts no query needs them.  Indexes with at most direct_threshold
+    blocks skip the probe/θ phases and decode every candidate block in
+    one pass (pruning only pays off when the block count is large; set 0
+    to force the full WAND machinery)."""
     return search_many_exprs(
         ix, [parse_query(q) for q in queries], k=k, where=where,
-        where_doc=where_doc, optimize=optimize, mode=mode,
-        probe_blocks=probe_blocks, direct_threshold=direct_threshold,
-        stats_out=stats_out,
+        where_doc=where_doc, mode=mode, probe_blocks=probe_blocks,
+        direct_threshold=direct_threshold, stats_out=stats_out,
     )
 
 
@@ -852,61 +1279,27 @@ def search_many_exprs(
     k: int = 10,
     where: str | None = None,
     where_doc: str | None = None,
-    optimize: bool = True,
     mode: str = "auto",
     probe_blocks: int = 8,
-    direct_threshold: int = 32768,
+    direct_threshold: int = DIRECT_THRESHOLD,
     stats_out: dict | None = None,
     collapse: bool = False,
 ) -> DataFrame:
-    """search_many over pre-built ASTs — the batch twin of search_expr,
-    covering the full query algebra incl. the builder-only extensions
-    (Near/Prefix/Fuzzy/AndNot).  Routing: prefix/fuzzy lower to plain
-    keyword scans and ride the blocks path (pruning stays sound —
-    predicate terms == scoring terms); near queries need positions and
-    auto-route to the postings path like phrases; AndNot queries force
-    the postings path because the blocks machinery's candidate scan and
-    pair-granular pruned decode cover only SCORING terms, which would
-    leave the prohibited side's presence bits silently unset."""
-    words = sorted(
-        {t for e in exprs for lit_ in _literal_texts(e) for t in tokenize_terms(lit_)}
-    )
-    lut = ix.lookup_terms(words)
-    term_of = {w: lut[w][0] for w in lut}
-    nodes = []
-    dfs = {tid: df for tid, df in lut.values()}
-    prefix_ids, fuzzy_ids, exp_dfs = {}, {}, {}
-    for e in exprs:
-        _expand_multiterm(ix, e, prefix_ids, fuzzy_ids, exp_dfs)
-    dfs.update(exp_dfs)
-    for e in exprs:
-        nodes.append(
-            lower(e, term_of, optimize, prefix_ids=prefix_ids, fuzzy_ids=fuzzy_ids)
-        )
-    items = []
-    for qid, node in enumerate(nodes):
-        qids = sorted({t for t in plan_term_ids(node) if t > 0})
-        if qids:
-            items.append((qid, node, qids))
+    """search_many over pre-built ASTs, covering the full query algebra
+    incl. the builder-only extensions (Near/Prefix/Fuzzy/AndNot).
+    Routing: prefix/fuzzy lower to plain keyword sets and ride the blocks
+    path (pruning stays sound — predicate terms == scoring terms); near,
+    within and AndNot queries take the postings frame with the phrases
+    (query.needs_postings)."""
+    items, dfs = plan_exprs(ix, exprs)
     if not items:
         return ix.spark.createDataFrame(
             [], OUT_SCHEMA_COLLAPSED if collapse else OUT_SCHEMA
         )
-
-    n_docs = ix.stats["N"]
-    all_ids = sorted({t for _q, _n, qids in items for t in qids})
-    idf = {t: bm25_idf(n_docs, dfs.get(t, 0)) for t in all_ids}
-
-    def needs_postings(node: PNode) -> bool:
-        return bool(_phrase_term_ids(node)) or contains_diff(node)
-
-    phrase_items = [it for it in items if needs_postings(it[1])]
+    post_items = [it for it in items if needs_postings(it[1])]
     flat_items = [it for it in items if not needs_postings(it[1])]
-    if mode == "postings":
-        phrase_items, flat_items = items, []
-    elif mode == "auto" and flat_items and phrase_items:
-        total_blocks = ix.total_blocks
-        if total_blocks <= direct_threshold:
+    if mode == "auto" and flat_items and post_items:
+        if ix.total_blocks <= direct_threshold:
             # tiny index AND the positional postings scan is already being
             # paid for the phrase queries: folding the flat queries into
             # that one pipeline beats running a second (blocks) pipeline —
@@ -914,8 +1307,8 @@ def search_many_exprs(
             # the threshold the split stands: the phrase scan only fetches
             # the phrase queries' vocabulary while the flat queries prune
             # blocks.
-            phrase_items, flat_items = items, []
-    elif mode == "blocks" and phrase_items:
+            post_items, flat_items = items, []
+    elif mode == "blocks" and post_items:
         raise ValueError(
             "mode='blocks' cannot answer multi-term phrase / near / "
             "and_not queries (positions and prohibited-side presence "
@@ -928,16 +1321,15 @@ def search_many_exprs(
     if flat_items:
         parts.append(
             _blocks_path(
-                ix, flat_items, idf, k, where, where_doc, probe_blocks,
+                ix, flat_items, dfs, k, where, where_doc, probe_blocks,
                 direct_threshold=direct_threshold, stats_out=stats_out,
                 per_doc=collapse,
             )
         )
-    if phrase_items:
+    if post_items:
+        frame = scored_frame(ix, post_items, dfs, where, where_doc)
         parts.append(
-            _postings_path(
-                ix, phrase_items, idf, k, where, where_doc, per_doc=collapse
-            )
+            _top_k_per_query(best_turn_per_doc(frame) if collapse else frame, k)
         )
     handles = [h for p in parts if (h := getattr(p, "_joie_persisted", None)) is not None]
     out = parts[0]

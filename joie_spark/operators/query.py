@@ -1,38 +1,33 @@
-"""Boolean retrieval + BM25 top-k over the index tables.
+"""Query planning and the index reader.
 
-Physical planning mirrors the reference's rewrites
+Every search entry point plans through `plan_exprs`: one dictionary
+lookup for the expressions' words, one expansion pass for their
+prefix/fuzzy/regex nodes, then `lower` applies the reference's rewrites
 (engine/src/query/parser.rs:74-144):
 
-  * every literal plans as a phrase (parser.rs:87-90) —
-    conjunctive posting intersection (phrase.rs:37-77) expressed as a
-    count-match groupBy, then positional adjacency verified JVM-side with
-    `exists`/`array_contains` over the per-term position arrays (the one
-    genuinely custom operator, phrase.rs:89-126 — no UDF needed: the
-    position arrays are already in the postings table).
-  * AND of phrases flattens into ONE candidate pass over the union of all
-    term sets (IntersectingPhraseQuery, intersect.rs:149-229).
+  * every literal plans as a phrase (parser.rs:87-90);
+  * AND of phrases flattens into one phrase conjunction
+    (IntersectingPhraseQuery, intersect.rs:149-229);
   * OR whose children are all single-term literals becomes one keyword
-    scan `term_id IN (...)` (KeywordsQuery fast path, parser.rs:112-122).
-  * general AND = inner join on (doc_id, turn_idx) (intersect.rs:59-84);
-    general OR = union + dropDuplicates (union_query.rs:48-64).
+    set (KeywordsQuery, parser.rs:112-122).
 
-BM25 scoring is bit-identical to the single-node oracle: idf values are
-computed on the driver in Python (same math.log), avgdl comes from the
-stats aggregates, and the per-doc sum is a sequential fold over
-contributions sorted by term_id with the oracle's exact expression shape
-(FIXTURES.md §3), so float64 results agree bitwise.
+A plan is then matched and scored in ONE place, the candidate frame of
+operators/batch.py: `_batch_pred_sql` compiles each plan node to a
+predicate over a turn's term-presence bitmask (plus positions for
+phrase/proximity terms), and the BM25 fold there is bit-identical to the
+single-node oracle (idf on the driver with the same math.log, the
+per-turn sum in ascending term_id order, FIXTURES.md §3); the search
+variants are the tails there.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
-from functools import reduce
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..oracle import B, K1, bm25_idf
 from ..plans.parser import (
     And,
     AndNot,
@@ -45,7 +40,6 @@ from ..plans.parser import (
     Prefix,
     Regex,
     Within,
-    parse_query,
 )
 from ..sources.tables import (
     dict_gens_of,
@@ -53,7 +47,6 @@ from ..sources.tables import (
     live,
     read_stats,
     resolve_term_dict,
-    table_path,
 )
 from ..tokenizer import tokenize_terms
 
@@ -134,8 +127,9 @@ class PWithin(PNode):
 @dataclass(frozen=True)
 class PDiff(PNode):
     """Boolean difference (plans/parser.py AndNot): left's matches minus
-    right's — a left-anti join on (doc_id, turn_idx).  Right-side terms
-    are excluded from BM25 scoring (Lucene's prohibited-clause rule)."""
+    right's — `left AND NOT right` in the candidate predicate.
+    Right-side terms are excluded from BM25 scoring (Lucene's
+    prohibited-clause rule)."""
 
     left: PNode
     right: PNode
@@ -154,7 +148,6 @@ class POr(PNode):
 def lower(
     expr: Expr,
     term_of: dict[str, int],
-    optimize: bool = True,
     prefix_ids: dict[str, tuple[int, ...]] | None = None,
     fuzzy_ids: dict[tuple[str, int], tuple[int, ...]] | None = None,
 ) -> PNode:
@@ -223,16 +216,14 @@ def lower(
             kids = []
             for side in (rec(e.lhs), rec(e.rhs)):
                 kids.extend(side.children if isinstance(side, PAnd) else [side])
-            if optimize and all(isinstance(c, PPhrase) for c in kids):
+            if all(isinstance(c, PPhrase) for c in kids):
                 return PPhraseAnd(tuple(c.ids for c in kids))
             return PAnd(tuple(kids))
         if isinstance(e, Or):
             kids = []
             for side in (rec(e.lhs), rec(e.rhs)):
                 kids.extend(side.children if isinstance(side, POr) else [side])
-            if optimize and all(
-                isinstance(c, PPhrase) and len(c.ids) == 1 for c in kids
-            ):
+            if all(isinstance(c, PPhrase) and len(c.ids) == 1 for c in kids):
                 return PKeywords(tuple(c.ids[0] for c in kids))
             return POr(tuple(kids))
         raise TypeError(type(e))
@@ -269,17 +260,36 @@ def pred_term_ids(node: PNode) -> set[int]:
     return plan_term_ids(node)
 
 
-def contains_diff(node: PNode) -> bool:
-    """True when the plan holds a PDiff anywhere — the batch router sends
-    such queries down the postings path, whose candidate scan covers the
-    prohibited side's vocabulary (the blocks path's scan and pair-granular
-    pruned decode cover only SCORING terms, which would leave the rhs
-    presence bits silently unset)."""
+def needs_postings(node: PNode) -> bool:
+    """True when the plan must be matched from the positional postings
+    table: positions live only there, and so does a PDiff's prohibited
+    side — the blocks path's scan and pair-granular pruned decode cover
+    only SCORING terms, which would leave the rhs presence bits silently
+    unset."""
     if isinstance(node, PDiff):
         return True
     if isinstance(node, (PAnd, POr)):
-        return any(contains_diff(c) for c in node.children)
-    return False
+        return any(needs_postings(c) for c in node.children)
+    return bool(_phrase_term_ids(node))
+
+
+def required_term_ids(node: PNode) -> set[int]:
+    """Term ids every match of `node` contains: all terms of a phrase,
+    proximity node or phrase conjunction, the union over an AND's
+    children, an AndNot's left side.  Empty where no single term is
+    required (OR, keywords, minimum-should-match) — the phrase seed of
+    operators/batch.py then stays off."""
+    if isinstance(node, (PPhrase, PWithin)):
+        return {t for t in node.ids if t > 0}
+    if isinstance(node, PNear):
+        return {t for t in (node.lhs, node.rhs) if t > 0}
+    if isinstance(node, PPhraseAnd):
+        return {t for p in node.phrases for t in p if t > 0}
+    if isinstance(node, PAnd):
+        return {t for c in node.children for t in required_term_ids(c)}
+    if isinstance(node, PDiff):
+        return required_term_ids(node.left)
+    return set()
 
 
 def _phrase_term_ids(node: PNode) -> set[int]:
@@ -418,19 +428,6 @@ class Index:
             return df
         return df.join(F.broadcast(t), "doc_id", "left_anti")
 
-    def dfs_for(self, term_ids: set[int]) -> dict[int, int]:
-        """term_id → df for a BOUNDED set of query terms (one filtered
-        dictionary read; the id-keyed twin of lookup_terms)."""
-        ids = sorted(t for t in term_ids if t > 0)
-        if not ids:
-            return {}
-        rows = (
-            self.term_dict.where(F.col("term_id").isin(ids))
-            .select("term_id", "df")
-            .collect()
-        )
-        return {r["term_id"]: r["df"] for r in rows}
-
     def lookup_terms(self, words: list[str]) -> dict[str, tuple[int, int]]:
         """term string → (term_id, df); missing → absent (OOV).
 
@@ -555,14 +552,9 @@ class Index:
             F.col("bucket").isin(buckets) & F.col("term_id").isin(ids)
         )
 
-    def empty_match(self) -> DataFrame:
-        return self.spark.createDataFrame(
-            [], T.StructType([RESULT_SCHEMA[0], RESULT_SCHEMA[1]])
-        )
-
 
 # ---------------------------------------------------------------------------
-# boolean evaluation → match set DataFrame (doc_id, turn_idx)
+# planning and the search variants
 
 
 def _regex_literal_prefix(pat: str) -> str:
@@ -595,730 +587,70 @@ def _regex_literal_prefix(pat: str) -> str:
     return out
 
 
-def _adjacency_pred(posmap: Column, ids: tuple[int, ...]) -> Column:
-    """∃p: p ∈ pos[ids[0]] ∧ p+1 ∈ pos[ids[1]] ∧ … — positional phrase
-    adjacency, equivalent to the reference's term-sequence memmem scan
-    (phrase.rs:104-126), evaluated entirely inside codegen."""
-    def key(tid: int) -> Column:
-        return F.lit(int(tid)).cast("long")
-
-    def chain(p: Column) -> Column:
-        conds = [
-            F.array_contains(F.element_at(posmap, key(tid)), p + j)
-            for j, tid in enumerate(ids[1:], start=1)
-        ]
-        return reduce(lambda a, b: a & b, conds) if conds else F.lit(True)
-
-    return F.exists(F.element_at(posmap, key(ids[0])), chain)
-
-
-def _near_pred(posmap: Column, node: "PNear") -> Column:
-    """∃p ∈ pos[lhs], q ∈ pos[rhs]: |q−p| ≤ slop (ordered: 0 < q−p ≤
-    slop) — pure codegen over the per-term position arrays, the sloppy
-    generalization of `_adjacency_pred` (which is the ordered slop=1
-    subcase restricted to exact sequence steps)."""
-    lpos = F.element_at(posmap, F.lit(int(node.lhs)).cast("long"))
-    rpos = F.element_at(posmap, F.lit(int(node.rhs)).cast("long"))
-    slop = F.lit(int(node.slop))
-    if node.ordered:
-        inner = lambda p: lambda q: (q > p) & (q - p <= slop)  # noqa: E731
-    else:
-        inner = lambda p: lambda q: (q != p) & (F.abs(q - p) <= slop)  # noqa: E731
-    return F.exists(lpos, lambda p: F.exists(rpos, inner(p)))
-
-
-def _within_pred(posmap: Column, node: "PWithin") -> Column:
-    """∃ anchor p ∈ ⋃ pos[t]: ∀ t: ∃ q ∈ pos[t]: p ≤ q ≤ p+window —
-    pure codegen.  Sound and complete for max−min ≤ window: a witness
-    choice's minimum is such an anchor, and any anchor's per-term picks
-    span ≤ window.  Cost O(P²·k) over one candidate turn's positions."""
-    arrs = [
-        F.element_at(posmap, F.lit(int(t)).cast("long")) for t in node.ids
-    ]
-    anchors = F.flatten(F.array(*arrs))
-    w = F.lit(int(node.window))
-
-    def covered(p: Column) -> Column:
-        conds = [
-            F.exists(a, lambda q: (q >= p) & (q <= p + w)) for a in arrs
-        ]
-        return reduce(lambda x, y: x & y, conds)
-
-    return F.exists(anchors, covered)
-
-
-# Rarest-term-first seeding engages when the spread between the phrase's
-# hottest and rarest term df crosses this ratio (the scan saved is ~the
-# hot term's share of the postings read) AND the rare term's postings fit
-# a broadcast (its df IS the seed row count, known exactly from the
-# dictionary before any job runs) AND the hot term's postings are big
-# enough that skipping them repays the seed's extra scan + broadcast
-# build (PHRASE_SEED_MIN_HOT_DF — measured crossover, see
-# BENCH/PHRASE_SEED.md: at hot-df ~4k the seed loses ~80 ms; it wins
-# once the hot term's positional postings dominate the shuffle).
+# Rarest-term-first phrase seeding (operators/batch.py _seed_term_ids)
+# engages when the spread between the hottest scanned term's df and the
+# seed's df crosses this ratio (the scan saved is ~the hot term's share
+# of the postings read) AND the seed postings fit a broadcast (the seed
+# terms' dfs bound the seed row count, known exactly from the dictionary
+# before any job runs) AND the hot term's postings are big enough that
+# skipping them repays the seed's extra scan + broadcast build
+# (PHRASE_SEED_MIN_HOT_DF — measured crossover, see BENCH/PHRASE_SEED.md:
+# at hot-df ~4k the seed loses ~80 ms; it wins once the hot term's
+# positional postings dominate the shuffle).  Read at call time, so a
+# caller may set them on this module.
 PHRASE_SEED_DF_RATIO = 8.0
 PHRASE_SEED_BROADCAST_MAX = 2_000_000
 PHRASE_SEED_MIN_HOT_DF = 25_000
 
 
-def _phrase_candidates(
-    ix: Index, unique_ids: set[int], dfs: dict[int, int] | None = None
-) -> DataFrame:
-    """Turns containing ALL of unique_ids, with per-term position map.
-
-    Rarest-term-first pruning (VERDICT r4 item 2 — the distributed
-    analogue of the reference seeding phrase evaluation from its smallest
-    posting list, engine/src/query/phrase.rs:48): a stopword phrase like
-    `"the <rare>"` would otherwise shuffle every positional posting of
-    `the` into the count-match groupBy only to drop ~all of it.  When the
-    df spread is extreme (PHRASE_SEED_DF_RATIO) and the rarest term's
-    postings are broadcast-small (df ≤ PHRASE_SEED_BROADCAST_MAX — df is
-    the exact seed size, known from the dictionary), the rare term's
-    (doc_id, turn_idx) set is broadcast and semi-joined against the scan
-    BEFORE the groupBy: the hot term's rows die at the scan side of the
-    shuffle instead of crossing it.  Conjunctive semantics are untouched
-    — every surviving group still requires ALL terms present, and every
-    true candidate contains the rare term by definition."""
-    post = ix.postings_for(unique_ids)
-    ids = sorted(t for t in unique_ids if t > 0)
-    if len(ids) > 1:
-        if dfs is None:
-            dfs = ix.dfs_for(set(ids))
-        known = [t for t in ids if dfs.get(t, 0) > 0]
-        if known:
-            lo_t = min(known, key=lambda t: dfs[t])
-            lo, hi = dfs[lo_t], max(dfs[t] for t in known)
-            if (
-                hi >= lo * PHRASE_SEED_DF_RATIO
-                and hi >= PHRASE_SEED_MIN_HOT_DF
-                and lo <= PHRASE_SEED_BROADCAST_MAX
-            ):
-                seed = ix.postings_for({lo_t}).select(*MATCH_COLS)
-                post = post.join(F.broadcast(seed), MATCH_COLS, "left_semi")
-    return (
-        post.groupBy(*MATCH_COLS)
-        .agg(
-            F.map_from_entries(
-                F.collect_list(F.struct("term_id", "positions"))
-            ).alias("posmap"),
-            F.count("*").alias("nt"),
-        )
-        .where(F.col("nt") == len(unique_ids))
+def plan_exprs(
+    ix: Index, exprs: list[Expr]
+) -> tuple[list[tuple[int, PNode, list[int]]], dict[int, int]]:
+    """The one planning sequence behind every search entry point: ONE
+    dictionary lookup for every literal word of `exprs`, ONE expansion
+    pass over their prefix/fuzzy/regex nodes (a pattern repeated across
+    expressions costs one dictionary scan), then `lower` →
+    (items, dfs).  `items` holds (query_id, plan, scoring term ids) for
+    every expression that has a scoring term — one without any can
+    match nothing — and `dfs` maps every looked-up term id to its df."""
+    words = sorted(
+        {t for e in exprs for lit_ in _literal_texts(e) for t in tokenize_terms(lit_)}
     )
-
-
-def eval_match(
-    ix: Index, node: PNode, dfs: dict[int, int] | None = None
-) -> DataFrame:
-    if isinstance(node, PKeywords):
-        ids = {t for t in node.ids if t > 0}
-        if not ids:
-            return ix.empty_match()
-        return ix.postings_for(ids).select(*MATCH_COLS).distinct()
-
-    if isinstance(node, PMinMatch):
-        ids = {t for t in node.ids if t > 0}
-        if len(ids) < node.m:
-            return ix.empty_match()  # fewer live terms than the floor
-        return (
-            ix.postings_for(ids)
-            .groupBy(*MATCH_COLS)
-            .agg(F.count_distinct("term_id").alias("_nt"))
-            .where(F.col("_nt") >= node.m)
-            .select(*MATCH_COLS)
-        )
-
-    if isinstance(node, PPhrase):
-        if not node.ids or 0 in node.ids:
-            return ix.empty_match()
-        unique = set(node.ids)
-        cand = _phrase_candidates(ix, unique, dfs)
-        if len(node.ids) > 1:
-            cand = cand.where(_adjacency_pred(F.col("posmap"), node.ids))
-        return cand.select(*MATCH_COLS)
-
-    if isinstance(node, PNear):
-        if node.lhs == 0 or node.rhs == 0:
-            return ix.empty_match()
-        cand = _phrase_candidates(ix, {node.lhs, node.rhs}, dfs)
-        return cand.where(_near_pred(F.col("posmap"), node)).select(*MATCH_COLS)
-
-    if isinstance(node, PWithin):
-        if not node.ids or 0 in node.ids:
-            return ix.empty_match()  # an OOV word can never co-occur
-        cand = _phrase_candidates(ix, set(node.ids), dfs)
-        if len(node.ids) > 1:
-            cand = cand.where(_within_pred(F.col("posmap"), node))
-        # single distinct term: the span is one position, trivially ≤ w
-        return cand.select(*MATCH_COLS)
-
-    if isinstance(node, PPhraseAnd):
-        if any((not p or 0 in p) for p in node.phrases):
-            return ix.empty_match()
-        unique = {t for p in node.phrases for t in p}
-        cand = _phrase_candidates(ix, unique, dfs)
-        for p in node.phrases:
-            if len(p) > 1:
-                cand = cand.where(_adjacency_pred(F.col("posmap"), p))
-        return cand.select(*MATCH_COLS)
-
-    if isinstance(node, PDiff):
-        left = eval_match(ix, node.left, dfs)
-        right = eval_match(ix, node.right, dfs)
-        # left-anti on the composite key; the right side is a match SET
-        # (one row per turn), so no row explosion and Spark picks
-        # broadcast vs shuffled anti by its own size estimate
-        return left.join(right, MATCH_COLS, "left_anti")
-
-    if isinstance(node, PAnd):
-        parts = [eval_match(ix, c, dfs) for c in node.children]
-        return reduce(lambda a, b: a.join(b, MATCH_COLS, "inner"), parts)
-
-    if isinstance(node, POr):
-        parts = [eval_match(ix, c, dfs) for c in node.children]
-        return reduce(DataFrame.unionByName, parts).dropDuplicates(MATCH_COLS)
-
-    raise TypeError(type(node))
-
-
-# ---------------------------------------------------------------------------
-# BM25 scoring (bit-identical to oracle.bm25_term fold)
-
-
-def scored_matches(
-    ix: Index,
-    match: DataFrame,
-    qterm_ids: list[int],
-    dfs: dict[int, int] | None = None,
-    boosts: dict[int, float] | None = None,
-) -> DataFrame:
-    """BM25-score a match set over unique query terms → UNRANKED
-    (doc_id, turn_idx, score), one row per matching turn — the shared
-    scoring frame behind score_matches (top-k), search_expr_collapsed
-    (per-conversation best) and search_expr_after (keyset pagination).
-
-    `dfs` (term_id → df) avoids a second dictionary read when the caller
-    already looked the terms up."""
-    qids = sorted({t for t in qterm_ids if t > 0})
-    if not qids:
-        return ix.spark.createDataFrame([], RESULT_SCHEMA)
-
-    if dfs is None:
-        dfs = {
-            r["term_id"]: r["df"]
-            for r in ix.term_dict.where(F.col("term_id").isin(qids))
-            .select("term_id", "df")
-            .collect()
-        }
-    n_docs = ix.stats["N"]
-    avgdl = ix.stats["avgdl"]
-    # per-term boost folds into the idf literal (Lucene's `term^w`:
-    # score contribution scales linearly), so the scoring fold below is
-    # unchanged and stays bit-identical to the oracle's boosted twin
-    boosts = boosts or {}
-    idf_map = F.map_from_arrays(
-        F.array([F.lit(int(t)).cast("long") for t in qids]),
-        F.array(
-            [
-                F.lit(bm25_idf(n_docs, dfs.get(t, 0)) * boosts.get(t, 1.0))
-                for t in qids
-            ]
-        ),
-    )
-
-    cand = (
-        ix.postings_for(set(qids))
-        .join(match.select(*MATCH_COLS), MATCH_COLS, "left_semi")
-        .groupBy(*MATCH_COLS)
-        .agg(
-            F.sort_array(F.collect_list(F.struct("term_id", "tf"))).alias("contribs"),
-            F.first("dl").alias("dl"),
-        )
-    )
-
-    c_k1p1 = F.lit(K1 + 1.0)
-    c_k1 = F.lit(K1)
-    c_1mb = F.lit(1.0 - B)
-    c_b = F.lit(B)
-    c_avgdl = F.lit(avgdl)
-    dl = F.col("dl").cast("double")
-
-    # oracle.bm25_term: idf * (tf*(K1+1)) / (tf + K1*((1-B) + (B*dl)/avgdl))
-    score = F.aggregate(
-        F.col("contribs"),
-        F.lit(0.0),
-        lambda acc, x: acc
-        + (
-            (F.element_at(idf_map, x["term_id"]) * (x["tf"].cast("double") * c_k1p1))
-            / (
-                x["tf"].cast("double")
-                + c_k1 * (c_1mb + (c_b * dl) / c_avgdl)
-            )
-        ),
-    )
-
-    # matched turns containing none of the scoring terms (impossible here:
-    # every match contains ≥1 query term) would be dropped by the semi-join;
-    # boolean semantics guarantee ≥1 term per match, so sets agree.
-    return cand.select("doc_id", "turn_idx", score.alias("score"))
-
-
-def score_matches(
-    ix: Index,
-    match: DataFrame,
-    qterm_ids: list[int],
-    k: int = 10,
-    dfs: dict[int, int] | None = None,
-) -> DataFrame:
-    """BM25 score match set over unique query terms → top-k DataFrame."""
-    return _topk(scored_matches(ix, match, qterm_ids, dfs=dfs), k)
-
-
-def _topk(scored: DataFrame, k: int) -> DataFrame:
-    """The engine's total result order (score DESC, doc_id ASC, turn_idx
-    ASC) cut at k — the sort+limit lowers to TakeOrderedAndProject (no
-    full sort)."""
-    return scored.orderBy(
-        F.desc("score"), F.asc("doc_id"), F.asc("turn_idx")
-    ).limit(k)
-
-
-# ---------------------------------------------------------------------------
-# top-level search
-
-
-def search(
-    ix: Index,
-    query: str,
-    k: int = 10,
-    where: str | None = None,
-    where_doc: str | None = None,
-    optimize: bool = True,
-) -> DataFrame:
-    """Parse → plan → boolean match → optional filters → BM25 top-k.
-
-    `where` is a SQL predicate over turn columns (role, tool, ts, conv_id,
-    turn_idx) — joie's (dead) SentenceFilter surface
-    (engine/src/query/filter.rs:36-44) made real.  `where_doc` is a SQL
-    predicate over doc_meta columns (conv_id, n_turns, total_dl, first_ts,
-    last_ts, roles) — the analogue of joie's DocumentFilter
-    (engine/src/query/filter.rs:7-34).  Both are ordinary `.where()`s so
-    Catalyst pushes them into the scans."""
-    return search_expr(
-        ix, parse_query(query), k=k, where=where, where_doc=where_doc,
-        optimize=optimize,
-    )
-
-
-def search_expr(
-    ix: Index,
-    expr: Expr,
-    k: int = 10,
-    where: str | None = None,
-    where_doc: str | None = None,
-    optimize: bool = True,
-) -> DataFrame:
-    """search() over a pre-built AST — the programmatic QueryBuilder's
-    evaluation path (plans/builder.py), shared with the string parser."""
-    match, qids, dfs = _plan_search(ix, expr, where, where_doc, optimize)
-    return score_matches(ix, match, qids, k, dfs=dfs)
-
-
-def _plan_search(
-    ix: Index,
-    expr: Expr,
-    where: str | None,
-    where_doc: str | None,
-    optimize: bool,
-) -> tuple[DataFrame, list[int], dict[int, int]]:
-    """Shared front half of every exhaustive-path entry point: dictionary
-    lookup → multi-term expansion → lower → boolean match set (tombstones
-    excluded, filters semi-joined) → (match, scoring term ids, dfs)."""
-    words = sorted({t for lit_ in _literal_texts(expr) for t in tokenize_terms(lit_)})
     lut = ix.lookup_terms(words)
-    term_of = {w: lut[w][0] for w in lut}
-
-    prefix_ids, fuzzy_ids, exp_dfs = _expand_multiterm(ix, expr)
-    node = lower(
-        expr, term_of, optimize, prefix_ids=prefix_ids, fuzzy_ids=fuzzy_ids
-    )
-    dfs = {tid: df for tid, df in lut.values()}
-    dfs.update(exp_dfs)
-    match = ix.exclude_tombstones(eval_match(ix, node, dfs))
-    if where:
-        match = match.join(
-            ix.turns.where(where).select(*MATCH_COLS), MATCH_COLS, "left_semi"
-        )
-    if where_doc:
-        match = match.join(
-            ix.doc_meta.where(where_doc).select("doc_id"), "doc_id", "left_semi"
-        )
-    qids = sorted({t for t in plan_term_ids(node) if t > 0})
-    return match, qids, dfs
-
-
-def search_expr_decayed(
-    ix: Index,
-    expr: Expr,
-    ref_ts: str,
-    half_life_s: float,
-    k: int = 10,
-    where: str | None = None,
-    where_doc: str | None = None,
-    optimize: bool = True,
-) -> DataFrame:
-    """BM25 top-k with exponential recency decay (the Elasticsearch
-    function_score exp-decay shape): each turn's score multiplies by
-    ``2^(-(ref_ts − ts)/half_life_s)`` — a turn `half_life_s` seconds
-    older than `ref_ts` scores half as much; turns newer than `ref_ts`
-    boost above 1 (no clamp — pass the corpus max ts as ref for pure
-    decay).  `ref_ts` is an explicit SQL timestamp literal ('2024-01-01
-    00:00:00'): recency must be deterministic, never wall-clock.
-
-    Matching is unchanged (decay reweights, never filters).  Scale
-    shape: one extra (doc_id, turn_idx) semi-join-shaped inner join of
-    the scored frame against the turns row store to fetch ts (the same
-    pushdown shape the `where` filter uses), one scalar multiply in the
-    projection; top-k still lowers to TakeOrderedAndProject."""
-    if not ref_ts:
-        raise ValueError("ref_ts must be an explicit timestamp literal")
-    if half_life_s <= 0:
-        raise ValueError("half_life_s must be > 0")
-    age_s = F.unix_timestamp(F.lit(ref_ts).cast("timestamp")) - F.unix_timestamp(
-        F.col("ts")
-    )
-    decay = F.pow(F.lit(0.5), age_s.cast("double") / F.lit(float(half_life_s)))
-    return _reweighted(ix, expr, decay, k, where, where_doc, optimize)
-
-
-def search_expr_function_score(
-    ix: Index,
-    expr: Expr,
-    weight_expr: str,
-    k: int = 10,
-    where: str | None = None,
-    where_doc: str | None = None,
-    optimize: bool = True,
-) -> DataFrame:
-    """BM25 top-k reweighted by an arbitrary SQL expression over the
-    turn's row-store metadata (the Elasticsearch function_score
-    filter/weight shape — e.g. ``CASE WHEN role = 'assistant' THEN 2.0
-    ELSE 1.0 END``, or any expression over conv_id/role/tool/ts/dl).
-    The recency decay path (search_expr_decayed) is the ts special case
-    of this; boosts (search_expr_boosted) are the query-term special
-    case.  `weight_expr` must be deterministic (no rand()/now()) — the
-    caller's contract, same as `where`.  Numeric-literal gotcha: Spark
-    SQL parses ``1.0`` as DECIMAL, so ``1.0/(1.0+dl)`` divides in
-    decimal before the double cast (ULP drift vs float64); write double
-    literals as ``1e0`` (or CAST) when bit-exact scores matter.
-
-    Matching is unchanged (weights reweight, never filter; a weight of
-    0 can sink a row below top-k but it still matched).  Scale shape:
-    identical to decay — one (doc_id, turn_idx) inner join of the
-    scored frame against the turns row store for metadata (Catalyst
-    prunes the fetch to the columns `weight_expr` actually references),
-    one scalar multiply, TakeOrderedAndProject top-k."""
-    if not weight_expr or not weight_expr.strip():
-        raise ValueError("weight_expr must be a non-empty SQL expression")
-    weight = F.expr(weight_expr).cast("double")
-    return _reweighted(ix, expr, weight, k, where, where_doc, optimize)
-
-
-def _reweighted(
-    ix: Index,
-    expr: Expr,
-    weight: Column,
-    k: int,
-    where: str | None,
-    where_doc: str | None,
-    optimize: bool,
-) -> DataFrame:
-    """Shared tail of the post-score reweighting variants (decay,
-    function_score): exhaustive scoring frame → (doc_id, turn_idx) inner
-    join against the turns row store for the metadata `weight` reads
-    (Catalyst prunes the fetch to the columns it references) → score ×
-    weight → top-k."""
-    match, qids, dfs = _plan_search(ix, expr, where, where_doc, optimize)
-    scored = scored_matches(ix, match, qids, dfs=dfs)
-    with_meta = scored.join(
-        ix.turns.select(*MATCH_COLS, "conv_id", "role", "tool", "ts", "dl"),
-        MATCH_COLS,
-        "inner",
-    )
-    return _topk(
-        with_meta.select(
-            "doc_id", "turn_idx", (F.col("score") * weight).alias("score")
-        ),
-        k,
-    )
-
-
-def search_docs_expr(
-    ix: Index,
-    expr: Expr,
-    k: int = 10,
-    where: str | None = None,
-    where_doc: str | None = None,
-    optimize: bool = True,
-) -> DataFrame:
-    """Conversation-level BM25 top-k — rank whole documents, not turns.
-
-    A conversation matches when ANY of its turns matches the boolean
-    query (the existential lift; `where`/`where_doc` filter the turn
-    match set before lifting, so "docs with a matching USER turn" works).
-    It scores with TRUE document-level BM25: tf summed over all the
-    conversation's turns, dl = the conversation's total_dl, df =
-    distinct conversations containing the term, N/avgdl over
-    conversations.  This is the ES/Lucene document-ranking shape;
-    search_expr_collapsed is the other lift (rank docs by their single
-    best turn) — collapse favors one strong turn, search_docs favors
-    sustained relevance across the conversation.
-
-    → (doc_id, score) top-k, score DESC then doc_id ASC.
-
-    Scale shape: the match set lifts to docs with one distinct; doc
-    tf is the term_id-pruned postings scan semi-joined to matching docs
-    and aggregated on (term_id, doc_id); per-term doc-df is one partial
-    agg over the same pruned scan, collected bounded (≤ |query terms|
-    rows, like dfs); the per-doc fold reuses the sorted-struct
-    F.aggregate so float64 scores are bit-identical to the Python
-    recompute (tests/test_rank_eval.py).  Stats drift under unpurged
-    tombstones matches the turn-level path (frozen until compact)."""
-    match, qids, dfs = _plan_search(ix, expr, where, where_doc, optimize)
-    qset = sorted({t for t in qids if t > 0})
-    out_schema = T.StructType([RESULT_SCHEMA[0], RESULT_SCHEMA[2]])
-    if not qset:
-        return ix.spark.createDataFrame([], out_schema)
-    n_docs, avgdl_doc = ix.doc_stats()
-    if not n_docs or not avgdl_doc:
-        return ix.spark.createDataFrame([], out_schema)
-    post = ix.postings_for(set(qset))
-    # per-term doc-df is a corpus statistic (≤ |query terms| numbers):
-    # cache it on the Index so repeated queries sharing terms skip the
-    # postings re-scan (the Engine reloads the Index on append/delete/
-    # compact, invalidating the cache with the rest of the handles)
-    missing = [t for t in qset if t not in ix._dfd_cache]
-    if missing:
-        rows = (
-            ix.postings_for(set(missing))
-            .select("term_id", "doc_id")
-            .distinct()
-            .groupBy("term_id")
-            .agg(F.count("*").alias("dfd"))
-            .collect()
-        )
-        ix._dfd_cache.update({r["term_id"]: r["dfd"] for r in rows})
-        for t in missing:  # terms with zero postings
-            ix._dfd_cache.setdefault(t, 0)
-    dfd = {t: ix._dfd_cache[t] for t in qset}
-    idf_map = F.map_from_arrays(
-        F.array([F.lit(int(t)).cast("long") for t in qset]),
-        F.array([F.lit(bm25_idf(n_docs, dfd.get(t, 0))) for t in qset]),
-    )
-    mdocs = match.select("doc_id").distinct()
-    tfdoc = (
-        post.join(mdocs, "doc_id", "left_semi")
-        .groupBy("term_id", "doc_id")
-        .agg(F.sum("tf").cast("int").alias("tf"))
-    )
-    cand = tfdoc.groupBy("doc_id").agg(
-        F.sort_array(F.collect_list(F.struct("term_id", "tf"))).alias(
-            "contribs"
-        )
-    )
-    withdl = cand.join(
-        ix.doc_meta.select("doc_id", "total_dl"), "doc_id", "inner"
-    )
-    dl = F.col("total_dl").cast("double")
-    score = F.aggregate(
-        F.col("contribs"),
-        F.lit(0.0),
-        lambda acc, x: acc
-        + (
-            (
-                F.element_at(idf_map, x["term_id"])
-                * (x["tf"].cast("double") * F.lit(K1 + 1.0))
-            )
-            / (
-                x["tf"].cast("double")
-                + F.lit(K1)
-                * (F.lit(1.0 - B) + (F.lit(B) * dl) / F.lit(avgdl_doc))
-            )
-        ),
-    )
-    return (
-        withdl.select("doc_id", score.alias("score"))
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(int(k))
-    )
-
-
-def search_expr_boosted(
-    ix: Index,
-    expr: Expr,
-    boosts: dict[str, float],
-    k: int = 10,
-    where: str | None = None,
-    where_doc: str | None = None,
-    optimize: bool = True,
-) -> DataFrame:
-    """BM25 top-k with per-term query-time boosts (Lucene's ``term^w``):
-    each boosted term's score contribution scales by its weight —
-    matching is UNCHANGED (boosts reweight the ranking, they never add
-    or remove matches).  `boosts` keys are words, tokenized/stemmed like
-    any literal (so "rolling" boosts the same term "roll" does); a key
-    that tokenizes to several words is refused rather than guessed.
-    OOV keys are ignored (they can't contribute score anyway).
-
-    Scale shape: identical to search_expr — the boost folds into the
-    per-term idf literal on the driver, so the scoring fold, shuffles
-    and top-k lowering are unchanged.  Rides the exhaustive scorer:
-    block-max WAND upper bounds don't know boosts, so the pruned paths
-    would be unsound here."""
-    match, qids, dfs = _plan_search(ix, expr, where, where_doc, optimize)
-    id_boosts: dict[int, float] = {}
-    for word, w in boosts.items():
-        toks = tokenize_terms(word)
-        if len(toks) != 1:
-            raise ValueError(
-                f"boost key must tokenize to exactly one word: "
-                f"{word!r} -> {toks}"
-            )
-        lut = ix.lookup_terms(toks)
-        if toks[0] in lut:
-            id_boosts[lut[toks[0]][0]] = float(w)
-    return _topk(scored_matches(ix, match, qids, dfs=dfs, boosts=id_boosts), k)
-
-
-def search_expr_collapsed(
-    ix: Index,
-    expr: Expr,
-    k: int = 10,
-    where: str | None = None,
-    where_doc: str | None = None,
-    optimize: bool = True,
-) -> DataFrame:
-    """Conversation-collapsed top-k (Lucene/Elasticsearch field
-    collapsing): ONE row per matching document, ranked by its
-    best-scoring matching turn → (doc_id, turn_idx, score, n_matched)
-    where turn_idx is the best turn (ties: lowest turn_idx) and
-    n_matched the document's matching-turn count.  Keeps a single
-    conversation from flooding the result page — the grouped-results
-    contract every transcript-search UI wants.
-
-    Scale shape: the full match set must be scored (any turn could be
-    its document's best — same reason ES collapse scores all hits), so
-    this rides the exhaustive scorer; the collapse itself is one
-    doc_id-keyed groupBy (partial-aggregated map-side: the scoring frame
-    arrives already grouped by (doc_id, turn_idx)) and the final top-k
-    lowers to TakeOrderedAndProject.  No new shuffle shapes."""
-    match, qids, dfs = _plan_search(ix, expr, where, where_doc, optimize)
-    scored = scored_matches(ix, match, qids, dfs=dfs)
-    # max(struct(score, -turn_idx)) = highest score, ties → lowest turn
-    best = scored.groupBy("doc_id").agg(
-        F.max(F.struct(F.col("score"), (-F.col("turn_idx")).alias("nti"))).alias(
-            "best"
-        ),
-        F.count("*").alias("n_matched"),
-    )
-    return (
-        best.select(
-            "doc_id",
-            (-F.col("best.nti")).cast("int").alias("turn_idx"),
-            F.col("best.score").alias("score"),
-            "n_matched",
-        )
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
-    )
-
-
-def search_expr_after(
-    ix: Index,
-    expr: Expr,
-    cursor: tuple[int, int, float] | None,
-    k: int = 10,
-    where: str | None = None,
-    where_doc: str | None = None,
-    optimize: bool = True,
-) -> DataFrame:
-    """Keyset pagination: the next `k` results strictly AFTER `cursor` =
-    (doc_id, turn_idx, score) — the previous page's LAST RESULT ROW,
-    passed back verbatim — in the engine's total result order (score
-    DESC, doc_id ASC, turn_idx ASC).  `cursor=None` is page one
-    (== search_expr).
-
-    Deep pagination the scale-safe way: OFFSET re-scores and re-sorts
-    every earlier page; the cursor is a plain filter on the scoring
-    frame, so page N costs the same as page 1 and the sort+limit still
-    lowers to TakeOrderedAndProject.  Scores are deterministic plan
-    outputs, so the collected cursor value re-injected as a literal
-    compares bit-identically on the next page."""
-    match, qids, dfs = _plan_search(ix, expr, where, where_doc, optimize)
-    scored = scored_matches(ix, match, qids, dfs=dfs)
-    if cursor is not None:
-        d, t, s = int(cursor[0]), int(cursor[1]), float(cursor[2])
-        after_key = (
-            (F.col("score") < s)
-            | ((F.col("score") == s) & (F.col("doc_id") > d))
-            | (
-                (F.col("score") == s)
-                & (F.col("doc_id") == d)
-                & (F.col("turn_idx") > t)
-            )
-        )
-        scored = scored.where(after_key)
-    return _topk(scored, k)
-
-
-def match_set_expr(ix: Index, expr: Expr, optimize: bool = True) -> DataFrame:
-    words = sorted({t for lit_ in _literal_texts(expr) for t in tokenize_terms(lit_)})
-    lut = ix.lookup_terms(words)
-    prefix_ids, fuzzy_ids, exp_dfs = _expand_multiterm(ix, expr)
-    node = lower(
-        expr,
-        {w: lut[w][0] for w in lut},
-        optimize,
-        prefix_ids=prefix_ids,
-        fuzzy_ids=fuzzy_ids,
-    )
-    dfs = {tid: df for tid, df in lut.values()}
-    dfs.update(exp_dfs)
-    return ix.exclude_tombstones(eval_match(ix, node, dfs)).orderBy(*MATCH_COLS)
+    term_of = {w: tid for w, (tid, _df) in lut.items()}
+    dfs = dict(lut.values())
+    prefix_ids: dict[str, tuple[int, ...]] = {}
+    fuzzy_ids: dict[tuple[str, int], tuple[int, ...]] = {}
+    for e in exprs:
+        _expand_multiterm(ix, e, prefix_ids, fuzzy_ids, dfs)
+    items = []
+    for qid, e in enumerate(exprs):
+        node = lower(e, term_of, prefix_ids=prefix_ids, fuzzy_ids=fuzzy_ids)
+        qids = sorted({t for t in plan_term_ids(node) if t > 0})
+        if qids:
+            items.append((qid, node, qids))
+    return items, dfs
 
 
 def _expand_multiterm(
     ix: Index,
     expr: Expr,
-    prefix_ids: dict[str, tuple[int, ...]] | None = None,
-    fuzzy_ids: dict[tuple[str, int], tuple[int, ...]] | None = None,
-    exp_dfs: dict[int, int] | None = None,
-    regex_ids: dict[str, tuple[int, ...]] | None = None,
-) -> tuple[
-    dict[str, tuple[int, ...]],
-    dict[tuple[str, int], tuple[int, ...]],
-    dict[int, int],
-]:
-    """Every Prefix / Fuzzy / Regex node's dictionary expansion, plus the
-    expanded terms' dfs (they participate in BM25 scoring exactly like
-    spelled-out OR keywords — score_matches would otherwise default
-    their df to 0).  Pass the returned dicts back in when expanding a
-    BATCH of expressions: duplicate patterns across queries then cost
-    one dictionary scan, not one per query.  `regex_ids` is keyed
-    "re:<pattern>" inside prefix_ids' namespace-free sibling dict; when
-    the caller passes None the regex expansions are stored in (and
-    returned via) `prefix_ids` under that prefixed key — keeping the
-    3-tuple return shape every existing call site unpacks."""
-    prefix_ids = {} if prefix_ids is None else prefix_ids
-    fuzzy_ids = {} if fuzzy_ids is None else fuzzy_ids
-    exp_dfs = {} if exp_dfs is None else exp_dfs
-    regex_ids = prefix_ids if regex_ids is None else regex_ids
+    prefix_ids: dict[str, tuple[int, ...]],
+    fuzzy_ids: dict[tuple[str, int], tuple[int, ...]],
+    dfs: dict[int, int],
+) -> None:
+    """Fill in every Prefix / Fuzzy / Regex node's dictionary expansion,
+    plus the expanded terms' dfs (they score exactly like spelled-out OR
+    keywords).  Patterns already present are skipped, so a BATCH of
+    expressions sharing the dicts pays one dictionary scan per distinct
+    pattern.  Regex expansions live in `prefix_ids` under a "re:<pattern>"
+    key (see lower())."""
     for p in sorted({e.text.lower() for e in _walk(expr) if isinstance(e, Prefix)}):
         if p in prefix_ids:
             continue
         pairs = ix.expand_prefix(p)
         prefix_ids[p] = tuple(tid for tid, _ in pairs)
-        exp_dfs.update(pairs)
+        dfs.update(pairs)
     for key in sorted(
         {(e.text.lower(), int(e.max_edits)) for e in _walk(expr) if isinstance(e, Fuzzy)}
     ):
@@ -1326,17 +658,16 @@ def _expand_multiterm(
             continue
         pairs = ix.expand_fuzzy(key[0], key[1])
         fuzzy_ids[key] = tuple(tid for tid, _ in pairs)
-        exp_dfs.update(pairs)
+        dfs.update(pairs)
     for p in sorted(
         {e.pattern.lower() for e in _walk(expr) if isinstance(e, Regex)}
     ):
         rkey = "re:" + p
-        if rkey in regex_ids:
+        if rkey in prefix_ids:
             continue
         pairs = ix.expand_regex(p)
-        regex_ids[rkey] = tuple(tid for tid, _ in pairs)
-        exp_dfs.update(pairs)
-    return prefix_ids, fuzzy_ids, exp_dfs
+        prefix_ids[rkey] = tuple(tid for tid, _ in pairs)
+        dfs.update(pairs)
 
 
 def _walk(expr: Expr):
@@ -1364,8 +695,8 @@ def _batch_pred_sql(
     over a turn's presence BITMASK columns m0..m{W-1} (bit i of the batch
     layout set ⇔ term all_ids[i] occurs in the turn) and `posmap`
     (term_id → positions, PHRASE terms only; adjacency checks) — the
-    expression form of eval_match (same semantics per node type), so a
-    whole batch shares ONE candidate scan.  Generated as TEXT, not Column
+    one boolean evaluator for every plan node type, so a whole batch
+    shares ONE candidate scan.  Generated as TEXT, not Column
     objects: a large batch plan builds in one F.expr call instead of
     thousands of py4j round trips (measured ~3 s of driver time).
 
@@ -1468,12 +799,6 @@ def _batch_pred_sql(
             f"({_batch_pred_sql(c, bitpos, n_words)})" for c in node.children
         )
     raise TypeError(type(node))
-
-
-def match_set(ix: Index, query: str, optimize: bool = True) -> DataFrame:
-    """Unranked match set in (doc_id, turn_idx) order — the reference's
-    native output order (searcher.rs:37-52)."""
-    return match_set_expr(ix, parse_query(query), optimize)
 
 
 def _literal_texts(expr: Expr) -> list[str]:

@@ -233,77 +233,57 @@ class QueryBuilder:
             raise ValueError("empty query: add phrase()/keywords() first")
         return self._expr
 
-    def top_k(self, k: int = 10, optimize: bool = True) -> DataFrame:
-        """BM25 top-k (doc_id, turn_idx, score)."""
-        from ..operators import query as Q
+    def top_k(self, k: int = 10) -> DataFrame:
+        """BM25 top-k (doc_id, turn_idx, score) — Engine.search's route."""
+        from ..operators import batch as B
 
-        return Q.search_expr(
+        return B.search_expr(
             self._engine.index,
             self._require_expr(),
             k=k,
             where=self._where,
             where_doc=self._where_doc,
-            optimize=optimize,
         )
 
-    def top_k_collapsed(self, k: int = 10, optimize: bool = True) -> DataFrame:
+    def top_k_collapsed(self, k: int = 10) -> DataFrame:
         """Conversation-collapsed top-k: one row per document, ranked by
         its best matching turn → (doc_id, turn_idx, score, n_matched).
         See Engine.search_collapsed."""
-        from ..operators import query as Q
+        from ..operators import batch as B
 
-        return Q.search_expr_collapsed(
+        return B.search_expr_collapsed(
             self._engine.index,
             self._require_expr(),
             k=k,
             where=self._where,
             where_doc=self._where_doc,
-            optimize=optimize,
         )
 
     def page_after(
-        self,
-        cursor: tuple[int, int, float] | None,
-        k: int = 10,
-        optimize: bool = True,
+        self, cursor: tuple[int, int, float] | None, k: int = 10
     ) -> DataFrame:
         """Keyset pagination: the next `k` results strictly after
         `cursor` = (doc_id, turn_idx, score) — the previous page's last
         result row.  See Engine.search_after."""
-        from ..operators import query as Q
+        from ..operators import batch as B
 
-        return Q.search_expr_after(
+        return B.search_expr_after(
             self._engine.index,
             self._require_expr(),
             cursor,
             k=k,
             where=self._where,
             where_doc=self._where_doc,
-            optimize=optimize,
         )
 
-    def matches(self, optimize: bool = True) -> DataFrame:
+    def matches(self) -> DataFrame:
         """Unranked match set in (doc_id, turn_idx) order (the reference's
         native output, searcher.rs:37-52), with filters applied."""
-        from ..operators import query as Q
-        from ..operators.query import MATCH_COLS
-        from pyspark.sql import functions as F  # noqa: F401
+        from ..operators import batch as B
 
-        ix = self._engine.index
-        m = Q.match_set_expr(ix, self._require_expr(), optimize)
-        if self._where:
-            m = m.join(
-                ix.turns.where(self._where).select(*MATCH_COLS),
-                MATCH_COLS,
-                "left_semi",
-            )
-        if self._where_doc:
-            m = m.join(
-                ix.doc_meta.where(self._where_doc).select("doc_id"),
-                "doc_id",
-                "left_semi",
-            )
-        return m.orderBy(*MATCH_COLS)
+        return B.match_set_expr(
+            self._engine.index, self._require_expr(), self._where, self._where_doc
+        )
 
     def highlighted(self, k: int = 10) -> DataFrame:
         """top-k + snippet parts (joie always snippets, README.md:5)."""

@@ -44,23 +44,25 @@ def main() -> None:
     )
     results = {}
 
-    # 1. postings scan pruning (exhaustive path: auto now routes
-    # phrase-free booleans through the compressed blocks machinery, whose
-    # top-k is the TWO-PHASE aggregation — no TakeOrdered, by design)
-    plan = explain_str(eng.search("roll AND dice", k=10, mode="exhaustive"))
+    # 1. postings scan pruning: a phrase query still scans the positional
+    # postings table (phrase-free queries decode the compressed blocks)
+    plan = explain_str(eng.search('"crystal kingdom" AND roll', k=10))
     results["partition_pruning_bucket"] = "bucket" in plan and (
         "PartitionFilters" in plan
-    )
+    ) and "/postings" in plan
     results["pushed_term_filter"] = "PushedFilters" in plan and "term_id" in plan
-    # 2. exhaustive top-k lowers to TakeOrderedAndProject (no global sort);
-    # the auto/blocks path's per-query top-k must stay window-free (a hot
-    # query's candidates would all land in one window task)
-    results["take_ordered"] = "TakeOrderedAndProject" in plan
+    # 2. every single search cuts the candidate frame with
+    # TakeOrderedAndProject (no global sort) — phrase and phrase-free
+    # alike; the phrase-free plan must stay window-free (a hot query's
+    # candidates would all land in one window task)
     plan_auto = explain_str(eng.search("roll AND dice", k=10))
+    results["take_ordered"] = (
+        "TakeOrderedAndProject" in plan and "TakeOrderedAndProject" in plan_auto
+    )
     results["auto_topk_window_free"] = "Window" not in plan_auto
     # 4. codegen coverage: AQE finalizes the plan at execution time, so
     # collect first and look for the *(n) codegen markers in executedPlan
-    df = eng.search("roll AND dice", k=10, mode="exhaustive")
+    df = eng.search("roll AND dice", k=10)
     df.collect()
     executed = df._jdf.queryExecution().executedPlan().toString()
     results["wholestage_codegen"] = "*(" in executed
@@ -123,11 +125,16 @@ def main() -> None:
         and "ArrowEvalPython" not in plan_win
         and "TakeOrderedAndProject" in plan_win
     )
+    # the prohibited side compiles into the candidate predicate (NOT of
+    # its presence bits), so both sides' terms come from ONE pruned
+    # postings scan — never the blocks decode, which cannot see the
+    # prohibited side's bits, and never a cross join
     plan_diff = explain_str(
         (eng.builder().keywords("roll") - eng.builder().keywords("dice")).top_k(5)
     )
     results["andnot_anti_join_no_cartesian"] = (
-        "LeftAnti" in plan_diff
+        "/postings" in plan_diff
+        and "FlatMapGroupsInPandas" not in plan_diff
         and "CartesianProduct" not in plan_diff
         and "BroadcastNestedLoopJoin" not in plan_diff
     )
@@ -218,11 +225,10 @@ def main() -> None:
 
     # 5b2. rarest-term-first phrase seeding (VERDICT r4 item 2): with an
     # extreme df spread, the phrase candidate scan must gain EXACTLY ONE
-    # broadcast hash left-semi join (the rare term's match set pruning
-    # the hot term's postings before the count-match groupBy — the
-    # distributed analogue of phrase.rs:48 seed-smallest).  Counted as a
-    # DELTA vs the seed-disabled plan because the scoring stage has its
-    # own semi-join.
+    # broadcast hash left-semi join (the rare term's turns pruning the
+    # hot term's postings before the per-turn groupBy — the distributed
+    # analogue of phrase.rs:48 seed-smallest).  Counted as a DELTA vs the
+    # seed-disabled plan.
     import joie_spark.operators.query as Qmod
 
     def _n_bcast_semi(plan_text: str) -> int:
@@ -279,7 +285,7 @@ def main() -> None:
     )
     eng2.delete(sorted({r["conv_id"] for r in _gr(50, seed=42)})[:5])
     for label, df2 in (
-        ("tomb_exhaustive", eng2.search("roll AND dice", k=5, mode="exhaustive")),
+        ("tomb_phrase", eng2.search('"crystal kingdom" AND roll', k=5)),
         ("tomb_keyword_or", eng2.search("roll OR dice", k=5)),
         ("tomb_batch", eng2.search_many(["roll OR dice", "roll AND dice"], k=5)),
     ):
@@ -476,7 +482,7 @@ def main() -> None:
 
     if os.environ.get("JOIE_AUDIT_DUMP"):
         print("\n==== AND plan ====\n", plan)
-        print("\n==== WAND plan ====\n", plan_w)
+        print("\n==== keyword-OR plan ====\n", plan_w)
 
     spark.stop()
     sys.exit(0 if ok else 1)

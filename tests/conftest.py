@@ -22,20 +22,31 @@ def t1_rows():
     return generate_rows(50, seed=42)
 
 
+def t1_subset(t1_rows, convs):
+    """The t1 rows of the conversations at positions convs = (start, stop)
+    of the sorted conv_ids; None = every row."""
+    if convs is None:
+        return t1_rows
+    keep = set(sorted({r["conv_id"] for r in t1_rows})[convs[0]:convs[1]])
+    return [r for r in t1_rows if r["conv_id"] in keep]
+
+
 @pytest.fixture(scope="session")
 def t1_built(spark, t1_rows, tmp_path_factory):
-    """Factory: the directory of a t1 index built once per distinct set of
-    build arguments.  Shared across the session, so callers must never
-    mutate it — use `t1_index_copy` for an index a test changes."""
+    """Factory: the directory of a t1 index built once per distinct row
+    subset (`convs`, see t1_subset) and set of build arguments.  Shared
+    across the session, so callers must never mutate it — use
+    `t1_index_copy` for an index a test changes."""
     from joie_spark.operators.build import build_index
 
     built: dict[tuple, str] = {}
 
-    def get(**kw) -> str:
-        key = tuple(sorted(kw.items()))
+    def get(convs=None, **kw) -> str:
+        key = (convs, tuple(sorted(kw.items())))
         if key not in built:
             d = str(tmp_path_factory.mktemp("index_t1"))
-            build_index(spark, spark.createDataFrame(t1_rows), d, **kw)
+            rows = t1_subset(t1_rows, convs)
+            build_index(spark, spark.createDataFrame(rows), d, **kw)
             built[key] = d
         return built[key]
 
@@ -44,14 +55,15 @@ def t1_built(spark, t1_rows, tmp_path_factory):
 
 @pytest.fixture(scope="session")
 def t1_index_copy(spark, t1_built, tmp_path_factory):
-    """Factory: a private copy of the t1 index built with `kw`, opened as
-    an Engine — the same index `Engine.build(spark, t1 rows, d, **kw)`
-    would produce, at the cost of a directory copy."""
+    """Factory: a private copy of the t1 index over the row subset
+    `convs` built with `kw`, opened as an Engine — the same index
+    `Engine.build(spark, those rows, d, **kw)` would produce, at the cost
+    of a directory copy."""
     from joie_spark.engine import Engine
 
-    def copy(**kw) -> "Engine":
+    def copy(convs=None, **kw) -> "Engine":
         d = str(tmp_path_factory.mktemp("index_t1_copy"))
-        shutil.copytree(t1_built(**kw), d, dirs_exist_ok=True)
+        shutil.copytree(t1_built(convs, **kw), d, dirs_exist_ok=True)
         return Engine(spark, d)
 
     return copy

@@ -38,15 +38,12 @@ def _by_conv(eng, q, **kw):
 
 
 @pytest.fixture(scope="module")
-def appended(spark, t1_rows, tmp_path_factory, t1_index_copy):
+def appended(spark, t1_rows, t1_index_copy):
     """full = build(a∪b); inc = build(a) then append(b)."""
-    from joie_spark.engine import Engine
-
-    a, b = _split_rows(t1_rows)
-    d_inc = str(tmp_path_factory.mktemp("ix_inc"))
+    _a, b = _split_rows(t1_rows)
     kw = dict(n_buckets=8, docs_per_block=8, block_chunks=2)
     full = t1_index_copy(**kw)
-    inc = Engine.build(spark, spark.createDataFrame(a), d_inc, **kw)
+    inc = t1_index_copy(convs=(0, 30), **kw)
     inc.append(spark.createDataFrame(b))
     return full, inc
 
@@ -60,41 +57,45 @@ def test_append_equals_full_rebuild(appended):
     assert full.index.stats["avgdl"] == inc.index.stats["avgdl"]
     assert full.index.stats["n_terms"] == inc.index.stats["n_terms"]
     for q in QUERIES:
-        assert _by_conv(full, q, mode="exhaustive") == _by_conv(
-            inc, q, mode="exhaustive"
-        ), q
+        assert _by_conv(full, q) == _by_conv(inc, q), q
 
 
-def test_append_wand_and_batch_paths_sound(appended):
+def test_append_wand_and_batch_paths_sound(appended, t1_oracle):
     """The block-max paths must stay rank-identical after the avgdl drift
     (enc_avgdl correction), for single (a batch of one) and batch
-    queries."""
+    queries.  `inc` appends the convs that sort after its base, so its
+    doc ids coincide with the full build's and one oracle serves both."""
     full, inc = appended
     for q in ["roll OR dice", "the", "you OR so OR dice"]:
-        assert _by_conv(full, q) == _by_conv(inc, q), q  # auto → blocks
+        assert _by_conv(full, q) == _by_conv(inc, q), q
     flat = ["roll OR dice", "roll AND dice", "the"]
+    want = [
+        (i, d, t, s)
+        for i, q in enumerate(flat)
+        for d, t, s in t1_oracle.search(q, k=8)
+    ]
     for eng in (full, inc):
         batch = eng.search_many(flat, k=8).collect()
         batch_forced = eng.search_many(
             flat, k=8, direct_threshold=0, probe_blocks=2
         ).collect()
         assert batch == batch_forced
-        singles = [
-            (r["query_id"], r["score"])
+        got = [
+            (r["query_id"], r["doc_id"], r["turn_idx"], r["score"])
             for r in batch
         ]
-        want = [
-            (i, r["score"])
-            for i, q in enumerate(flat)
-            for r in eng.search(q, k=8, mode="exhaustive").collect()
+        assert got == want
+        singles = [
+            (i, *tuple(r)) for i, q in enumerate(flat)
+            for r in eng.search(q, k=8).collect()
         ]
         assert singles == want
 
 
 def test_append_filters_and_match_set(appended, t1_oracle):
     full, inc = appended
-    got = _by_conv(inc, "roll OR dice", where="role = 'user'", mode="exhaustive")
-    want = _by_conv(full, "roll OR dice", where="role = 'user'", mode="exhaustive")
+    got = _by_conv(inc, "roll OR dice", where="role = 'user'")
+    want = _by_conv(full, "roll OR dice", where="role = 'user'")
     assert got == want and got
     m_full = full.match_set("roll AND dice").join(
         full.index.turns.select("doc_id", "conv_id").distinct(), "doc_id"
@@ -155,16 +156,16 @@ def test_append_resumes_after_crash(
     assert sum(1 for e in man.entries if e["stage"] == "append") == 1
     ref = t1_index_copy(n_buckets=8, docs_per_block=8, block_chunks=1)
     for q in ["roll OR dice", '"crystal kingdom"']:
-        assert _by_conv(eng, q, mode="exhaustive") == _by_conv(
-            ref, q, mode="exhaustive"
-        ), q
+        assert _by_conv(eng, q) == _by_conv(ref, q), q
 
 
 def test_wand_sound_under_extreme_avgdl_drift(spark, t1_rows, t1_index_copy):
     """Append documents ~20x longer than the base corpus so avgdl jumps
-    hard: every pruned path (auto single = batch of one, batch direct,
-    batch forced-θ) must still equal the exhaustive scorer — the enc_avgdl ub correction
+    hard: every path (single search, batch direct, batch forced-θ) must
+    still equal the oracle over the union — the enc_avgdl ub correction
     is exactly what keeps stale block-max bounds sound here."""
+    from joie_spark.oracle import OracleIndex
+
     eng = t1_index_copy(n_buckets=8, docs_per_block=8, block_chunks=1)
     avgdl_before = eng.index.stats["avgdl"]
     ts = t1_rows[0]["ts"]
@@ -178,9 +179,12 @@ def test_wand_sound_under_extreme_avgdl_drift(spark, t1_rows, t1_index_copy):
     ]
     eng.append(spark.createDataFrame(long_rows))
     assert eng.index.stats["avgdl"] > 1.5 * avgdl_before  # drift is real
+    # the appended convs sort after every t1 conv, so their dense doc ids
+    # continue from the base index exactly as the oracle assigns them
+    oracle = OracleIndex(t1_rows + long_rows)
 
     for q in ["roll OR dice", "roll AND dice", "kingdom OR dice"]:
-        want = [tuple(r) for r in eng.search(q, k=8, mode="exhaustive").collect()]
+        want = oracle.search(q, k=8)
         assert [tuple(r) for r in eng.search(q, k=8).collect()] == want, q
         got_f = [
             (r["doc_id"], r["turn_idx"], r["score"])
@@ -191,30 +195,30 @@ def test_wand_sound_under_extreme_avgdl_drift(spark, t1_rows, t1_index_copy):
         assert got_f == [(a, b, c) for a, b, c in want], q
 
 
-def _split3(t1_rows):
+BASE = (0, 20)  # t1_subset slice: the base index the delta tests build
+
+
+def _deltas(t1_rows):
+    """(b1, b2): the convs after BASE, split into two appends."""
     convs = sorted({r["conv_id"] for r in t1_rows})
-    s1, s2 = set(convs[:20]), set(convs[20:35])
-    a = [r for r in t1_rows if r["conv_id"] in s1]
-    b1 = [r for r in t1_rows if r["conv_id"] in s2]
-    b2 = [r for r in t1_rows if r["conv_id"] not in s1 | s2]
-    return a, b1, b2
+    s1, s2 = set(convs[BASE[1]:35]), set(convs[35:])
+    b1 = [r for r in t1_rows if r["conv_id"] in s1]
+    b2 = [r for r in t1_rows if r["conv_id"] in s2]
+    return b1, b2
 
 
-def test_append_after_compact_preserves_index(
-    spark, t1_rows, tmp_path, t1_index_copy
-):
+def test_append_after_compact_preserves_index(spark, t1_rows, t1_index_copy):
     """ADVICE r3 (high): the append AFTER a compaction must pick a fresh
     generation — reusing the compacted gen number would overwrite the
     full compacted postings/blocks with delta-only data (silent loss of
     all pre-append data).  build → append → compact → append must equal
     a full rebuild, on every query path."""
-    from joie_spark.engine import Engine
     from joie_spark.sources.tables import read_stats
 
-    a, b1, b2 = _split3(t1_rows)
+    b1, b2 = _deltas(t1_rows)
     kw = dict(n_buckets=8, docs_per_block=8, block_chunks=1)
-    d_inc = str(tmp_path / "ix_inc")
-    eng = Engine.build(spark, spark.createDataFrame(a), d_inc, **kw)
+    eng = t1_index_copy(convs=BASE, **kw)
+    d_inc = eng.index.index_dir
     eng.append(spark.createDataFrame(b1))
     eng.compact()
     compacted_gen = read_stats(d_inc)["compacted_gen"]
@@ -228,34 +232,28 @@ def test_append_after_compact_preserves_index(
     assert full.index.stats["N"] == eng.index.stats["N"]
     assert full.index.stats["avgdl"] == eng.index.stats["avgdl"]
     for q in QUERIES:
-        assert _by_conv(full, q, mode="exhaustive") == _by_conv(
-            eng, q, mode="exhaustive"
-        ), q
-        assert _by_conv(full, q) == _by_conv(eng, q), q  # auto (WAND/blocks)
+        assert _by_conv(full, q) == _by_conv(eng, q), q
     # and a second compact + append keeps converging
     eng.compact()
     for q in QUERIES[:2]:
         assert _by_conv(full, q) == _by_conv(eng, q), q
 
 
-def test_compact_rerun_after_crash_no_duplication(spark, t1_rows, tmp_path, monkeypatch):
+def test_compact_rerun_after_crash_no_duplication(
+    spark, t1_rows, monkeypatch, t1_index_copy
+):
     """ADVICE r3 (medium): a compact that crashed after (partially or
     fully) writing its target generation must NOT feed that generation
     back into the next compaction — that would duplicate every posting.
     Also: queries between the crash and the re-run never see the
     uncommitted generation (post_gens pruning)."""
-    from joie_spark.engine import Engine
     from joie_spark.sources.tables import ParquetManifestFormat
 
-    a, b1, _b2 = _split3(t1_rows)
-    rows = a + b1
-    d = str(tmp_path / "ix_crashc")
-    eng = Engine.build(
-        spark, spark.createDataFrame(a), d, n_buckets=8, docs_per_block=8,
-        block_chunks=1,
-    )
+    b1, _b2 = _deltas(t1_rows)
+    eng = t1_index_copy(convs=BASE, n_buckets=8, docs_per_block=8, block_chunks=1)
+    d = eng.index.index_dir
     eng.append(spark.createDataFrame(b1))
-    want = {q: _by_conv(eng, q, mode="exhaustive") for q in QUERIES[:3]}
+    want = {q: _by_conv(eng, q) for q in QUERIES[:3]}
     n_postings = eng.index.postings.count()
 
     real_write = ParquetManifestFormat.write
@@ -272,37 +270,32 @@ def test_compact_rerun_after_crash_no_duplication(spark, t1_rows, tmp_path, monk
     monkeypatch.setattr(ParquetManifestFormat, "write", real_write)
 
     # crashed state: the orphan gen dir exists but queries must not read it
-    from joie_spark.engine import Engine as E
+    from joie_spark.engine import Engine
 
-    eng_crashed = E(spark, d)
+    eng_crashed = Engine(spark, d)
     assert eng_crashed.index.postings.count() == n_postings
     for q in QUERIES[:3]:
-        assert _by_conv(eng_crashed, q, mode="exhaustive") == want[q], q
+        assert _by_conv(eng_crashed, q) == want[q], q
 
     eng.compact()  # re-run compacts the COMMITTED gens only
-    eng = E(spark, d)
+    eng = Engine(spark, d)
     assert eng.index.postings.count() == n_postings  # no duplication
     for q in QUERIES[:3]:
-        assert _by_conv(eng, q, mode="exhaustive") == want[q], q
         assert _by_conv(eng, q) == want[q], q
 
 
-def test_append_stats_idempotent_on_resume(spark, t1_rows, tmp_path):
+def test_append_stats_idempotent_on_resume(spark, t1_rows, t1_index_copy):
     """ADVICE r3 (low): a resume that replays the final stats stage (crash
     after write_stats, before the append manifest commit) must write the
     SAME stats, not re-add the delta."""
     import json
 
-    from joie_spark.engine import Engine
     from joie_spark.operators.append import append_index
     from joie_spark.sources.tables import MANIFEST, read_stats
 
-    a, b1, _ = _split3(t1_rows)
-    d = str(tmp_path / "ix_stats")
-    eng = Engine.build(
-        spark, spark.createDataFrame(a), d, n_buckets=8, docs_per_block=8,
-        block_chunks=1,
-    )
+    b1, _ = _deltas(t1_rows)
+    eng = t1_index_copy(convs=BASE, n_buckets=8, docs_per_block=8, block_chunks=1)
+    d = eng.index.index_dir
     eng.append(spark.createDataFrame(b1))
     want = read_stats(d)
     # simulate the crash window: drop the final 'append' commit so the
@@ -321,20 +314,17 @@ def test_append_stats_idempotent_on_resume(spark, t1_rows, tmp_path):
     assert got["post_gens"] == want["post_gens"]
 
 
-def test_append_idempotency_key_noop_on_replay(spark, t1_rows, tmp_path):
+def test_append_idempotency_key_noop_on_replay(spark, t1_rows, t1_index_copy):
     """ADVICE r3 (low, streaming): replaying a COMMITTED append with the
     same idempotency key must no-op — without the key the same input
     would trip the conv-disjointness ValueError forever."""
-    from joie_spark.engine import Engine
     from joie_spark.operators.append import append_index
     from joie_spark.sources.tables import Manifest, read_stats
 
-    a, b1, _ = _split3(t1_rows)
-    d = str(tmp_path / "ix_idem")
-    Engine.build(
-        spark, spark.createDataFrame(a), d, n_buckets=8, docs_per_block=8,
-        block_chunks=1,
-    )
+    b1, _ = _deltas(t1_rows)
+    d = t1_index_copy(
+        convs=BASE, n_buckets=8, docs_per_block=8, block_chunks=1
+    ).index.index_dir
     delta = spark.createDataFrame(b1)
     append_index(spark, delta, d, idempotency_key="stream-batch=7")
     want = read_stats(d)
@@ -353,22 +343,19 @@ def test_append_idempotency_key_noop_on_replay(spark, t1_rows, tmp_path):
 
 
 def test_append_idempotency_key_rejects_colliding_new_batch(
-    spark, t1_rows, tmp_path
+    spark, t1_rows, t1_index_copy
 ):
     """ADVICE r4 (medium): streaming batch ids restart at 0 when a
     checkpoint dir is recreated (or a second stream writes to the same
     index) — a genuinely NEW batch whose key collides with a committed
     append must RAISE, not silently no-op (that would be data loss)."""
-    from joie_spark.engine import Engine
     from joie_spark.operators.append import append_index
     from joie_spark.sources.tables import read_stats
 
-    a, b1, b2 = _split3(t1_rows)
-    d = str(tmp_path / "ix_idem_collide")
-    Engine.build(
-        spark, spark.createDataFrame(a), d, n_buckets=8, docs_per_block=8,
-        block_chunks=1,
-    )
+    b1, b2 = _deltas(t1_rows)
+    d = t1_index_copy(
+        convs=BASE, n_buckets=8, docs_per_block=8, block_chunks=1
+    ).index.index_dir
     append_index(
         spark, spark.createDataFrame(b1), d, idempotency_key="stream-batch=0"
     )
@@ -386,16 +373,13 @@ def test_append_idempotency_key_rejects_colliding_new_batch(
     assert read_stats(d)["N"] > want["N"]
 
 
-def test_compact_refuses_pending_append(spark, t1_rows, tmp_path, monkeypatch):
-    from joie_spark.engine import Engine
+def test_compact_refuses_pending_append(
+    spark, t1_rows, monkeypatch, t1_index_copy
+):
     from joie_spark.sources.tables import ParquetManifestFormat
 
-    a, b1, _ = _split3(t1_rows)
-    d = str(tmp_path / "ix_pend")
-    eng = Engine.build(
-        spark, spark.createDataFrame(a), d, n_buckets=8, docs_per_block=8,
-        block_chunks=1,
-    )
+    b1, _ = _deltas(t1_rows)
+    eng = t1_index_copy(convs=BASE, n_buckets=8, docs_per_block=8, block_chunks=1)
     real_write = ParquetManifestFormat.write
 
     def failing_write(self, df, index_dir, table, partition_by=(), subunit=None):
@@ -413,15 +397,10 @@ def test_compact_refuses_pending_append(spark, t1_rows, tmp_path, monkeypatch):
     eng.compact()  # now fine
 
 
-def test_compaction_preserves_results(appended, spark, t1_rows, tmp_path_factory):
-    from joie_spark.engine import Engine
-
-    a, b = _split_rows(t1_rows)
-    d = str(tmp_path_factory.mktemp("ix_compact"))
-    eng = Engine.build(
-        spark, spark.createDataFrame(a), d, n_buckets=8, docs_per_block=8,
-        block_chunks=2,
-    )
+def test_compaction_preserves_results(appended, spark, t1_rows, t1_index_copy):
+    _a, b = _split_rows(t1_rows)
+    eng = t1_index_copy(convs=(0, 30), n_buckets=8, docs_per_block=8, block_chunks=2)
+    d = eng.index.index_dir
     eng.append(spark.createDataFrame(b))
     before = {q: _by_conv(eng, q) for q in QUERIES}
     eng.compact()

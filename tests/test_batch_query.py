@@ -1,7 +1,9 @@
 """Batch query API (search_many): per-query results must be bit-identical
-to the single-query path, for plain / turn-filtered / doc-filtered batches
-and batches containing OOV-only queries.  Also covers the doc-filtered
-keyword-OR single search, Engine.search's mode check and build hygiene (resume param pinning, no leaked persisted RDDs)."""
+to the oracle's single-query answers, for plain / turn-filtered /
+doc-filtered batches and batches containing OOV-only queries.  Also
+covers the doc-filtered keyword-OR single search, the single-search job
+counts and build hygiene (resume param pinning, no leaked persisted
+RDDs)."""
 
 import pytest
 
@@ -15,11 +17,8 @@ BATCH = [
 ]
 
 
-def _single(engine, q, k=10, **kw):
-    return [
-        (r["doc_id"], r["turn_idx"], r["score"])
-        for r in engine.search(q, k=k, mode="exhaustive", **kw).collect()
-    ]
+USER_TURNS = dict(turn_filter=lambda t: t.role == "user")  # where="role = 'user'"
+LONG_DOCS = dict(doc_filter=lambda m: m["n_turns"] >= 10)  # where_doc="n_turns >= 10"
 
 
 def _batched(engine, queries, k=10, **kw):
@@ -30,24 +29,24 @@ def _batched(engine, queries, k=10, **kw):
     return out
 
 
-@pytest.mark.parametrize("mode", ["auto", "postings"])
-def test_search_many_matches_single(t1_engine, mode):
+@pytest.mark.parametrize("mode", ["auto"])
+def test_search_many_matches_single(t1_engine, t1_oracle, mode):
     got = _batched(t1_engine, BATCH, mode=mode)
     for i, q in enumerate(BATCH):
-        assert got[i] == _single(t1_engine, q), (mode, q)
+        assert got[i] == t1_oracle.search(q, k=10), (mode, q)
 
 
-def test_search_many_blocks_path_pruned_still_exact(t1_engine):
+def test_search_many_blocks_path_pruned_still_exact(t1_engine, t1_oracle):
     """Force the θ-pruning machinery to engage (probe smaller than the
     candidate-block count, small k) — results must stay bit-identical to
-    the exhaustive single-query path."""
+    the oracle's single-query answers."""
     queries = ["the", "roll OR dice", "roll AND dice", "you OR the OR so"]
     for k in (1, 3):
         # direct_threshold=0 disables the small-index decode-all shortcut
         # so the probe/θ/survivor phases actually run
         got = _batched(t1_engine, queries, k=k, probe_blocks=1, direct_threshold=0)
         for i, q in enumerate(queries):
-            assert got[i] == _single(t1_engine, q, k=k), (k, q)
+            assert got[i] == t1_oracle.search(q, k=k), (k, q)
         got_direct = _batched(t1_engine, queries, k=k)  # decode-all shortcut
         assert got_direct == got
 
@@ -109,11 +108,11 @@ def test_search_many_filters(t1_engine, t1_oracle):
     queries = ["roll OR dice", '"crystal kingdom"']
     got = _batched(t1_engine, queries, where="role = 'user'")
     for i, q in enumerate(queries):
-        assert got[i] == _single(t1_engine, q, where="role = 'user'"), q
+        assert got[i] == t1_oracle.search(q, k=10, **USER_TURNS), q
 
     got = _batched(t1_engine, queries, where_doc="n_turns >= 10")
     for i, q in enumerate(queries):
-        assert got[i] == _single(t1_engine, q, where_doc="n_turns >= 10"), q
+        assert got[i] == t1_oracle.search(q, k=10, **LONG_DOCS), q
 
 
 def test_search_many_all_oov_is_empty(t1_engine):
@@ -201,14 +200,14 @@ def test_turn_idx_range_validated(spark, tmp_path):
         build_index(spark, df, str(tmp_path / "bad"), n_buckets=4)
 
 
-def test_auto_where_filtered_single_uses_blocks(t1_engine):
-    """VERDICT r3 item 3: a turn-filtered phrase-free single query in auto
-    mode must (a) stay rank-identical to the exhaustive path and (b) run
-    on the compressed blocks table, not the fat postings scan."""
+def test_auto_where_filtered_single_uses_blocks(t1_engine, t1_oracle):
+    """VERDICT r3 item 3: a turn-filtered phrase-free single query must
+    (a) stay rank-identical to the oracle and (b) run on the compressed
+    blocks table, not the fat postings scan."""
     for q in ["roll OR dice", "roll AND dice", "the"]:
         auto = t1_engine.search(q, k=10, where="role = 'user'")
         got = [(r["doc_id"], r["turn_idx"], r["score"]) for r in auto.collect()]
-        assert got == _single(t1_engine, q, where="role = 'user'"), q
+        assert got == t1_oracle.search(q, k=10, **USER_TURNS), q
     plan = t1_engine.search(
         "roll AND dice", k=10, where="role = 'user'"
     )._jdf.queryExecution().explainString(
@@ -218,14 +217,6 @@ def test_auto_where_filtered_single_uses_blocks(t1_engine):
     )
     assert "docids" in plan          # compressed blocks columns
     assert "/postings" not in plan   # postings table untouched
-
-
-def test_search_rejects_unknown_mode(t1_engine):
-    """Only 'auto' and 'exhaustive' exist: any other value (incl. the
-    retired 'wand') must raise instead of silently picking a route."""
-    for mode in ("wand", "blocks", "postings", "AUTO"):
-        with pytest.raises(ValueError, match="unknown mode"):
-            t1_engine.search("roll OR dice", mode=mode)
 
 
 def test_search_many_job_count_bounded(t1_engine):
@@ -276,3 +267,25 @@ def test_keyword_or_search_job_count_bounded(t1_engine):
     )
     assert n_single <= n_batch1, (n_single, n_batch1)
     assert n_single <= 7, f"keyword-OR search ran {n_single} jobs (was 7)"
+
+
+def test_single_search_job_count(t1_engine):
+    """Every single search reads the one candidate frame and cuts it with
+    TakeOrderedAndProject: the dictionary lookup, the candidate shuffle
+    and the top-k — at most 3 Spark jobs for keyword, boolean, phrase and
+    mixed queries alike (the join-algebra matcher ran 5-8 on this index)."""
+    sc = t1_engine.spark.sparkContext
+    for q in [
+        "roll OR dice",
+        "roll AND dice",
+        '"crystal kingdom"',
+        '"crystal kingdom" AND roll',
+        '(roll OR "crystal kingdom") AND dice',
+        "the",
+    ]:
+        tag = f"gate-single-{q}"
+        sc.setJobGroup(tag, "job-count gate")
+        t1_engine.search(q, k=10).collect()
+        n = len(sc.statusTracker().getJobIdsForGroup(tag))
+        sc.setJobGroup(None, None)
+        assert n <= 3, f"{q!r} ran {n} jobs"

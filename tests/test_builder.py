@@ -10,13 +10,13 @@ def _rows(df):
 
 def test_builder_phrase_equals_string(t1_engine):
     b = t1_engine.builder().phrase("crystal kingdom").top_k(10)
-    s = t1_engine.search('"crystal kingdom"', k=10, mode="exhaustive")
+    s = t1_engine.search('"crystal kingdom"', k=10)
     assert _rows(b) == _rows(s)
 
 
 def test_builder_keywords_equals_string(t1_engine):
     b = t1_engine.builder().keywords("roll", "dice").top_k(10)
-    s = t1_engine.search("roll OR dice", k=10, mode="exhaustive")
+    s = t1_engine.search("roll OR dice", k=10)
     assert _rows(b) == _rows(s)
 
 
@@ -27,18 +27,18 @@ def test_builder_chaining_is_and(t1_engine):
         .keywords("roll")
         .top_k(10)
     )
-    s = t1_engine.search('"crystal kingdom" AND roll', k=10, mode="exhaustive")
+    s = t1_engine.search('"crystal kingdom" AND roll', k=10)
     assert _rows(b) == _rows(s)
 
 
 def test_builder_composition_operators(t1_engine):
     e = t1_engine
     b = (e.builder().phrase("roll for insight") | e.builder().keywords("dice")).top_k(10)
-    s = e.search('"roll for insight" OR dice', k=10, mode="exhaustive")
+    s = e.search('"roll for insight" OR dice', k=10)
     assert _rows(b) == _rows(s)
 
     b2 = (e.builder().keywords("roll") & e.builder().keywords("dice")).top_k(10)
-    s2 = e.search("roll AND dice", k=10, mode="exhaustive")
+    s2 = e.search("roll AND dice", k=10)
     assert _rows(b2) == _rows(s2)
 
 

@@ -20,12 +20,11 @@ QUERIES = [
 ]
 
 
-def _split(t1_rows, keep=35):
-    convs = sorted({r["conv_id"] for r in t1_rows})
-    keep_set = set(convs[:keep])
-    a = [r for r in t1_rows if r["conv_id"] in keep_set]
-    gone = [c for c in convs if c not in keep_set]
-    return a, gone
+KEPT = (0, 35)  # the first 35 convs survive the deletes (t1_subset slice)
+
+
+def _deleted_convs(t1_rows):
+    return sorted({r["conv_id"] for r in t1_rows})[KEPT[1]:]
 
 
 def _by_conv(eng, q, **kw):
@@ -36,14 +35,11 @@ def _by_conv(eng, q, **kw):
 
 
 @pytest.fixture(scope="module")
-def deleted(spark, t1_rows, tmp_path_factory, t1_index_copy):
+def deleted(t1_rows, t1_index_copy):
     """ref = build(kept); eng = build(all) then delete(the rest)."""
-    from joie_spark.engine import Engine
-
-    a, gone = _split(t1_rows)
+    gone = _deleted_convs(t1_rows)
     kw = dict(n_buckets=8, docs_per_block=8, block_chunks=1)
-    d_ref = str(tmp_path_factory.mktemp("ix_del_ref"))
-    ref = Engine.build(spark, spark.createDataFrame(a), d_ref, **kw)
+    ref = t1_index_copy(convs=KEPT, **kw)
     eng = t1_index_copy(**kw)
     eng.delete(gone)
     return ref, eng, gone
@@ -55,10 +51,7 @@ def test_delete_equals_rebuild_all_paths(deleted):
     assert eng.index.stats["avgdl"] == ref.index.stats["avgdl"]
     assert eng.index.stats["total_dl"] == ref.index.stats["total_dl"]
     for q in QUERIES:
-        assert _by_conv(eng, q, mode="exhaustive") == _by_conv(
-            ref, q, mode="exhaustive"
-        ), q
-        assert _by_conv(eng, q) == _by_conv(ref, q), q  # auto: WAND/blocks
+        assert _by_conv(eng, q) == _by_conv(ref, q), q
     # df parity: every surviving term's df matches the rebuild
     lut_e = eng.index.lookup_terms(["roll", "dice", "the", "crystal"])
     lut_r = ref.index.lookup_terms(["roll", "dice", "the", "crystal"])
@@ -81,7 +74,7 @@ def test_delete_batch_and_forced_pruning_paths(deleted):
     want = [
         (i, r["score"])
         for i, q in enumerate(flat)
-        for r in ref.search(q, k=8, mode="exhaustive").collect()
+        for r in ref.search(q, k=8).collect()
     ]
     assert got == want
 
@@ -136,9 +129,6 @@ def test_delete_then_append_is_exact_update(
     assert eng.index.stats["N"] == ref.index.stats["N"]
     assert eng.index.stats["avgdl"] == ref.index.stats["avgdl"]
     for q in ["roll OR dice", "crystal AND dice", '"crystal dice"']:
-        assert _by_conv(eng, q, mode="exhaustive") == _by_conv(
-            ref, q, mode="exhaustive"
-        ), q
         assert _by_conv(eng, q) == _by_conv(ref, q), q
 
 
@@ -146,7 +136,7 @@ def test_compact_purges_tombstones(spark, t1_rows, t1_index_copy):
     from joie_spark.sources.tables import read_stats
 
     kw = dict(n_buckets=8, docs_per_block=8, block_chunks=1)
-    a, gone = _split(t1_rows)
+    gone = _deleted_convs(t1_rows)
     eng = t1_index_copy(**kw)
     d = eng.index.index_dir
     n_before = eng.index.postings.count()
@@ -159,7 +149,6 @@ def test_compact_purges_tombstones(spark, t1_rows, t1_index_copy):
     assert eng.index.postings.count() < n_before  # physically purged
     for q in QUERIES[:3]:
         assert _by_conv(eng, q) == before[q], q
-        assert _by_conv(eng, q, mode="exhaustive") == before[q], q
     # post-purge: re-append of a deleted conv still allowed (registry kept)
     rows = [dict(r) for r in t1_rows if r["conv_id"] == gone[0]][:1]
     rows[0]["turn_idx"] = 0
@@ -168,15 +157,12 @@ def test_compact_purges_tombstones(spark, t1_rows, t1_index_copy):
     eng.delete([gone[0]])
 
 
-def test_delete_resume_after_crash(
-    spark, t1_rows, tmp_path, monkeypatch, t1_index_copy
-):
-    from joie_spark.engine import Engine
+def test_delete_resume_after_crash(spark, t1_rows, monkeypatch, t1_index_copy):
     from joie_spark.operators.delete import delete_convs
     from joie_spark.sources.tables import ParquetManifestFormat, read_stats
 
     kw = dict(n_buckets=8, docs_per_block=8, block_chunks=1)
-    a, gone = _split(t1_rows)
+    gone = _deleted_convs(t1_rows)
     eng = t1_index_copy(**kw)
     d = eng.index.index_dir
 
@@ -202,8 +188,7 @@ def test_delete_resume_after_crash(
         delete_convs(spark, gone[:2], d)
 
     eng.delete(gone)  # resume completes
-    d_ref = str(tmp_path / "ix_del_crash_ref")
-    ref = Engine.build(spark, spark.createDataFrame(a), d_ref, **kw)
+    ref = t1_index_copy(convs=KEPT, **kw)
     assert read_stats(d)["N"] == ref.index.stats["N"]
     assert read_stats(d)["avgdl"] == ref.index.stats["avgdl"]
     for q in QUERIES[:3]:
@@ -322,7 +307,7 @@ def test_compact_purges_row_stores(spark, t1_rows, tmp_path):
 
 
 def test_compact_row_purge_crash_resume(
-    spark, t1_rows, tmp_path, monkeypatch, t1_index_copy
+    spark, t1_rows, monkeypatch, t1_index_copy
 ):
     """A purge-compact that crashes after writing its row-store rewrite
     but before the stats commit leaves a half-written turns generation
@@ -340,7 +325,7 @@ def test_compact_row_purge_crash_resume(
     )
 
     kw = dict(n_buckets=8, docs_per_block=8, block_chunks=1)
-    a, gone = _split(t1_rows)
+    gone = _deleted_convs(t1_rows)
     eng = t1_index_copy(**kw)
     d = eng.index.index_dir
     eng.delete(gone[:10])
@@ -372,8 +357,7 @@ def test_compact_row_purge_crash_resume(
     # delete AFTER the crashed compact: the duplicate rows in the crashed
     # generation must not double the df/dl decrements
     eng.delete(gone[10:])
-    d_ref = str(tmp_path / "ix_purge_crash_ref")
-    ref = Engine.build(spark, spark.createDataFrame(a), d_ref, **kw)
+    ref = t1_index_copy(convs=KEPT, **kw)
     assert read_stats(d)["N"] == ref.index.stats["N"]
     assert abs(read_stats(d)["avgdl"] - ref.index.stats["avgdl"]) < 1e-9
 
@@ -389,7 +373,7 @@ def test_get_doc_skips_registry_after_purge(t1_rows, t1_index_copy):
     match nothing (the dead rows are physically gone), so the Index skips
     the tombstone read entirely; a subsequent delete re-engages it until
     the next compact."""
-    a, gone = _split(t1_rows)
+    gone = _deleted_convs(t1_rows)
     eng = t1_index_copy(n_buckets=8, docs_per_block=8, block_chunks=1)
     # fresh build: no tombstones table -> skip (None)
     assert eng.index.tombstones is None
@@ -441,19 +425,13 @@ def test_search_docs_excludes_deleted(deleted):
         }, q
 
 
-def test_search_docs_compact_equals_rebuild(
-    spark, t1_rows, tmp_path, t1_index_copy
-):
+def test_search_docs_compact_equals_rebuild(t1_rows, t1_index_copy):
     """After compact physically purges, doc-level stats (doc count,
     integer total_dl sum, per-term doc-df) all equal a rebuild over the
     survivors, so search_docs scores are bit-identical keyed by conv."""
-    from joie_spark.engine import Engine
-
     kw = dict(n_buckets=8, docs_per_block=8, block_chunks=1)
-    a, gone = _split(t1_rows)
-    ref = Engine.build(
-        spark, spark.createDataFrame(a), str(tmp_path / "sd_ref"), **kw
-    )
+    gone = _deleted_convs(t1_rows)
+    ref = t1_index_copy(convs=KEPT, **kw)
     eng = t1_index_copy(**kw)
     eng.delete(gone)
     eng.compact()

@@ -103,9 +103,6 @@ def test_queries_match_rebuild_after_delta_chain(chained):
         return sorted((r["conv_id"], r["turn_idx"], r["score"]) for r in rows)
 
     for q in ("roll OR dice", '"crystal kingdom"', "the", "roll AND dice"):
-        assert by_conv(eng, q, mode="exhaustive") == by_conv(
-            ref, q, mode="exhaustive"
-        ), q
         assert by_conv(eng, q) == by_conv(ref, q), q
 
 

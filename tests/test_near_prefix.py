@@ -306,7 +306,7 @@ def _algebra_builders(E):
     ]
 
 
-@pytest.mark.parametrize("mode", ["auto", "postings"])
+@pytest.mark.parametrize("mode", ["auto"])
 def test_search_many_built_bit_identical(mode, t1_engine):
     builders = _algebra_builders(t1_engine)
     got = _by_qid(t1_engine.search_many_built(builders, k=10, mode=mode).collect())

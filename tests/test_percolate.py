@@ -67,7 +67,7 @@ def test_percolate_equals_index_match_set_strings(spark, t1_rows, t1_engine, t1_
 
 
 def test_percolate_equals_index_match_set_exprs(spark, t1_rows, t1_engine, t1_oracle):
-    from joie_spark.operators.query import match_set_expr
+    from joie_spark.operators.batch import match_set_expr
 
     got = _percolated(spark, t1_rows, EXPR_QUERIES)
     for i, e in enumerate(EXPR_QUERIES):

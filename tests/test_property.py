@@ -1,7 +1,7 @@
 """Property tests (SURVEY §5: hypothesis random queries): block-max WAND
-(the forced-pruned batch of one) must equal the exhaustive scorer for ANY
-keyword set, and the batch path must equal
-single-query search for ANY batch drawn from corpus + OOV vocabulary."""
+(the forced-pruned batch of one) must equal the oracle for ANY keyword
+set, and the batch path must equal the oracle's single-query answers for
+ANY batch drawn from corpus + OOV vocabulary."""
 
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
@@ -28,7 +28,7 @@ words_strategy = st.lists(
     suppress_health_check=list(HealthCheck),
 )
 @given(words=words_strategy)
-def test_wand_equals_exhaustive_random_keywords(words, t1_engine):
+def test_wand_equals_exhaustive_random_keywords(words, t1_engine, t1_oracle):
     got = [
         (r["doc_id"], r["turn_idx"], round(r["score"], 9))
         for r in t1_engine.search_many(
@@ -36,10 +36,7 @@ def test_wand_equals_exhaustive_random_keywords(words, t1_engine):
         ).collect()
     ]
     want = [
-        (r["doc_id"], r["turn_idx"], round(r["score"], 9))
-        for r in t1_engine.search(
-            " OR ".join(words), k=5, mode="exhaustive"
-        ).collect()
+        (d, t, round(s, 9)) for d, t, s in t1_oracle.search(" OR ".join(words), k=5)
     ]
     assert got == want
 
@@ -59,17 +56,13 @@ def test_wand_equals_exhaustive_random_keywords(words, t1_engine):
         max_size=4,
     )
 )
-def test_batch_equals_single_random(batch, t1_engine):
+def test_batch_equals_single_random(batch, t1_engine, t1_oracle):
     rows = t1_engine.search_many(batch, k=5).collect()
     by_q: dict[int, list] = {i: [] for i in range(len(batch))}
     for r in rows:
         by_q[r["query_id"]].append((r["doc_id"], r["turn_idx"], r["score"]))
     for i, q in enumerate(batch):
-        want = [
-            (r["doc_id"], r["turn_idx"], r["score"])
-            for r in t1_engine.search(q, k=5, mode="exhaustive").collect()
-        ]
-        assert by_q[i] == want, q
+        assert by_q[i] == t1_oracle.search(q, k=5), q
 
 
 # boolean structure generator: keywords / AND pairs / OR of AND — the
@@ -89,10 +82,10 @@ _query = st.lists(_clause, min_size=1, max_size=2).map(
     suppress_health_check=list(HealthCheck),
 )
 @given(batch=st.lists(_query, min_size=1, max_size=4))
-def test_batch_blockmax_pruned_equals_single_random(batch, t1_engine):
+def test_batch_blockmax_pruned_equals_single_random(batch, t1_engine, t1_oracle):
     """Forced block-max machinery (no decode-all shortcut, 1-block probe)
-    over random boolean batches must stay bit-identical to the exhaustive
-    single-query path."""
+    over random boolean batches must stay bit-identical to the oracle's
+    single-query answers."""
     rows = t1_engine.search_many(
         batch, k=3, direct_threshold=0, probe_blocks=1
     ).collect()
@@ -100,11 +93,7 @@ def test_batch_blockmax_pruned_equals_single_random(batch, t1_engine):
     for r in rows:
         by_q[r["query_id"]].append((r["doc_id"], r["turn_idx"], r["score"]))
     for i, q in enumerate(batch):
-        want = [
-            (r["doc_id"], r["turn_idx"], r["score"])
-            for r in t1_engine.search(q, k=3, mode="exhaustive").collect()
-        ]
-        assert by_q[i] == want, q
+        assert by_q[i] == t1_oracle.search(q, k=3), q
 
 
 @settings(

@@ -73,15 +73,6 @@ def test_doc_filtered_query_rank_identical(t1_engine, t1_oracle):
     assert got, "doc filter should keep some matches on t1"
 
 
-def test_unoptimized_plan_same_results(t1_engine, t1_oracle):
-    # fast paths (keyword fusion, intersecting-phrase flattening) must not
-    # change semantics (parser.rs:91-122 are rewrites, not semantics)
-    for q in ('"crystal kingdom" AND "roll for insight"', "roll OR dice"):
-        a = [tuple(r) for r in t1_engine.search(q, k=10, optimize=True).collect()]
-        b = [tuple(r) for r in t1_engine.search(q, k=10, optimize=False).collect()]
-        assert a == b
-
-
 def test_phrase_near_miss_excluded(t1_oracle):
     # near-miss turns contain the terms non-adjacently; the corpus plants
     # "crystal bright kingdom" / "kingdom of crystal" at ci%13==0, ti=0
@@ -107,8 +98,8 @@ def test_hot_terms_are_hot(t1_oracle):
 
 
 def test_phrase_rarest_seed_rank_identity(t1_engine, t1_oracle, monkeypatch):
-    """VERDICT r4 item 2: rarest-term-first phrase seeding (query.py
-    _phrase_candidates) must be invisible in results — forcing the seed
+    """VERDICT r4 item 2: rarest-term-first phrase seeding (batch.py
+    _seed_term_ids) must be invisible in results — forcing the seed
     ON for every phrase (ratio 1.0) and OFF (ratio ∞) must both equal
     the oracle, including stopword-phrases where the seed engages for
     real ('the X' shapes) and dup-term phrases."""
@@ -138,3 +129,75 @@ def test_phrase_rarest_seed_rank_identity(t1_engine, t1_oracle, monkeypatch):
                 for r in t1_engine.search(q, k=10).collect()
             ]
             assert got_top == want_top, (q, ratio)
+
+
+def _seedable(E):
+    """One builder per shape whose every match contains some term
+    (query.required_term_ids), so the seed can engage on it alone and
+    on a batch of them: near, within, '"crystal kingdom" AND roll', an
+    AndNot, and a plain AND."""
+    return [
+        E.builder().near("the", "dice", slop=2),
+        E.builder().within("roll", "dice", "game", window=8),
+        E.builder().phrase("crystal kingdom") & E.builder().keywords("roll"),
+        E.builder().keywords("roll") - E.builder().phrase("crystal kingdom"),
+        E.builder().keywords("roll") & E.builder().keywords("dice"),
+    ]
+
+
+def _mixed(E):
+    """A batch mixing seedable shapes with ones that require no single
+    term (keyword OR, prefix, fuzzy, an OR under an AND)."""
+    return _seedable(E) + [
+        E.builder().keywords("roll", "dice"),
+        E.builder().prefix("ro"),
+        E.builder().fuzzy("dice", 1),
+        E.builder().prefix("ro") - E.builder().phrase("crystal kingdom"),
+        E.builder().near("crystal", "kingdom", slop=2, ordered=True)
+        & E.builder().keywords("game", "dice"),
+    ]
+
+
+def test_seed_rank_identity_beyond_phrases(t1_engine, t1_oracle, monkeypatch):
+    """The rarest-required-term seed (batch._seed_term_ids) forced ON
+    (ratio 0, hot-df floor 0) and OFF (ratio ∞) must equal the oracle
+    for single near / within / phrase-AND-keyword / AndNot / AND
+    searches and for batches of them, where the seed rows are the union
+    of each query's rarest required term; ON must really engage."""
+    import joie_spark.operators.batch as B
+    import joie_spark.operators.query as Q
+
+    ix = t1_engine.index
+
+    def seeds(exprs):
+        items, dfs = Q.plan_exprs(ix, exprs)
+        ids = sorted({t for _q, n, _i in items for t in Q.pred_term_ids(n) if t > 0})
+        return B._seed_term_ids(items, dfs, ids)
+
+    singles = _seedable(t1_engine)
+    batches = [_seedable(t1_engine), _mixed(t1_engine)]
+    for ratio in (0.0, float("inf")):
+        monkeypatch.setattr(Q, "PHRASE_SEED_DF_RATIO", ratio)
+        monkeypatch.setattr(Q, "PHRASE_SEED_MIN_HOT_DF", 0)
+        for b in singles:
+            e = b._require_expr()
+            assert bool(seeds([e])) == (ratio == 0.0), (e, ratio)
+            got_match = {(r["doc_id"], r["turn_idx"]) for r in b.matches().collect()}
+            assert got_match == t1_oracle._eval(e), (e, ratio)
+            got_top = [tuple(r) for r in b.top_k(10).collect()]
+            assert got_top == t1_oracle.search_expr(e, k=10), (e, ratio)
+        assert bool(seeds([b._require_expr() for b in batches[0]])) == (
+            ratio == 0.0
+        )
+        for batch in batches:
+            got = {}
+            for r in t1_engine.search_many_built(batch, k=10).collect():
+                got.setdefault(r["query_id"], []).append(
+                    (r["doc_id"], r["turn_idx"], r["score"])
+                )
+            for i, b in enumerate(batch):
+                want = t1_oracle.search_expr(b._require_expr(), k=10)
+                assert got.get(i, []) == want, (i, ratio)
+        q = '"crystal kingdom" AND roll'  # the string twin of singles[2]
+        got = [tuple(r) for r in t1_engine.search(q, k=10).collect()]
+        assert got == t1_oracle.search(q, k=10), ratio

@@ -80,7 +80,7 @@ def test_append_stream_exactly_once_generations(spark, t1_rows, tmp_path):
     )
 
     def by_conv(e, q):
-        res = e.search(q, k=100000, mode="exhaustive")
+        res = e.search(q, k=100000)
         cv = e.index.turns.select("doc_id", "conv_id").distinct()
         return sorted(
             (r["conv_id"], r["turn_idx"], r["score"])

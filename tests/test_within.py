@@ -127,7 +127,7 @@ def _batch_builders(E):
     ]
 
 
-@pytest.mark.parametrize("mode", ["auto", "postings"])
+@pytest.mark.parametrize("mode", ["auto"])
 def test_within_batch_bit_identical(mode, t1_engine):
     builders = _batch_builders(t1_engine)
     got = _by_qid(t1_engine.search_many_built(builders, k=10, mode=mode).collect())
@@ -148,7 +148,7 @@ def test_within_batch_forced_pruning_bit_identical(t1_engine):
 
 def test_within_percolate_parity(spark, t1_rows, t1_engine, t1_oracle):
     from joie_spark.operators.percolate import percolate
-    from joie_spark.operators.query import match_set_expr
+    from joie_spark.operators.batch import match_set_expr
 
     exprs = [
         Within(("roll", "dice"), 4),
