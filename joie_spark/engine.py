@@ -85,13 +85,12 @@ class Engine:
         spelled-out OR, on the same routes.
 
         Every query is matched and scored from one candidate frame
-        (operators/batch.py): phrase-free queries decode the COMPRESSED
-        blocks table, queries with a phrase, near, within or and_not scan
-        the positional postings table; `where` / `where_doc` semi-join
-        the candidates before scoring; the top-k lowers to
-        TakeOrderedAndProject.  On an index above
-        batch.DIRECT_THRESHOLD blocks a phrase-free query runs block-max
-        pruned as a batch of one.  Rank-identical to the Python oracle
+        (operators/batch.py) over the positional postings table;
+        `where` / `where_doc` semi-join the candidates before scoring;
+        the top-k lowers to TakeOrderedAndProject.  Only on an index
+        above batch.DIRECT_THRESHOLD blocks does a phrase-free query read
+        the compressed blocks table instead, block-max pruned as a batch
+        of one.  Rank-identical to the Python oracle
         (tests/test_rank_identity.py)."""
         expr = parse_query(query)
         if synonyms:
@@ -250,7 +249,6 @@ class Engine:
         k: int = 10,
         where: str | None = None,
         where_doc: str | None = None,
-        mode: str = "auto",
         probe_blocks: int = 8,
         direct_threshold: int = 32768,
         stats_out: dict | None = None,
@@ -260,24 +258,24 @@ class Engine:
         query_id.  Per-query rows are bit-identical to `search(q)`; use
         this for throughput (amortizes per-job latency over the batch —
         the reference's per-query mmap latency is unreachable from a
-        shuffle engine, aggregate QPS is not).  mode='auto' runs
-        phrase-free queries on the compressed blocks table with per-query
-        block-max pruning (operators/batch.py) and the rest on the
-        positional postings table; 'blocks' refuses queries that need
-        positions.
+        shuffle engine, aggregate QPS is not).
 
-        direct_threshold (doc-blocks) routes indexes at or below it to
-        one-pass decode-all instead of the 3-phase probe/θ machinery.
-        The default is measured, not guessed: decode-all won every
-        configuration of the crossover study up to 20k blocks / 6.5M
-        turns — even when θ pruned 100% of post-probe pairs — because
-        phase 1's metadata aggregation costs more per candidate pair
-        than whole-stage-codegen decode-and-score (see
-        BENCH/PRUNING_CROSSOVER.md; lower it only for block sets big
-        enough that decode dominates, raise stats_out to check)."""
+        Every query scores from one shared positional postings frame
+        (operators/batch.py), except on an index of more than
+        direct_threshold doc-blocks, where the phrase-free queries run
+        per-query block-max pruning over the compressed blocks table
+        (`probe_blocks` per query in the probe; `stats_out` receives the
+        pruning diagnostics).  The default threshold is measured, not
+        guessed: the 3-phase probe/θ machinery lost every configuration
+        of the crossover study up to 20k blocks / 6.5M turns — even when
+        θ pruned 100% of post-probe pairs — because phase 1's metadata
+        aggregation costs more per candidate pair than one scoring pass
+        (see BENCH/PRUNING_CROSSOVER.md; lower it only for block sets
+        big enough that decode dominates, and pass stats_out to check).
+        direct_threshold=0 forces pruning."""
         return B.search_many(
             self.index, queries, k=k, where=where, where_doc=where_doc,
-            mode=mode, probe_blocks=probe_blocks,
+            probe_blocks=probe_blocks,
             direct_threshold=direct_threshold, stats_out=stats_out,
         )
 
@@ -295,10 +293,10 @@ class Engine:
         (reference grammar) and filter-free QueryBuilders (full
         algebra).  The whole batch shares one candidate scan; the
         collapse is a (query, doc)-keyed partial aggregation before the
-        two-phase top-k.  Always decodes all candidate blocks: turn-
-        level θ pruning is unsound for doc-level top-k (a doc's best
-        turn below turn-rank k can still make the doc top-k).  Per-query
-        rows are bit-identical to search_collapsed
+        two-phase top-k.  Always reads the postings frame, never the
+        pruned blocks path: turn-level θ pruning is unsound for doc-level
+        top-k (a doc's best turn below turn-rank k can still make the doc
+        top-k).  Per-query rows are bit-identical to search_collapsed
         (tests/test_collapse.py)."""
         from .plans.builder import QueryBuilder
 
@@ -324,18 +322,18 @@ class Engine:
         k: int = 10,
         where: str | None = None,
         where_doc: str | None = None,
-        mode: str = "auto",
         probe_blocks: int = 8,
         direct_threshold: int = 32768,
     ) -> DataFrame:
         """search_many over QueryBuilder objects — batches the FULL query
         algebra incl. the builder-only extensions (near/prefix/fuzzy/
-        and_not), bit-identical per query to `builder.top_k(k)`.
-        Prefix/fuzzy queries ride the pruned blocks path; near/and_not
-        queries auto-route to the postings path (positions / prohibited-
-        side presence bits live there).  Per-builder filters are refused
-        (the batch shares one candidate scan; pass batch-wide `where` /
-        `where_doc` instead)."""
+        and_not), bit-identical per query to `builder.top_k(k)`, on
+        search_many's routes: prefix/fuzzy queries are phrase-free and
+        are pruned above direct_threshold like keyword queries; near/
+        within/and_not queries always read the postings frame (positions
+        and prohibited-side presence bits live there).  Per-builder
+        filters are refused (the batch shares one candidate scan; pass
+        batch-wide `where` / `where_doc` instead)."""
         exprs = []
         for i, b in enumerate(builders):
             if b._where or b._where_doc:
@@ -348,8 +346,7 @@ class Engine:
             exprs.append(b._expr)
         return B.search_many_exprs(
             self.index, exprs, k=k, where=where, where_doc=where_doc,
-            mode=mode, probe_blocks=probe_blocks,
-            direct_threshold=direct_threshold,
+            probe_blocks=probe_blocks, direct_threshold=direct_threshold,
         )
 
     def search_highlighted(

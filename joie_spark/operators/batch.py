@@ -6,32 +6,26 @@ microseconds from mmap (engine/src/searcher.rs:33-52); a shuffle engine
 pays ~seconds of job latency per query, so throughput parity comes from
 amortizing that latency over a batch (north rule / VERDICT r1).
 
-The candidate frame (`scored_frame`): ONE scan per batch → per-turn
-candidate rows (doc_id, turn_idx, dl, tfmap, [posmap,] presence bitmask
+The candidate frame (`scored_frame`): ONE partition/row-group-pruned
+scan of the positional postings table + one groupBy → per-turn
+candidate rows (doc_id, turn_idx, dl, tfmap, posmap, presence bitmask
 m0..mW) → every query's boolean predicate (query._batch_pred_sql) over
-the bitmask → per-(query, matching turn) BM25 score, unranked.  Two
-candidate sources:
+the bitmask → per-(query, matching turn) BM25 score, unranked.  The
+scan stays in the JVM, carries positions only for phrase/proximity
+terms and is seeded by each query's rarest required term
+(_seed_term_ids).  Every unpruned read — single or batch, top-k or
+variant (collapse, cursor, boosts, reweighting, doc lift, match sets,
+more-like-this) — scores from this frame; the single-search tails
+below scored_frame plan their one expression and cut it.
 
-  postings  the positional postings table, one JVM scan + one groupBy
-            (positions read only for phrase/proximity terms), optionally
-            seeded by each query's rarest required term
-            (_seed_term_ids) — every search variant (collapse, cursor,
-            boosts, reweighting, doc lift, match sets, more-like-this)
-            and every top-k query with a phrase, near, within or and_not
-            (query.needs_postings), single or batched.
-  blocks    the delta+varint compressed blocks table, decoded in one
-            applyInPandas over rows grouped by block_id — phrase-free
-            top-k queries, single or batched (a batch shares one
-            decode; block-max bounds live here).
-
-Single searches (the tails below scored_frame) plan their one
-expression and cut this frame.  `search_many` answers a batch: phrase-free queries
-take the blocks path below, the rest the postings frame.  On an index of
-at most `direct_threshold` blocks the blocks path decodes every
-candidate block in one pass (and a mixed batch folds its phrase-free
-queries into the postings frame it pays for anyway); above it the
-blocks path runs block-max pruning — for a batch, and for a phrase-free
-single top-k as a batch of one:
+One rule picks the table a query reads (_pruned_items): a phrase-free,
+non-collapsed query on an index of more than `direct_threshold`
+doc-blocks takes block-max pruning over the delta+varint compressed
+blocks table (_blocks_path) — for a batch, and for a single top-k as a
+batch of one; every other query reads the postings frame.  The blocks
+table is read only where its block-max metadata lets a query skip
+blocks: decoding every candidate block lost to the postings frame on
+every measured unpruned read (ROADMAP item 3).  The pruned path:
 
   phase 1  per-(query, block) upper bounds from block-max metadata:
            ub_q(b) = Σ_{t ∈ q} idf_t · max_part(t, b) — one scan of the
@@ -56,10 +50,10 @@ df, and the per-turn fold adds contributions in the same ascending-
 term_id order (tests/test_batch_query.py, tests/test_rank_identity.py).
 
 Scale shape: every candidate scan is bucket-partition-pruned and
-term_id-pruned at the parquet row-group level; the decode shuffle is
-keyed by block_id (a hot term's postings spread over ~n_docs/docs_per_
-block blocks — no hot keys); per-query top-k is a two-phase aggregation,
-never a window (a stopword query at 10^12 turns would otherwise put its
+term_id-pruned at the parquet row-group level; the pruned path's decode
+shuffle is keyed by block_id (a hot term's postings spread over
+~n_docs/docs_per_block blocks — no hot keys); per-query top-k is a
+two-phase aggregation, never a window (a stopword query at 10^12 turns would otherwise put its
 whole candidate set into one window task).
 """
 
@@ -100,9 +94,17 @@ OUT_SCHEMA_COLLAPSED = T.StructType(
 
 NEG_INF_SQL = "CAST('-Infinity' AS DOUBLE)"
 
-# Indexes with at most this many doc-blocks answer every query by
-# decoding all candidate blocks in one pass (search_many's
-# `direct_threshold` default — measured, see _blocks_path).
+# Indexes with at most this many doc-blocks answer every query from the
+# postings frame; above it phrase-free top-k queries run block-max
+# pruned (search_many's `direct_threshold` default).  Measured
+# (BENCH/PRUNING_CROSSOVER.md): the 3-phase chain never beat decoding
+# every candidate block up to 20k blocks / 6.5M turns — even at 100%
+# post-probe pair pruning — because phase 1's per-(q, b) metadata
+# aggregation costs more per candidate pair than one scoring pass and
+# the chain adds 2 job barriers.  Pruning is for the regime where fat
+# posting blocks make decode dominate (10^12 turns ⇒ ~10^10 blocks).
+# block_id ranges over DOCS, so the count compared is ix.total_blocks =
+# ceil(n_docs / docs_per_block).
 DIRECT_THRESHOLD = 32768
 
 
@@ -285,7 +287,7 @@ def _score_candidates(
 
 
 # ---------------------------------------------------------------------------
-# candidate sources
+# the candidate frame (postings)
 
 
 def _seed_term_ids(items, dfs: dict[int, int], all_ids: list[int]) -> list[int]:
@@ -355,8 +357,8 @@ def _cand_from_postings(
     )
     mask_words = [
         F.expr(
-            f"aggregate(collect_list(CASE WHEN (bp div 64) = {w} THEN bp % 64 END),"
-            f" 0L, (acc, b) -> acc | shiftleft(1L, b))"
+            f"bit_or(CASE WHEN (bp div 64) = {w} THEN shiftleft(1L, bp % 64)"
+            " ELSE 0L END)"
         ).alias(f"m{w}")
         for w in range(n_words)
     ]
@@ -386,6 +388,65 @@ def _cand_from_postings(
             F.first("dl").alias("dl"),
             *mask_words,
         )
+    )
+
+
+def scored_frame(
+    ix: Index,
+    items: list[tuple[int, PNode, list[int]]],
+    dfs: dict[int, int],
+    where: str | None = None,
+    where_doc: str | None = None,
+    boosts: dict[int, float] | None = None,
+) -> DataFrame:
+    """THE match-and-score frame: (query_id, doc_id, turn_idx, score),
+    one row per (query, matching turn), unranked, for planned `items`
+    (query.plan_exprs).  One postings scan covers every predicate term
+    (incl. a PDiff's prohibited side — NOT(rhs) reads rhs presence bits
+    although rhs never scores).  Tombstones and `where`/`where_doc`
+    semi-join the candidates before scoring; `boosts` (term_id → weight)
+    fold into the idf literals."""
+    if not items:
+        return ix.spark.createDataFrame([], OUT_SCHEMA)
+    all_ids = sorted(
+        {t for _q, node, _qids in items for t in pred_term_ids(node) if t > 0}
+    )
+    bitpos = {t: i for i, t in enumerate(all_ids)}
+    n_words = (len(all_ids) + 63) // 64
+    cand = _cand_from_postings(ix, items, dfs, bitpos, n_words)
+    return _score_candidates(
+        _apply_filters(cand, ix, where, where_doc),
+        items,
+        _idf(ix, items, dfs, boosts),
+        ix.stats["avgdl"],
+        bitpos,
+        n_words,
+    )
+
+
+def _pruned_items(ix: Index, items, direct_threshold: int, collapse: bool) -> list:
+    """THE source rule: the items that take block-max pruning over the
+    compressed blocks — phrase-free (query.needs_postings: positions and
+    a prohibited side's presence bits live only in the postings table),
+    not collapsed (turn-level θ pruning is unsound for a doc-level
+    top-k: a doc's best turn below turn-rank k can still make it), on an
+    index of more than `direct_threshold` doc-blocks.  Every other item
+    scores from the postings frame."""
+    if collapse or ix.total_blocks <= direct_threshold:
+        return []
+    return [it for it in items if not needs_postings(it[1])]
+
+
+# ---------------------------------------------------------------------------
+# blocks path (block-max pruned)
+
+
+def _blocks_meta_for(ix: Index, term_ids: list[int]) -> DataFrame:
+    nb = ix.stats["n_buckets"]
+    ids = [int(t) for t in term_ids]
+    buckets = sorted({t % nb for t in ids})
+    return ix.blocks.where(
+        F.col("bucket").isin(buckets) & F.col("term_id").isin(ids)
     )
 
 
@@ -473,58 +534,6 @@ def _cand_from_blocks(blocks: DataFrame, bitpos, n_words) -> DataFrame:
         "dl",
         F.map_from_arrays("tids", "tfs").alias("tfmap"),
         *[F.col(f"m{w}") for w in range(n_words)],
-    )
-
-
-def scored_frame(
-    ix: Index,
-    items: list[tuple[int, PNode, list[int]]],
-    dfs: dict[int, int],
-    where: str | None = None,
-    where_doc: str | None = None,
-    boosts: dict[int, float] | None = None,
-    blocks: bool = False,
-) -> DataFrame:
-    """THE match-and-score frame: (query_id, doc_id, turn_idx, score),
-    one row per (query, matching turn), unranked, for planned `items`
-    (query.plan_exprs).  One candidate scan covers every predicate term
-    (incl. a PDiff's prohibited side — NOT(rhs) reads rhs presence bits
-    although rhs never scores): the postings table, or with `blocks` —
-    phrase-free top-k items only — the compressed blocks table, all
-    candidate blocks decoded.  Tombstones and
-    `where`/`where_doc` semi-join the candidates before scoring; `boosts`
-    (term_id → weight) fold into the idf literals."""
-    if not items:
-        return ix.spark.createDataFrame([], OUT_SCHEMA)
-    all_ids = sorted(
-        {t for _q, node, _qids in items for t in pred_term_ids(node) if t > 0}
-    )
-    bitpos = {t: i for i, t in enumerate(all_ids)}
-    n_words = (len(all_ids) + 63) // 64
-    if blocks:
-        cand = _cand_from_blocks(_blocks_meta_for(ix, all_ids), bitpos, n_words)
-    else:
-        cand = _cand_from_postings(ix, items, dfs, bitpos, n_words)
-    return _score_candidates(
-        _apply_filters(cand, ix, where, where_doc),
-        items,
-        _idf(ix, items, dfs, boosts),
-        ix.stats["avgdl"],
-        bitpos,
-        n_words,
-    )
-
-
-# ---------------------------------------------------------------------------
-# blocks path (block-max pruned)
-
-
-def _blocks_meta_for(ix: Index, term_ids: list[int]) -> DataFrame:
-    nb = ix.stats["n_buckets"]
-    ids = [int(t) for t in term_ids]
-    buckets = sorted({t % nb for t in ids})
-    return ix.blocks.where(
-        F.col("bucket").isin(buckets) & F.col("term_id").isin(ids)
     )
 
 
@@ -617,56 +626,20 @@ def _blocks_path(
     where: str | None,
     where_doc: str | None,
     probe_blocks: int,
-    direct_threshold: int = DIRECT_THRESHOLD,
     stats_out: dict | None = None,
-    per_doc: bool = False,
 ) -> DataFrame:
     """Block-max pruned batch top-k for phrase-free queries (unordered).
 
-    per_doc=True (conversation collapse) always decodes all candidate
-    blocks: the 3-phase θ machinery prunes turns outside the TURN-level
-    top-k, but a doc's best turn below turn-rank k can still make the
-    DOC-level top-k, so θ pruning is unsound for collapse.
-
     `stats_out`, when passed, is filled with pruning diagnostics
     (candidate (query, block) pairs, probed block ids, surviving decode
-    set) — costs one extra count job, so it is opt-in (bench/debug)."""
+    set) — costs extra count jobs, so it is opt-in (bench/debug)."""
     spark = ix.spark
     avgdl = ix.stats["avgdl"]
     idf = _idf(ix, items, dfs)
     all_ids = sorted({t for _q, _n, qids in items for t in qids})
     bitpos = {t: i for i, t in enumerate(all_ids)}
     n_words = (len(all_ids) + 63) // 64
-
     blocks_meta = _blocks_meta_for(ix, all_ids)
-
-    # Small-index shortcut: when the whole index has at most
-    # direct_threshold blocks (known from stats — no job needed), decode
-    # every candidate block in ONE pass (still the compressed index,
-    # still exact).  The default threshold is measured
-    # (BENCH/PRUNING_CROSSOVER.md): decode-all won every crossover
-    # configuration up to 20k blocks / 6.5M turns — even at 100%
-    # post-probe pair pruning — because phase 1's per-(q, b) metadata
-    # aggregation costs more per candidate pair than one codegen
-    # decode-and-score pass, and the 3-phase chain adds 2 extra job
-    # barriers.  The phases below are for the regime where fat posting
-    # blocks make decode dominate (10^12 turns ⇒ ~10^10 blocks).
-    # block_id ranges over DOCS (conversations), not turns — ix.n_docs,
-    # not stats["N"] (~a dozen turns per doc ⇒ the old N-based estimate
-    # overstated the block count ~12× and mis-routed mid-size indexes
-    # into the 3-phase pruning machinery)
-    total_blocks = ix.total_blocks
-    if per_doc or total_blocks <= direct_threshold:
-        if stats_out is not None:
-            stats_out.update({
-                "path": "direct",
-                "total_blocks": total_blocks,
-                # decode units: every (term_id, block_id) posting-block of
-                # the batch vocabulary (metadata-only count, diag pass)
-                "candidate_tb_pairs": blocks_meta.count(),
-            })
-        frame = scored_frame(ix, items, dfs, where, where_doc, blocks=True)
-        return _top_k_per_query(best_turn_per_doc(frame) if per_doc else frame, k)
 
     ub = _ub_per_query(blocks_meta, items, idf, avgdl)
     top = _top_blocks_per_query(ub, probe_blocks)
@@ -674,7 +647,7 @@ def _blocks_path(
         stats_out.update(
             {
                 "path": "pruned",
-                "total_blocks": total_blocks,
+                "total_blocks": ix.total_blocks,
                 "candidate_qblock_pairs": int(sum(n for _b, n in top.values())),
                 "candidate_tb_pairs": blocks_meta.count(),
             }
@@ -906,17 +879,15 @@ def search_expr(
     (engine/src/query/filter.rs:7-34).  Both semi-join the candidate
     frame before scoring, so Catalyst pushes them into the scans.
 
-    Route: a phrase-free plan reads the compressed blocks table — on an
-    index above DIRECT_THRESHOLD blocks as the block-max pruned batch of
-    one, else decoded whole; every other plan reads the postings source.
-    Either frame is cut with _topk, which lowers to
+    Route (_pruned_items): a phrase-free plan on an index above
+    DIRECT_THRESHOLD blocks runs block-max pruned as a batch of one;
+    every other plan cuts the postings frame with _topk, which lowers to
     TakeOrderedAndProject."""
     items, dfs = plan_exprs(ix, [expr])
-    flat = bool(items) and not needs_postings(items[0][1])
-    if flat and ix.total_blocks > DIRECT_THRESHOLD:
+    if _pruned_items(ix, items, DIRECT_THRESHOLD, collapse=False):
         out = _blocks_path(ix, items, dfs, k, where, where_doc, probe_blocks=8)
         return out.drop("query_id")
-    frame = scored_frame(ix, items, dfs, where, where_doc, blocks=flat)
+    frame = scored_frame(ix, items, dfs, where, where_doc)
     return _topk(frame.drop("query_id"), k)
 
 
@@ -1037,9 +1008,10 @@ def search_docs_expr(
     tf is the term_id-pruned postings scan semi-joined to matching docs
     and aggregated on (term_id, doc_id); per-term doc-df is one partial
     agg over the same pruned scan, collected bounded (≤ |query terms|
-    rows, like dfs); the per-doc fold reuses the sorted-struct
-    F.aggregate so float64 scores are bit-identical to the Python
-    recompute (tests/test_rank_eval.py).  Stats drift under unpurged
+    rows, like dfs); each doc row (query_id 0, summed tfmap, dl =
+    total_dl) is scored by the turn frame's own _score_sql fold with the
+    doc-level idf and avgdl, so float64 scores are bit-identical to the
+    Python recompute (tests/test_rank_eval.py).  Stats drift under unpurged
     tombstones matches the turn-level path (frozen until compact)."""
     items, dfs = plan_exprs(ix, [expr])
     qset = items[0][2] if items else []
@@ -1067,44 +1039,27 @@ def search_docs_expr(
         ix._dfd_cache.update({r["term_id"]: r["dfd"] for r in rows})
         for t in missing:  # terms with zero postings
             ix._dfd_cache.setdefault(t, 0)
-    dfd = {t: ix._dfd_cache[t] for t in qset}
-    idf_map = F.map_from_arrays(
-        F.array([F.lit(int(t)).cast("long") for t in qset]),
-        F.array([F.lit(bm25_idf(n_docs, dfd.get(t, 0))) for t in qset]),
-    )
+    idf_doc = {t: bm25_idf(n_docs, ix._dfd_cache[t]) for t in qset}
     mdocs = scored_frame(ix, items, dfs, where, where_doc).select("doc_id").distinct()
     tfdoc = (
         post.join(mdocs, "doc_id", "left_semi")
         .groupBy("term_id", "doc_id")
         .agg(F.sum("tf").cast("int").alias("tf"))
     )
-    cand = tfdoc.groupBy("doc_id").agg(
-        F.sort_array(F.collect_list(F.struct("term_id", "tf"))).alias(
-            "contribs"
+    docs = (
+        tfdoc.groupBy("doc_id")
+        .agg(
+            F.map_from_entries(F.collect_list(F.struct("term_id", "tf"))).alias(
+                "tfmap"
+            )
         )
-    )
-    withdl = cand.join(
-        ix.doc_meta.select("doc_id", "total_dl"), "doc_id", "inner"
-    )
-    dl = F.col("total_dl").cast("double")
-    score = F.aggregate(
-        F.col("contribs"),
-        F.lit(0.0),
-        lambda acc, x: acc
-        + (
-            (
-                F.element_at(idf_map, x["term_id"])
-                * (x["tf"].cast("double") * F.lit(K1 + 1.0))
-            )
-            / (
-                x["tf"].cast("double")
-                + F.lit(K1)
-                * (F.lit(1.0 - B) + (F.lit(B) * dl) / F.lit(avgdl_doc))
-            )
-        ),
+        .join(ix.doc_meta.select("doc_id", F.col("total_dl").alias("dl")), "doc_id")
+        .withColumn("query_id", F.lit(0))
     )
     return (
-        withdl.select("doc_id", score.alias("score"))
+        docs.select(
+            "doc_id", F.expr(_score_sql(items, idf_doc, avgdl_doc)).alias("score")
+        )
         .orderBy(F.desc("score"), F.asc("doc_id"))
         .limit(int(k))
     )
@@ -1250,7 +1205,6 @@ def search_many(
     k: int = 10,
     where: str | None = None,
     where_doc: str | None = None,
-    mode: str = "auto",
     probe_blocks: int = 8,
     direct_threshold: int = DIRECT_THRESHOLD,
     stats_out: dict | None = None,
@@ -1259,16 +1213,16 @@ def search_many(
     per query_id in (query_id, score desc, doc_id, turn_idx) order.
     Per-query rows are bit-identical to the single-query `search` path.
 
-    mode='auto' routes phrase-free queries through the block-max pruned
-    compressed index (_blocks_path) and queries that need positions or
-    prohibited-side bits through the positional postings frame; 'blocks'
-    asserts no query needs them.  Indexes with at most direct_threshold
-    blocks skip the probe/θ phases and decode every candidate block in
-    one pass (pruning only pays off when the block count is large; set 0
-    to force the full WAND machinery)."""
+    On an index of more than direct_threshold blocks the phrase-free
+    queries run block-max pruned over the compressed blocks
+    (_blocks_path, `probe_blocks` per query in the probe); every other
+    query — and every query at or below the threshold — scores from the
+    one postings frame.  Set direct_threshold=0 to force the pruning
+    machinery; `stats_out` receives its diagnostics (path "pruned"), or
+    path "direct" and the block count when nothing was pruned."""
     return search_many_exprs(
         ix, [parse_query(q) for q in queries], k=k, where=where,
-        where_doc=where_doc, mode=mode, probe_blocks=probe_blocks,
+        where_doc=where_doc, probe_blocks=probe_blocks,
         direct_threshold=direct_threshold, stats_out=stats_out,
     )
 
@@ -1279,7 +1233,6 @@ def search_many_exprs(
     k: int = 10,
     where: str | None = None,
     where_doc: str | None = None,
-    mode: str = "auto",
     probe_blocks: int = 8,
     direct_threshold: int = DIRECT_THRESHOLD,
     stats_out: dict | None = None,
@@ -1287,60 +1240,44 @@ def search_many_exprs(
 ) -> DataFrame:
     """search_many over pre-built ASTs, covering the full query algebra
     incl. the builder-only extensions (Near/Prefix/Fuzzy/AndNot).
-    Routing: prefix/fuzzy lower to plain keyword sets and ride the blocks
-    path (pruning stays sound — predicate terms == scoring terms); near,
-    within and AndNot queries take the postings frame with the phrases
-    (query.needs_postings)."""
+    Routing (_pruned_items): prefix/fuzzy lower to plain keyword sets and
+    are pruned like any phrase-free query (predicate terms == scoring
+    terms); near, within and AndNot queries, collapsed batches and every
+    batch on an index at or below direct_threshold share one postings
+    frame."""
     items, dfs = plan_exprs(ix, exprs)
     if not items:
         return ix.spark.createDataFrame(
             [], OUT_SCHEMA_COLLAPSED if collapse else OUT_SCHEMA
         )
-    post_items = [it for it in items if needs_postings(it[1])]
-    flat_items = [it for it in items if not needs_postings(it[1])]
-    if mode == "auto" and flat_items and post_items:
-        if ix.total_blocks <= direct_threshold:
-            # tiny index AND the positional postings scan is already being
-            # paid for the phrase queries: folding the flat queries into
-            # that one pipeline beats running a second (blocks) pipeline —
-            # pruning can't recoup anything at this block count.  Above
-            # the threshold the split stands: the phrase scan only fetches
-            # the phrase queries' vocabulary while the flat queries prune
-            # blocks.
-            post_items, flat_items = items, []
-    elif mode == "blocks" and post_items:
-        raise ValueError(
-            "mode='blocks' cannot answer multi-term phrase / near / "
-            "and_not queries (positions and prohibited-side presence "
-            "bits live in the postings table)"
-        )
-    elif mode not in ("auto", "blocks"):
-        raise ValueError(f"unknown mode={mode!r}")
-
+    pruned = _pruned_items(ix, items, direct_threshold, collapse)
+    pruned_ids = {qid for qid, _n, _q in pruned}
+    rest = [it for it in items if it[0] not in pruned_ids]
     parts = []
-    if flat_items:
+    if pruned:
         parts.append(
             _blocks_path(
-                ix, flat_items, dfs, k, where, where_doc, probe_blocks,
-                direct_threshold=direct_threshold, stats_out=stats_out,
-                per_doc=collapse,
+                ix, pruned, dfs, k, where, where_doc, probe_blocks,
+                stats_out=stats_out,
             )
         )
-    if post_items:
-        frame = scored_frame(ix, post_items, dfs, where, where_doc)
+    elif stats_out is not None:
+        stats_out.update({"path": "direct", "total_blocks": ix.total_blocks})
+    if rest:
+        frame = scored_frame(ix, rest, dfs, where, where_doc)
         parts.append(
             _top_k_per_query(best_turn_per_doc(frame) if collapse else frame, k)
         )
-    handles = [h for p in parts if (h := getattr(p, "_joie_persisted", None)) is not None]
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
     out = out.orderBy(
         "query_id", F.desc("score"), F.asc("doc_id"), F.asc("turn_idx")
     )  # collapsed rows are unique per (query, doc); the turn key is inert
-    if handles:
+    handle = getattr(parts[0], "_joie_persisted", None)
+    if handle is not None:
         # stats_out diagnostics persisted an intermediate (survivor-block
         # set); hand the release handle to the caller — unpersist after
         # materializing the result (same contract as pipeline/dedup.py)
-        out._joie_persisted = handles[0]
+        out._joie_persisted = handle
     return out

@@ -26,9 +26,11 @@ winning.  The first run of this script found out why, twice over:
 
 This script sweeps all three: corpus size (20k / 40k convs), block
 granularity (dpb 64 / 8), and batch (hot-laden "flat" vs "selective"),
-timing decode-all vs forced-pruning on identical inputs with
+timing the unpruned route vs forced-pruning on identical inputs with
 interleaved reps, and checks rank-identity between the paths.  Results
-land in BENCH/PRUNING_CROSSOVER.md.
+land in BENCH/PRUNING_CROSSOVER.md; its tables were recorded when the
+unpruned route decoded every candidate block, which it no longer does —
+it now scores from the postings frame (operators/batch.py).
 
 Usage:
     python scripts/bench_pruning.py                        # full sweep
@@ -141,14 +143,13 @@ def index_for(convs: int, dpb: int, burst: float, spark) -> "object":
 def run_once(eng, batch, k, probe, direct_threshold, want_stats=False):
     t0 = time.time()
     got = eng.search_many(
-        batch, k=k, mode="blocks", probe_blocks=probe,
-        direct_threshold=direct_threshold,
+        batch, k=k, probe_blocks=probe, direct_threshold=direct_threshold,
     ).collect()
     dt = round(time.time() - t0, 2)
     stats: dict = {}
     if want_stats:  # untimed diagnostics pass (stats adds a count job)
         diag = eng.search_many(
-            batch, k=k, mode="blocks", probe_blocks=probe,
+            batch, k=k, probe_blocks=probe,
             direct_threshold=direct_threshold, stats_out=stats,
         )
         diag.collect()
@@ -171,14 +172,13 @@ def run_corpus(
           f"batch {len(batch)}", file=sys.stderr)
 
     # warm (parquet footers, codegen, python workers)
-    eng.search_many(batch[:10], k=10, mode="blocks",
-                    direct_threshold=10**9).collect()
+    eng.search_many(batch[:10], k=10, direct_threshold=10**9).collect()
 
-    configs = [("decode_all", 10, 8, 10**9)]
+    configs = [("unpruned", 10, 8, 10**9)]
     for probe in (8, 32):
         configs.append((f"pruned_p{probe}", 10, probe, 0))
     if batch_name == "single":  # tight-ub case: also the k=1 extreme
-        configs += [("decode_all_k1", 1, 8, 10**9), ("pruned_p8_k1", 1, 8, 0)]
+        configs += [("unpruned_k1", 1, 8, 10**9), ("pruned_p8_k1", 1, 8, 0)]
     results: dict[str, dict] = {
         name: {"k": k, "probe": p, "times": []} for name, k, p, _ in configs
     }
@@ -195,12 +195,12 @@ def run_corpus(
         results[name].update(stats)
         results[name]["min"] = min(results[name]["times"])
         print(f"  {name}: {results[name]}", file=sys.stderr)
-    # exactness: the pruned path must match decode-all value-for-value
-    a = eng.search_many(batch, k=10, mode="blocks", direct_threshold=10**9)
-    b = eng.search_many(batch, k=10, mode="blocks", probe_blocks=32,
-                        direct_threshold=0)
+    # exactness: the pruned path must match the unpruned route
+    # value-for-value
+    a = eng.search_many(batch, k=10, direct_threshold=10**9)
+    b = eng.search_many(batch, k=10, probe_blocks=32, direct_threshold=0)
     same = sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
-    assert same, "pruned path diverged from decode-all"
+    assert same, "pruned path diverged from the unpruned route"
     return {
         "convs": convs,
         "dpb": dpb,

@@ -44,8 +44,8 @@ def main() -> None:
     )
     results = {}
 
-    # 1. postings scan pruning: a phrase query still scans the positional
-    # postings table (phrase-free queries decode the compressed blocks)
+    # 1. postings scan pruning: the positional postings table serves
+    # every unpruned search (here a phrase query)
     plan = explain_str(eng.search('"crystal kingdom" AND roll', k=10))
     results["partition_pruning_bucket"] = "bucket" in plan and (
         "PartitionFilters" in plan
@@ -67,12 +67,25 @@ def main() -> None:
     executed = df._jdf.queryExecution().executedPlan().toString()
     results["wholestage_codegen"] = "*(" in executed
 
-    # keyword-OR single search = a batch of one on the compressed blocks
+    # phrase-free single searches at the default direct threshold score
+    # from the postings frame: no compressed-blocks column, no Python
+    # block decode (FlatMapGroupsInPandas)
     plan_w = explain_str(eng.search("roll OR dice", k=10))
-    results["keyword_or_block_scan_pruned"] = (
-        "bucket" in plan_w and "docids" in plan_w and "/postings" not in plan_w
+    plan_wf = explain_str(eng.search("roll AND dice", k=5, where="role = 'user'"))
+    results["single_phrase_free_on_postings"] = all(
+        "/postings" in p and "docids" not in p and "FlatMapGroupsInPandas" not in p
+        for p in (plan_w, plan_wf)
     )
     results["keyword_or_topk_window_free"] = "Window" not in plan_w
+    # the compressed blocks are read only by block-max pruning: forced
+    # with direct_threshold=0, and probe_blocks=1 so phase 3 (the
+    # survivor decode) stays in the plan
+    plan_pw = explain_str(
+        eng.search_many(["roll OR dice"], k=10, direct_threshold=0, probe_blocks=1)
+    )
+    results["pruned_keyword_or_block_scan"] = (
+        "bucket" in plan_pw and "docids" in plan_pw and "/postings" not in plan_pw
+    )
 
     hi = eng.search_highlighted('"crystal kingdom"', k=3)
     plan_h = explain_str(hi)
@@ -179,11 +192,9 @@ def main() -> None:
         and "bucket" in plan_sd
     )
 
-    # 5. batch path: partition-pruned scans, no cross join, and the
-    # phrase-free queries run on the COMPRESSED blocks table (VERDICT r2):
-    # the plan must contain the blocks scan (docids/tfs binary columns +
-    # the grouped decode, FlatMapGroupsInPandas) next to the postings scan
-    # that serves the phrase query.
+    # 5. batch path: partition-pruned scans and no cross join; at the
+    # default direct threshold the whole batch, phrase-free queries
+    # included, shares one postings frame.
     plan_b = explain_str(
         eng.search_many(["roll OR dice", '"crystal kingdom"', "roll AND dice"], k=5)
     )
@@ -191,23 +202,32 @@ def main() -> None:
     results["batch_no_cross_join"] = (
         "BroadcastNestedLoopJoin" not in plan_b and "CartesianProduct" not in plan_b
     )
-    # phrase-free batch: compressed-blocks scan + grouped decode, and the
-    # fat postings table is never touched (mixed batches on a TINY index
-    # deliberately fold into the already-paid postings scan — batch.py)
-    plan_b2 = explain_str(eng.search_many(["roll OR dice", "roll AND dice"], k=5))
-    results["batch_scans_compressed_blocks"] = (
+    plan_b1 = explain_str(eng.search_many(["roll OR dice", "roll AND dice"], k=5))
+    results["batch_phrase_free_on_postings"] = (
+        "/postings" in plan_b1
+        and "docids" not in plan_b1
+        and "FlatMapGroupsInPandas" not in plan_b1
+    )
+    # forced-pruned phrase-free batch: compressed-blocks scan + grouped
+    # decode, and the fat postings table is never touched
+    plan_b2 = explain_str(
+        eng.search_many(
+            ["roll OR dice", "roll AND dice"], k=5, direct_threshold=0,
+            probe_blocks=1,
+        )
+    )
+    results["pruned_batch_scans_compressed_blocks"] = (
         "blocks" in plan_b2 and "FlatMapGroupsInPandas" in plan_b2
         and "docids" in plan_b2
     )
-    results["batch_flat_skips_postings"] = "/postings" not in plan_b2
+    results["pruned_batch_skips_postings"] = "/postings" not in plan_b2
     # the blocks scan itself must be bucket-partition-pruned, term_id
-    # row-group-pruned, and read ONLY the decode columns (no positions,
-    # no block-max metadata on the direct path)
+    # row-group-pruned, and never read positions
     # (r4: the live-generation filter joined the partition predicates, so
     # the line is now "[isnotnull(gen), (gen = 0), bucket IN (...)]" —
     # require bucket pruning on SOME PartitionFilters line plus the gen
     # live-set prune, rather than a fixed prefix)
-    results["batch_blocks_scan_pruned"] = (
+    results["pruned_batch_blocks_scan_pruned"] = (
         any(
             "PartitionFilters: [" in ln and "bucket" in ln and "gen" in ln
             for ln in plan_b2.splitlines()
@@ -216,11 +236,16 @@ def main() -> None:
         and "positions" not in plan_b2
     )
 
-    # 5b. where-filtered phrase-free single query in auto mode runs on the
-    # compressed blocks table (VERDICT r3 item 3), postings untouched
-    plan_wf = explain_str(eng.search("roll AND dice", k=5, where="role = 'user'"))
-    results["auto_where_filtered_on_blocks"] = (
-        "docids" in plan_wf and "/postings" not in plan_wf
+    # 5b. a where-filtered forced-pruned batch stays on the compressed
+    # blocks table (VERDICT r3 item 3), postings untouched
+    plan_pf = explain_str(
+        eng.search_many(
+            ["roll AND dice", "the"], k=5, where="role = 'user'",
+            direct_threshold=0, probe_blocks=1,
+        )
+    )
+    results["pruned_where_filtered_on_blocks"] = (
+        "docids" in plan_pf and "/postings" not in plan_pf
     )
 
     # 5b2. rarest-term-first phrase seeding (VERDICT r4 item 2): with an
@@ -450,8 +475,7 @@ def main() -> None:
 
     # 5i. minimum_should_match on the batch path must evaluate as a
     # bitmask popcount (bit_count over the presence masks) with no
-    # Python stage beyond the tokenizer, and still produce the blocks-
-    # path plan (no per-floor join)
+    # Python stage beyond the tokenizer, and no per-floor join
     mm = eng.builder().keywords("roll", "dice", "game", min_match=2)
     plan_mm = explain_str(eng.search_many_built([mm], k=5))
     results["minmatch_batch_popcount"] = (
@@ -483,6 +507,7 @@ def main() -> None:
     if os.environ.get("JOIE_AUDIT_DUMP"):
         print("\n==== AND plan ====\n", plan)
         print("\n==== keyword-OR plan ====\n", plan_w)
+        print("\n==== forced-pruned keyword-OR plan ====\n", plan_pw)
 
     spark.stop()
     sys.exit(0 if ok else 1)

@@ -29,11 +29,10 @@ def _batched(engine, queries, k=10, **kw):
     return out
 
 
-@pytest.mark.parametrize("mode", ["auto"])
-def test_search_many_matches_single(t1_engine, t1_oracle, mode):
-    got = _batched(t1_engine, BATCH, mode=mode)
+def test_search_many_matches_single(t1_engine, t1_oracle):
+    got = _batched(t1_engine, BATCH)
     for i, q in enumerate(BATCH):
-        assert got[i] == t1_oracle.search(q, k=10), (mode, q)
+        assert got[i] == t1_oracle.search(q, k=10), q
 
 
 def test_search_many_blocks_path_pruned_still_exact(t1_engine, t1_oracle):
@@ -42,12 +41,12 @@ def test_search_many_blocks_path_pruned_still_exact(t1_engine, t1_oracle):
     the oracle's single-query answers."""
     queries = ["the", "roll OR dice", "roll AND dice", "you OR the OR so"]
     for k in (1, 3):
-        # direct_threshold=0 disables the small-index decode-all shortcut
+        # direct_threshold=0 takes the pruned path on this small index,
         # so the probe/θ/survivor phases actually run
         got = _batched(t1_engine, queries, k=k, probe_blocks=1, direct_threshold=0)
         for i, q in enumerate(queries):
             assert got[i] == t1_oracle.search(q, k=k), (k, q)
-        got_direct = _batched(t1_engine, queries, k=k)  # decode-all shortcut
+        got_direct = _batched(t1_engine, queries, k=k)  # postings frame
         assert got_direct == got
 
 
@@ -84,16 +83,10 @@ def test_block_count_derives_from_docs_not_turns(t1_engine):
 
     stats: dict = {}
     t1_engine.search_many(
-        ["the", "roll OR dice"], k=3, mode="blocks", direct_threshold=40,
-        stats_out=stats,
+        ["the", "roll OR dice"], k=3, direct_threshold=40, stats_out=stats,
     ).collect()
     assert stats["path"] == "direct"
     assert stats["total_blocks"] == 7
-
-
-def test_search_many_blocks_mode_rejects_phrases(t1_engine):
-    with pytest.raises(ValueError, match="phrase"):
-        t1_engine.search_many(['"crystal kingdom"'], mode="blocks").collect()
 
 
 def test_search_many_ordering(t1_engine):
@@ -120,8 +113,8 @@ def test_search_many_all_oov_is_empty(t1_engine):
 
 
 def test_wand_doc_filtered_rank_identical(t1_engine, t1_oracle):
-    """where_doc reaches the block-max path (Engine.search auto-routes
-    keyword-OR queries there as a batch of one, doc filter fused)."""
+    """where_doc reaches the keyword-OR single search's candidate frame
+    (the doc filter semi-joins the candidates before scoring)."""
     got = [
         (r["doc_id"], r["turn_idx"], r["score"])
         for r in t1_engine.search(
@@ -200,23 +193,55 @@ def test_turn_idx_range_validated(spark, tmp_path):
         build_index(spark, df, str(tmp_path / "bad"), n_buckets=4)
 
 
-def test_auto_where_filtered_single_uses_blocks(t1_engine, t1_oracle):
-    """VERDICT r3 item 3: a turn-filtered phrase-free single query must
-    (a) stay rank-identical to the oracle and (b) run on the compressed
-    blocks table, not the fat postings scan."""
+def _plan(df) -> str:
+    return df._jdf.queryExecution().explainString(
+        df.sparkSession._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+            "formatted"
+        )
+    )
+
+
+def test_auto_where_filtered_single_uses_postings(t1_engine, t1_oracle):
+    """A turn-filtered phrase-free single query stays rank-identical to
+    the oracle and, below the direct threshold, scores from the postings
+    frame: the compressed blocks table is not read."""
     for q in ["roll OR dice", "roll AND dice", "the"]:
         auto = t1_engine.search(q, k=10, where="role = 'user'")
         got = [(r["doc_id"], r["turn_idx"], r["score"]) for r in auto.collect()]
         assert got == t1_oracle.search(q, k=10, **USER_TURNS), q
-    plan = t1_engine.search(
-        "roll AND dice", k=10, where="role = 'user'"
-    )._jdf.queryExecution().explainString(
-        t1_engine.spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-            "formatted"
-        )
-    )
-    assert "docids" in plan          # compressed blocks columns
-    assert "/postings" not in plan   # postings table untouched
+    plan = _plan(t1_engine.search("roll AND dice", k=10, where="role = 'user'"))
+    assert "/postings" in plan
+    assert "docids" not in plan  # compressed blocks columns
+
+
+def test_forced_pruned_where_filtered_batch_uses_blocks(t1_engine, t1_oracle):
+    """The forced-pruned batch is where the compressed blocks are read:
+    a turn filter stays rank-identical to the oracle there, and the plan
+    decodes blocks (the docids column)."""
+    queries = ["roll OR dice", "roll AND dice", "the"]
+    kw = dict(k=10, where="role = 'user'", direct_threshold=0, probe_blocks=2)
+    got = _batched(t1_engine, queries, **kw)
+    for i, q in enumerate(queries):
+        assert got[i] == t1_oracle.search(q, k=10, **USER_TURNS), q
+    assert "docids" in _plan(t1_engine.search_many(queries, **kw))
+
+
+def test_unpruned_routes_skip_block_decode(t1_engine):
+    """At the default direct threshold no phrase-free search — single,
+    collapsed, batch or collapsed batch — runs the Python block decode
+    (FlatMapGroupsInPandas): every unpruned read scores from the
+    postings frame."""
+    E = t1_engine
+    for df in (
+        E.search("roll OR dice", k=10),
+        E.search("roll AND dice", k=10, where="role = 'user'"),
+        E.search_collapsed("roll OR dice", k=10),
+        E.search_many(["roll OR dice", "roll AND dice", "the"], k=10),
+        E.search_many_collapsed(["roll OR dice", "the"], k=10),
+    ):
+        plan = _plan(df)
+        assert "FlatMapGroupsInPandas" not in plan
+        assert "/postings" in plan
 
 
 def test_search_many_job_count_bounded(t1_engine):
@@ -244,9 +269,9 @@ def test_search_many_job_count_bounded(t1_engine):
 
 
 def test_keyword_or_search_job_count_bounded(t1_engine):
-    """A keyword-OR Engine.search is a batch of one on the block-max
-    executor, so it runs no more jobs than search_many([q]) does —
-    measured 7 on this index (the retired single-query WAND decoder ran
+    """A keyword-OR Engine.search reads the same candidate frame as a
+    batch of one, so it runs no more jobs than search_many([q]) does —
+    bounded at 7 on this index (the retired single-query WAND decoder ran
     10: a ub collect and a probe collect before the final pass)."""
     sc = t1_engine.spark.sparkContext
 

@@ -87,8 +87,8 @@ def test_collapsed_builder_algebra(t1_engine, t1_oracle):
 
 def test_batch_collapsed_bit_identical(t1_engine):
     """search_many_collapsed == per-query search_collapsed, bit for bit,
-    across a mixed batch (flat booleans → blocks path, phrase + near →
-    postings path, min-match popcount) incl. n_matched."""
+    across a mixed batch (flat booleans, phrase + near, min-match
+    popcount — one postings frame) incl. n_matched."""
     from joie_spark.plans.parser import parse_query
 
     queries = [

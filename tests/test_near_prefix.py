@@ -306,29 +306,12 @@ def _algebra_builders(E):
     ]
 
 
-@pytest.mark.parametrize("mode", ["auto"])
-def test_search_many_built_bit_identical(mode, t1_engine):
+def test_search_many_built_bit_identical(t1_engine):
     builders = _algebra_builders(t1_engine)
-    got = _by_qid(t1_engine.search_many_built(builders, k=10, mode=mode).collect())
+    got = _by_qid(t1_engine.search_many_built(builders, k=10).collect())
     for i, b in enumerate(builders):
         want = _spark_topk(b.top_k(10))
-        assert got.get(i, []) == want, f"query {i} differs in mode={mode}"
-
-
-def test_search_many_built_blocks_mode(t1_engine):
-    flat = [t1_engine.builder().prefix("ro"), t1_engine.builder().fuzzy("dice", 1)]
-    got = _by_qid(t1_engine.search_many_built(flat, k=10, mode="blocks").collect())
-    for i, b in enumerate(flat):
-        assert got.get(i, []) == _spark_topk(b.top_k(10))
-    with pytest.raises(ValueError, match="blocks"):
-        t1_engine.search_many_built(
-            [t1_engine.builder().near("roll", "dice")], mode="blocks"
-        ).collect()
-    with pytest.raises(ValueError, match="blocks"):
-        t1_engine.search_many_built(
-            [t1_engine.builder().keywords("roll") - t1_engine.builder().keywords("dice")],
-            mode="blocks",
-        ).collect()
+        assert got.get(i, []) == want, f"query {i} differs"
 
 
 def test_search_many_built_forced_pruning_bit_identical(t1_engine):

@@ -83,7 +83,7 @@ _query = st.lists(_clause, min_size=1, max_size=2).map(
 )
 @given(batch=st.lists(_query, min_size=1, max_size=4))
 def test_batch_blockmax_pruned_equals_single_random(batch, t1_engine, t1_oracle):
-    """Forced block-max machinery (no decode-all shortcut, 1-block probe)
+    """Forced block-max machinery (direct_threshold=0, 1-block probe)
     over random boolean batches must stay bit-identical to the oracle's
     single-query answers."""
     rows = t1_engine.search_many(

@@ -68,7 +68,7 @@ def test_search_synonyms_equals_spelled_out_or(t1_engine, t1_oracle):
     a = _topk(t1_engine.search("roll", k=10, synonyms=SYN))
     b = _topk(t1_engine.search("roll OR dice", k=10))
     assert a == b
-    # boolean composition, phrase-free → rides the compressed path
+    # boolean composition, phrase-free
     a = _topk(t1_engine.search("game AND roll", k=10, synonyms=SYN))
     b = _topk(
         t1_engine.search(

@@ -1,7 +1,7 @@
-"""Keyword-OR queries ride the block-max WAND executor (operators/batch.py,
-a batch of one): it must be rank-identical to the exhaustive scorer (and
-therefore to the oracle) on the auto route and on the forced-pruned
-probe/θ route, and θ must actually prune (query, block) pairs."""
+"""Keyword-OR queries on the block-max WAND executor (operators/batch.py,
+a batch of one): they must be rank-identical to the oracle on the auto
+route (the postings frame) and on the forced-pruned probe/θ route, and θ
+must actually prune (query, block) pairs."""
 
 import pytest
 
@@ -19,7 +19,7 @@ def _rows(df):
 
 
 def _forced_pruned(engine, q, k, **kw):
-    # direct_threshold=0 skips the decode-all shortcut, probe_blocks=1
+    # direct_threshold=0 forces pruning at this block count, probe_blocks=1
     # leaves blocks for θ to prune: the block-max WAND path proper
     return engine.search_many(
         [q], k=k, direct_threshold=0, probe_blocks=1, **kw

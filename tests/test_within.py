@@ -127,12 +127,11 @@ def _batch_builders(E):
     ]
 
 
-@pytest.mark.parametrize("mode", ["auto"])
-def test_within_batch_bit_identical(mode, t1_engine):
+def test_within_batch_bit_identical(t1_engine):
     builders = _batch_builders(t1_engine)
-    got = _by_qid(t1_engine.search_many_built(builders, k=10, mode=mode).collect())
+    got = _by_qid(t1_engine.search_many_built(builders, k=10).collect())
     for i, b in enumerate(builders):
-        assert got.get(i, []) == _topk(b.top_k(10)), f"query {i} mode={mode}"
+        assert got.get(i, []) == _topk(b.top_k(10)), f"query {i}"
 
 
 def test_within_batch_forced_pruning_bit_identical(t1_engine):
